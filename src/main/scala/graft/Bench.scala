@@ -3,36 +3,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // scale posture, stated explicitly (all default-on in Spark 4): AQE
-      // re-plans at runtime, splits skewed join partitions, coalesces tiny ones
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warmup so session startup cost is not charged to whichever
-    // query happens to run first; the tiny parquet read initializes the
-    // Hadoop FS + parquet reader stack (otherwise billed to the first query)
-    spark.range(2000000).selectExpr("sum(id * 2)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    // string-expression JIT warmup: UTF8String intrinsics (upper/regexp/
-    // reverse/pad) cost ~2 s of C2 compilation on their first heavy run,
-    // which otherwise lands on whichever string query executes first
-    spark.range(200000)
-      .selectExpr("upper(concat('ab', cast(id AS string))) AS u",
-        "regexp_replace(cast(id AS string), '[02468]', 'x') AS r",
-        "reverse(cast(id AS string)) AS v",
-        "lpad(cast(id AS string), 12, '_') AS p")
-      .write.format("noop").mode("overwrite").save()
-    // optional arg (local dev only): comma-separated name-prefix filter
-    val only: String => Boolean =
-      if (args.nonEmpty) { val ps = args(0).split(","); n => ps.exists(n.startsWith) }
-      else _ => true
+    val spark = Harness.session("graft-bench")
+    Harness.warmup(spark, sfDir)
+    // optional arg: name-prefix filter
+    val only = Harness.only(args.headOption)
     // first-touch accounting (VERDICT r9 wrong-#4): rows whose run paid a
     // one-off memoized training/census job (IVF/PQ/DSIR models, replica-mass
     // estimates, broadcast-gate counts) are named in the artifact, so a
@@ -63,9 +37,7 @@ object Bench {
       val t0 = System.nanoTime()
       val m0 = Memo.misses
       val h0 = Memo.hits
-      // noop sink: materializes every output column (count() would let
-      // Catalyst prune the query down to the rows that survive)
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Harness.noop(fn(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
       if (Memo.misses > m0) firstTouch += name
       if (recordHits && Memo.hits > h0) memoHits(name) = Memo.hits - h0
@@ -93,9 +65,7 @@ object Bench {
     val results = pass1.map { case (name, _) => name -> median(runs(name)) }
     val spread = results.collect { case (name, _) if runs(name).size > 1 =>
       name -> (runs(name).max - runs(name).min) }
-    // explicit ROOT locale: the f-interpolator uses the JVM default locale,
-    // which can render "1,234" and break the JSON line on comma-decimal hosts
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
+    import Harness.fmt
     def line(rs: Seq[(String, Double)], extra: String = ""): String = {
       val qs = rs.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")

@@ -3,10 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.concurrent.{Await, Future, TimeoutException}
-import scala.concurrent.duration._
-import scala.concurrent.ExecutionContext.Implicits.global
-
 /** One sf≈1 lane for the PLANS.md headline queries (VERDICT r6 §3): the
   * per-round 2× gate runs at sf0.1 only, and the scale smoke replicates only
   * documents/embeddings — so a real-data cliff in the relational/stream plane
@@ -18,7 +14,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
   * reuse the scale-smoke's near-dup replication), dimension tables copied
   * as-is — the realistic shape of 10× more business over the same reference
   * data. Each headline query runs under a cancellable wall-clock ceiling
-  * (ScaleSmoke's harness), so a cliff reads as a named breach.
+  * ([[Harness.withCeiling]]), so a cliff reads as a named breach.
   *
   * Output: one JSON line on stdout and in BENCH_sf1.json.
   */
@@ -26,9 +22,9 @@ object BenchSf1 {
 
   private val REP_KEY = 100000000L // per-replica key offset, beyond any sf0.1 key
 
-  /** The PLANS.md headline queries — ONE definition ([[PlanDump.headline]]),
+  /** The PLANS.md headline queries — ONE definition ([[Inspect.headline]]),
     * so the plan artifact and the sf1 lane can never drift apart. */
-  val headlineKeys: Seq[String] = PlanDump.headline
+  val headlineKeys: Seq[String] = Inspect.headline
 
   /** Builds (once) the replicated lane corpus under `outRoot-<baseTag>` and
     * returns that directory. The base tag is in the PATH, not the marker
@@ -75,48 +71,19 @@ object BenchSf1 {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val baseDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val ceiling = sys.env.getOrElse("SPARK_GRAFT_CEILING_SEC", "120").toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SF1_OUT", "BENCH_sf1.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench-sf1")
     // same JVM/codegen/scan-stack warmup as Bench (r13): without it the
     // first rows (q01/q05) absorb C2 compilation + parquet-reader init and
     // read 2-4x over their steady-state, which poisons round-over-round
     // comparisons of exactly those headline rows
-    spark.range(2000000).selectExpr("sum(id * 2)").collect()
-    spark.read.parquet(s"$baseDir/region.parquet").count()
-    spark.range(200000)
-      .selectExpr("upper(concat('ab', cast(id AS string))) AS u",
-        "regexp_replace(cast(id AS string), '[02468]', 'x') AS r",
-        "reverse(cast(id AS string)) AS v",
-        "lpad(cast(id AS string), 12, '_') AS p")
-      .write.format("noop").mode("overwrite").save()
+    Harness.warmup(spark, baseDir)
 
     val dir = buildSf1(spark, baseDir, s"/tmp/graft-sf1/x$mult", mult)
 
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
-    def oneRun(name: String, fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      val fut = Future {
-        spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-      }
-      try { Await.result(fut, ceiling.seconds); Right((System.nanoTime() - t0) / 1e9) }
-      catch {
-        case _: TimeoutException =>
-          spark.sparkContext.cancelJobGroup(name)
-          Left("ceiling")
-        case e: Throwable => Left(e.getClass.getSimpleName)
-      }
-    }
+    import Harness.fmt
+    def oneRun(name: String, fn: (SparkSession, String) => DataFrame): Either[String, Double] =
+      Harness.withCeiling(spark, name, ceiling)(Harness.noop(fn(spark, dir)))
     // per-row MEDIAN-of-3 above the probe floor (r13): the lane was the last
     // single-run timing artifact in the repo, and this VM's documented noise
     // put s01 at 3.6/35.8/49.1 s across three same-code runs (solo re-probe:

@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** Dev-only twin of [[Verify]] for the routing plane's COLLAPSED branches
-  * and the high-mass regime of its estimators — the two halves of each
-  * routed front door that the shipped low-mass corpora never reach through
-  * the registered oracles (their gates correctly pick the raw branch at
-  * every sf the driver verifies). Two modes:
+/** Dev-only twin of [[Verify]] (through its [[Verify.dump]]) for the
+  * routing plane's COLLAPSED branches and the high-mass regime of its
+  * estimators — the two halves of each routed front door that the shipped
+  * low-mass corpora never reach through the registered oracles (their
+  * gates correctly pick the raw branch at every shipped scale factor).
+  * Two modes:
   *
   *   sbt -batch "runMain graft.RoutedDump /root/testdata/sf0.01 /tmp/routed"
   *   python3 scripts/check.py /root/testdata/sf0.01 /tmp/routed
@@ -36,14 +37,7 @@ object RoutedDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val repMult = if (args.length > 2) args(2).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-routed-dump")
     new java.io.File(outDir).mkdirs()
     import operators.Routing
 
@@ -103,24 +97,8 @@ object RoutedDump {
         ("s29_routed_bitext", () => Routing.s29RoutedBitext(t, 0), Routing.s29Oracle(0)),
         ("d36_routed_substring", () => Routing.d36RoutedSubstring(t, 0L), Routing.d36Oracle(0L)),
       )
-    doors.foreach { case (name, fn, _) =>
-      try fn().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = doors.map { case (k, _, sql) => s"${q(k)}: ${q(sql)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.dump(outDir, doors.map { case (name, fn, _) => name -> fn },
+      doors.map { case (name, _, sql) => name -> sql })
     spark.stop()
   }
 }

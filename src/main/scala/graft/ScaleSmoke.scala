@@ -3,10 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.concurrent.{Await, Future, TimeoutException}
-import scala.concurrent.duration._
-import scala.concurrent.ExecutionContext.Implicits.global
-
 /** Scale-cliff smoke for the quadratic-risk query families (VERDICT r5 §7).
   *
   * No sf1 corpus ships with the testdata, so this main synthesizes one at
@@ -212,28 +208,16 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(20)
     val baseDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    // optional 3rd arg (local dev only): comma-separated name-prefix filter —
-    // shipped artifacts always come from unfiltered runs
-    val only: String => Boolean =
-      if (args.length > 2) { val ps = args(2).split(","); n => ps.exists(n.startsWith) }
-      else _ => true
+    // optional 3rd arg: name-prefix filter
+    val only = Harness.only(args.lift(2))
     val ceiling = sys.env.getOrElse("SPARK_GRAFT_CEILING_SEC", "120").toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SMOKE_OUT", "SCALESMOKE.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-scale-smoke")
 
     val dir = s"/tmp/graft-scale/x$mult"
     val (nDocs, nVecs) = buildScaled(spark, baseDir, dir, mult)
 
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
+    import Harness.fmt
     // first-touch decomposition (VERDICT r12 next-3): under the row-per-JVM
     // protocol every row is process-cold, so a model-training door (IVF/PQ/
     // DSIR training, replica-mass census) absorbs its one-off memoized cost
@@ -243,21 +227,8 @@ object ScaleSmoke {
     // the search-only figure growth predictions should be judged on.
     val firstTouch = scala.collection.mutable.ListBuffer.empty[String]
     val warmSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def timedRun(name: String, fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      val fut = Future {
-        // job group is thread-local: set it on the thread that submits jobs
-        spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-      }
-      try { Await.result(fut, ceiling.seconds); Right((System.nanoTime() - t0) / 1e9) }
-      catch {
-        case _: TimeoutException =>
-          spark.sparkContext.cancelJobGroup(name)
-          Left("ceiling")
-        case e: Throwable => Left(e.getClass.getSimpleName)
-      }
-    }
+    def timedRun(name: String, fn: (SparkSession, String) => DataFrame): Either[String, Double] =
+      Harness.withCeiling(spark, name, ceiling)(Harness.noop(fn(spark, dir)))
     val results = productionKeys.filter(only).map { name =>
       val fn = SparkEntry.queries(name)
       val m0 = Memo.misses

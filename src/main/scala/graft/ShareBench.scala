@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness.noop
 import graft.sharing.{QueryJob, WorkSharingExecutor}
 
 /** Local replica of the reference's ch.5 evaluation (BASELINE.md): batches of
@@ -91,23 +92,19 @@ object ShareBench {
       .agg(count(lit(1)).as("n"))
 
   private def jobs(build: String => SparkSession => DataFrame, win: Int): Seq[QueryJob[Unit]] =
-    words.take(win).map(w => QueryJob[Unit](s"j_$w", build(w),
-      df => df.write.format("noop").mode("overwrite").save()))
+    words.take(win).map(w => QueryJob[Unit](s"j_$w", build(w), noop))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val rows = sys.env.getOrElse("SPARK_GRAFT_SYNTH_ROWS", "3000000").toLong
-    val spark = Engine.session(master = Some(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-share-bench")
     spark.range(2000000).selectExpr("sum(id * 2)").collect()
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     val workloads: Seq[(String, String => SparkSession => DataFrame)] =
-      Seq("wordcount" -> (w => wordCount(w, rows, cpus.toInt)),
-        "grepcount" -> (w => grepCount(w, rows, cpus.toInt)))
+      Seq("wordcount" -> (w => wordCount(w, rows, Harness.cpus)),
+        "grepcount" -> (w => grepCount(w, rows, Harness.cpus)))
 
     // warm-up: one batch of each workload through the executor path (JIT for
     // the generator, the noop sink, and the cache write path)
@@ -121,8 +118,7 @@ object ShareBench {
       (1 to 3).map { _ => spark.catalog.clearCache(); time(f) }.min
 
     // optional arg filters which workload rows run (local dev: "dedup")
-    val only: String => Boolean =
-      if (args.nonEmpty) _.startsWith(args(0)) else _ => true
+    val only = Harness.only(args.headOption)
 
     val lines = for {
       (wname, build) <- workloads if only(wname)
@@ -145,7 +141,6 @@ object ShareBench {
     if (only("dedup_family")) {
       import graft.operators.Dedup
       val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-      def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
       def dedupJobs: Seq[QueryJob[Unit]] = Seq[(String, SparkSession => DataFrame)](
         "d07" -> (s => Dedup.d07DedupClusters(T(s, sfDir))),
         "d12" -> (s => Dedup.d12ClusterKeeper(T(s, sfDir))),
@@ -178,7 +173,6 @@ object ShareBench {
       import graft.operators.{Dedup, Pipeline, Similarity}
       val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val simDir = scaledCorpus(spark, base)
-      def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
       // s06 is the audit query that re-derives BOTH siblings' outputs (its
       // truth arm is s01 verbatim, its candidate arm is s02 verbatim) — the
       // reference's purest sharing scenario: concurrent statements whose
@@ -243,7 +237,6 @@ object ShareBench {
       import graft.operators.TextAnalysis
       val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val txtDir = scaledCorpus(spark, base)
-      def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
       def txtJobs: Seq[QueryJob[Unit]] = Seq[(String, SparkSession => DataFrame)](
         "t08" -> (s => TextAnalysis.t08ZipfProfile(T(s, txtDir))),
         "t11" -> (s => TextAnalysis.t11TfidfTopTerms(T(s, txtDir))),
@@ -274,7 +267,6 @@ object ShareBench {
     if (only("multimodal_family")) {
       import graft.operators.Multimodal
       val mmDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-      def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
       def mmJobs: Seq[QueryJob[Unit]] = Seq[(String, SparkSession => DataFrame)](
         "m01" -> (s => Multimodal.m01MediaFeatures(T(s, mmDir))),
         "m02" -> (s => Multimodal.m02MediaRollup(T(s, mmDir))),
@@ -301,7 +293,6 @@ object ShareBench {
       import graft.operators.Pipeline
       val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val curDir = scaledCorpus(spark, base)
-      def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
       def curJobs: Seq[QueryJob[Unit]] = Seq[(String, SparkSession => DataFrame)](
         "p04" -> (s => Pipeline.p04Contamination(T(s, curDir))),
         "p11" -> (s => Pipeline.p11QualityCascade(T(s, curDir))),
@@ -330,7 +321,6 @@ object ShareBench {
       import graft.operators.{Dedup, Graph}
       val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val gDir = scaledCorpus(spark, base)
-      def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
       def gJobs: Seq[QueryJob[Unit]] = Seq[(String, SparkSession => DataFrame)](
         "g01" -> (s => Graph.g01PageRank(T(s, gDir))),
         "g02" -> (s => Graph.g02Triangles(T(s, gDir))),
@@ -362,7 +352,6 @@ object ShareBench {
       import graft.operators.{Dedup, Routing}
       val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val oDir = scaledCorpus(spark, base)
-      def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
       val oJobs: Seq[(String, () => DataFrame)] = Seq(
         "d29" -> (() => Dedup.d29FrontCollapsePairs(T(spark, oDir))),
         "d32" -> (() => Routing.d32RoutedCc(T(spark, oDir))),
@@ -392,7 +381,6 @@ object ShareBench {
       import graft.streaming.StreamOps
       val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val iDir = scaledCorpus(spark, base)
-      def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
       def iJobs: Seq[QueryJob[Unit]] = Seq[(String, SparkSession => DataFrame)](
         "s04" -> (s => Sim.s04IvfAnn(T(s, iDir))),
         "w15" -> (s => StreamOps.w15StreamAnn(T(s, iDir))),

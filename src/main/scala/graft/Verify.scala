@@ -1,46 +1,37 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg (local dev only): comma-separated name-prefix filter
-    val only: String => Boolean =
-      if (args.length > 2) { val ps = args(2).split(","); n => ps.exists(n.startsWith) }
-      else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional 3rd arg: name-prefix filter
+    val only = Harness.only(args.lift(2))
+    val spark = Harness.session("graft-verify")
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1).filter(kv => only(kv._1))
+      .map { case (name, fn) => name -> (() => fn(spark, sfDir)) }
+    dump(outDir, queries, SparkEntry.oracleSql.toSeq)
+    spark.stop()
+  }
+
+  /** Writes each query's result to `<outDir>/<name>` as one parquet file,
+    * then every oracle to `<outDir>/oracle_sql.json` — the layout
+    * the DuckDB compare (`scripts/check.py`) reads. A failing query is
+    * logged and skipped, so one bad row costs one compare, not the dump. */
+  def dump(outDir: String, queries: Seq[(String, () => DataFrame)],
+           oracles: Seq[(String, String)]): Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1).filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    queries.foreach { case (name, df) =>
+      try df().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(oracles))
   }
+
+  def oracleJson(oracles: Seq[(String, String)]): String =
+    oracles.map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
 }

@@ -37,10 +37,6 @@ object BroadcastGate {
     * Bounded LRU per ADVICE r8: rebuilds mint fresh keys without limit. */
   private val rowCounts = graft.Memo.lru[String, java.lang.Long](256)
 
-  /** Probe hook: forget memoized gate counts (see
-    * [[graft.operators.Routing.clearMassMemo]]). */
-  private[graft] def clearCountMemo(): Unit = rowCounts.clear()
-
   private def cachedCount(base: DataFrame): Long =
     // plan hash in the key too (via snapshotKey): a frame DERIVED from the
     // same files (a filter, a replication) must not reuse the base table's

@@ -2136,9 +2136,10 @@ object Dedup {
     }
   }
 
-  /** Probe/bench hook: forget memoized band frames. GrowthProbe clears
-    * between stages so cumulative stage timings stay cumulative; the
-    * ShareBench ownership row clears per-job in its "separate" cell. */
+  /** Bench hook: forget memoized band frames. ScaleSmoke clears between
+    * rows so each row prices its door cold, Bench under
+    * SPARK_GRAFT_BENCH_COLD_BANDS, and the ShareBench ownership row clears
+    * per-job in its "separate" cell. */
   private[graft] def clearBandMemo(): Unit = bandFrames.clear()
 
   private[graft] def ownershipCensus(docs: DataFrame): DataFrame = {

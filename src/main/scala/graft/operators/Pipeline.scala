@@ -1318,9 +1318,9 @@ object Pipeline {
     * shrinking survivor set — the collapse-before-pairing posture the 30×
     * probe demanded, as a user-facing operator. */
   /** The funnel's cumulative flag frames, one per stage — the SAME
-    * definitions [[p29CurationFunnel]] aggregates, exposed so GrowthProbe's
-    * p29 mode (VERDICT r13 next-5) can time each cumulative prefix and
-    * attribute level-over-level growth to a stage instead of the whole-row
+    * definitions [[p29CurationFunnel]] aggregates, exposed so each
+    * cumulative prefix can be timed (VERDICT r13 next-5) and
+    * level-over-level growth attributed to a stage instead of the whole-row
     * wall. Order: quality → exact_dedup → near_dedup → decontaminated;
     * each frame carries the keep bits computed so far. */
   private[graft] def p29StageFrames(t: T): Seq[(String, DataFrame)] = {

@@ -54,11 +54,6 @@ object Routing {
   // bounded LRU (ADVICE r8): corpus rebuilds mint fresh snapshot keys forever
   private val massCache = graft.Memo.lru[String, java.lang.Long](256)
 
-  /** Probe hook: forget memoized mass censuses, so GrowthProbe's cumulative
-    * stage prefixes each pay their routing decision cold (stage-diff
-    * attribution stays honest). */
-  private[graft] def clearMassMemo(): Unit = massCache.clear()
-
   private def memo(df: DataFrame, kind: String)(compute: => Long): Long =
     // plan hash in the key too (via snapshotKey): a frame DERIVED from the
     // same files must not reuse the base table's cached mass
@@ -252,11 +247,10 @@ object Routing {
     }
   }
 
-  /** The collapse branch's (kept set, candidate pairs) — split out so
-    * GrowthProbe's `p29near` kernel can time the branch's interior stages
-    * against the SAME definitions the route runs (r14: the 480× p29 stage
-    * probe named near_dedup as the superlinear stage; this decomposition
-    * names the interior piece). */
+  /** The collapse branch's (kept set, candidate pairs) — split out so the
+    * branch's interior stages can be timed against the SAME definitions the
+    * route runs (r14: the 480× p29 stage probe named near_dedup as the
+    * superlinear stage; this decomposition names the interior piece). */
   private[graft] def nearDupCollapseKeptPairs(docs: DataFrame): (DataFrame, DataFrame) = {
     val keepers = Dedup.ownershipKeepers(docs).localCheckpoint()
     // kept is materialized, not left as lineage: it is self-joined by the

@@ -697,7 +697,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("shuffle budgets: headline queries never grow a new exchange") {
-    // measured by graft.ExchangeAudit at sf0.01 — any INCREASE means a
+    // measured by `graft.Inspect plans` at sf0.01 — any INCREASE means a
     // change added a shuffle to a headline path; lower is fine
     val budgets = Map(
       "q01_pricing_summary" -> 2, "q05_region_revenue" -> 2,
@@ -735,9 +735,7 @@ class PlanQualitySpec extends SparkSpec {
       "p29_curation_funnel" -> 17)
     for ((name, budget) <- budgets) {
       val p = plan(name)
-      val shuffles = p.linesIterator.count(_.contains("Exchange hashpartitioning")) +
-        p.linesIterator.count(_.contains("Exchange rangepartitioning")) +
-        p.linesIterator.count(_.contains("Exchange SinglePartition"))
+      val shuffles = graft.Inspect.shuffles(p)
       assert(shuffles <= budget, s"$name grew to $shuffles shuffles (budget $budget):\n$p")
     }
   }

@@ -281,8 +281,6 @@ class QueryGatewaySpec extends SparkSpec {
         f""""adversarial_stmts":$nAdversarial,"audit_warns":$warnsMain,""" +
         f""""rewrite_clients":$nRewriteClients,"audit_rewrites":$nRewrites}"""
       info(line)
-      java.nio.file.Files.write(java.nio.file.Paths.get("GWSOAK.json"),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } finally { gw.close(); win.close(); ex.shutdown(); spark.catalog.clearCache() }
   }
 
