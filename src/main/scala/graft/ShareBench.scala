@@ -10,16 +10,15 @@ import graft.sharing.{QueryJob, WorkSharingExecutor}
   * grep-WordCount jobs over one shared corpus scan, window sizes 2/5/10,
   * comparing separate execution vs scan-sharing-by-caching vs the hybrid
   * auto-merge — on the same `WorkSharingExecutor` code path (budget 0 turns
-  * caching off; `autoMerge` turns the merge rewrite on), so the deltas
-  * isolate the policy, not the plumbing.
+  * caching off; `autoMerge = false` turns the default merge rewrite off), so
+  * the deltas isolate the policy, not the plumbing.
   *
-  * Two workloads:
+  * Two workloads, both of which share the scan and merge:
   *  - `wordcount`: grep-filter + explode + groupBy token (the reference's
-  *    Fig 5.1 shape) — shares the scan, does not auto-merge (the Generate
-  *    node is outside AutoMerge's Aggregate[-Filter]-Relation pattern);
+  *    Fig 5.1 shape) — the merge tokenizes the corpus once per window;
   *  - `grepcount`: grep-filter + scalar aggregate (Fig 5.2's MRShare shape) —
-  *    both shares and merges, so the merge column shows what the reference's
-  *    regressing MRShare rewrite looks like without per-tuple tagging.
+  *    the merge column shows what the reference's regressing MRShare rewrite
+  *    looks like without per-tuple tagging.
   *
   * Prints one JSON line per (workload, window): separate/cached/merged secs.
   * Not part of the driver bench contract — evidence for the BASELINE
@@ -108,7 +107,8 @@ object ShareBench {
 
     // warm-up: one batch of each workload through the executor path (JIT for
     // the generator, the noop sink, and the cache write path)
-    new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(jobs(workloads.head._2, 2))
+    new WorkSharingExecutor(spark, budgetBytes = 0L, autoMerge = false)
+      .runBatch(jobs(workloads.head._2, 2))
     new WorkSharingExecutor(spark).runBatch(jobs(workloads.last._2, 2))
     spark.catalog.clearCache()
 
@@ -124,9 +124,10 @@ object ShareBench {
       (wname, build) <- workloads if only(wname)
       win <- Seq(2, 5, 10)
     } yield {
-      val sep = best(new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(jobs(build, win)))
-      val cachedT = best(new WorkSharingExecutor(spark).runBatch(jobs(build, win)))
-      val mergedT = best(new WorkSharingExecutor(spark, autoMerge = true).runBatch(jobs(build, win)))
+      val sep = best(new WorkSharingExecutor(spark, budgetBytes = 0L, autoMerge = false)
+        .runBatch(jobs(build, win)))
+      val cachedT = best(new WorkSharingExecutor(spark, autoMerge = false).runBatch(jobs(build, win)))
+      val mergedT = best(new WorkSharingExecutor(spark).runBatch(jobs(build, win)))
       spark.catalog.clearCache()
       s"""{"workload":"$wname","window":$win,"separate":$sep,"cached":$cachedT,"merged":$mergedT}"""
     }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Cost-gated routing between raw pair operators and their collapse-first
-  * gears — the dedup-plane analog of `MergedExecution.runCostGated` and of
-  * the reference's cost-model dispatch (reference:
+  * gears — the dedup-plane analog of the reference's cost-model dispatch
+  * (MRShare's merge-or-not DP, `graft.sharing.MRSharePolicy`; reference:
   * sparksql-server/src/main/scala/optimizer/OptimizationExecutor.scala:36-76,
   * src/main/scala/costmodel/udcm/MRShareCM.scala:42-67 — the reference's
   * identity is choosing a rewrite by a cost estimate; this applies the same

@@ -11,9 +11,9 @@ import scala.collection.mutable
   * MRShare, Nykiel et al., VLDB 2010). The reference ran this policy against
   * serialized RDD DAGs and its thesis measured the *merge rewrite* regressing
   * on Spark (per-tuple tag GC — report.pdf ch.5); the policy itself is sound,
-  * and [[MergedExecution]]'s FILTER-aggregate meta-plan removed the overhead
-  * that caused the regression — so here the DP becomes the cost gate deciding
-  * when that meta-plan fires.
+  * and [[AutoMerge]]'s FILTER-aggregate meta-plan removed the overhead that
+  * caused the regression. The DP is kept as the candidate cost gate for
+  * deciding when that meta-plan fires; the executor does not consult it yet.
   *
   * Model recap: jobs sorted by sorting passes `p`; merging jobs [t..u] saves
   * each job its own scan (+f per job) but every member pays the group leader's

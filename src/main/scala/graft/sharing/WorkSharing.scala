@@ -4,6 +4,8 @@ import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
+import scala.util.Try
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -39,8 +41,9 @@ import org.apache.spark.storage.StorageLevel
   * parquet read for an in-memory full-width copy — worth it only when >= 2
   * jobs in the window hit the same relation AND it fits the budget. The
   * MRShare-style merged meta-job was measured a *regression* on Spark by the
-  * reference's own thesis (report.pdf ch.5: GC from per-tuple tagging), so the
-  * merge rewrite is intentionally not the default policy here.
+  * reference's own thesis (report.pdf ch.5), from per-tuple tagging and every
+  * job re-reading the merged result; [[AutoMerge]] does neither (FILTER
+  * aggregates, one collect, a driver-side split), so merging is the default.
   */
 /** Scheduling metadata a client attaches to a job — the reference's
   * DAGMetadata descriptor keys (its README's --metadata flags); `priority`
@@ -330,16 +333,18 @@ final class SharePolicy(budgetBytes: Long) {
 
 /** Batched work-sharing executor over one shared SparkSession.
   *
-  * With `autoMerge` on, the window first runs [[AutoMerge]]: compatible
-  * aggregate jobs collapse into one FILTER-aggregate meta-plan (one scan,
-  * one shuffle); everything else executes unmerged but still shares cached
-  * scans — the two rewrites composing is the reference's hybrid slot
-  * (§2.1 #19, a stub there). */
+  * With `autoMerge` on (the default), the window first runs [[AutoMerge]]:
+  * aggregate jobs that differ only in the filter over a shared scan collapse
+  * into one FILTER-aggregate meta-plan, collected once within `budgetBytes`
+  * and split per member on the driver; everything else executes unmerged but
+  * still shares cached scans — the two rewrites composing is the reference's
+  * hybrid slot (§2.1 #19, a stub there). A group whose meta-result overflows
+  * the budget, or whose meta-plan fails, runs its members unmerged. */
 final class WorkSharingExecutor(
     spark: SparkSession,
     budgetBytes: Long = 2L * 1024 * 1024 * 1024,
     maxConcurrency: Int = 8,
-    autoMerge: Boolean = false,
+    autoMerge: Boolean = true,
     subplanSharing: Boolean = false) {
 
   private val policy = new SharePolicy(budgetBytes)
@@ -427,7 +432,7 @@ final class WorkSharingExecutor(
     val byName = jobs.map(j => j.name -> j).toMap
     val (mergeGroups, unmergedNames) =
       if (autoMerge) AutoMerge.detect(built)
-      else (Seq.empty[Seq[(String, AutoMerge.Shape)]], built.map(_._1))
+      else (Seq.empty[Seq[AutoMerge.Member]], built.map(_._1))
     // automatic subplan sharing (opt-in): canonically-equal Join/Aggregate/
     // Window subtrees across >= 2 built plans are cached once; Catalyst's
     // CacheManager substitutes them into every sibling at first execution.
@@ -473,31 +478,32 @@ final class WorkSharingExecutor(
     // happens lazily at first execution, and a rebuild would make an
     // eager-build job (checkpointing operators) pay its build twice.
     val builtByName = built.toMap
-    val singleFutures = unmergedNames.map(byName).map { j =>
-      j.name -> Future {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", j.meta.pool)
-        try j.action(builtByName(j.name))
-        finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-      }
+    def inPool[T](pool: String)(body: => T): T = {
+      spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
+      try body finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
     }
-    // each merge group = one meta-job: materialize once, split per member
-    val groupFutures = mergeGroups.map { group =>
-      Future {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-          group.map(g => byName(g._1).meta).maxBy(_.priority).pool)
-        val merged = AutoMerge.mergedPlan(spark, group)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try group.map { case (n, sh) =>
-          n -> byName(n).action(AutoMerge.split(merged, n, sh))
-        }.toMap
-        finally {
-          merged.unpersist(blocking = false)
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
+    val singleFutures = unmergedNames.map(byName).map { j =>
+      j.name -> Future(inPool(j.meta.pool)(j.action(builtByName(j.name))))
+    }
+    // each merge group = one meta-job collected once; its members' actions
+    // then run concurrently on their driver-side splits, or unmerged when
+    // the meta-result overflowed the budget or the meta-plan failed
+    val memberFutures = mergeGroups.flatMap { group =>
+      val pool = group.map(m => byName(m.name).meta).maxBy(_.priority).pool
+      def frame(p: LogicalPlan) = org.apache.spark.sql.GraftSqlShim.ofRows(spark, p)
+      val meta = Future(inPool(pool)(
+        AutoMerge.collectWithin(frame(AutoMerge.metaPlan(group)), budgetBytes)))
+        .recover { case NonFatal(_) => None }
+      group.indices.map { i =>
+        val j = byName(group(i).name)
+        j.name -> meta.map { rows =>
+          val df = rows.flatMap(r => Try(frame(AutoMerge.split(r, group, i))).toOption)
+            .getOrElse(builtByName(j.name))
+          inPool(j.meta.pool)(j.action(df))
         }
       }
     }
-    singleFutures.map { case (n, f) => n -> Await.result(f, 30.minutes) }.toMap ++
-      groupFutures.flatMap(f => Await.result(f, 30.minutes))
+    (singleFutures ++ memberFutures).map { case (n, f) => n -> Await.result(f, 30.minutes) }.toMap
   }
 
   /** LRU eviction — the reference unpersisted *everything* between windows

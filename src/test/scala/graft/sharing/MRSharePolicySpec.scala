@@ -76,6 +76,18 @@ class MRSharePolicySpec extends AnyFunSuite {
     assert(singles.flatten.map(_.name) == Seq("heavy"))
   }
 
+  test("jobOf ratios: shallow job joins the deep leader") {
+    // map-output ratios 0.005 -> p=1 and 10.0 -> p=3: the cheap shallow job
+    // joins the deep leader (it pays only 2*0.005*dp), while the anchored
+    // first group's delta=1 surcharge leaves qty_returned isolated
+    val groups = plan(Seq(jobOf("qty_returned", 0.005), jobOf("qty_cheap", 10.0),
+      jobOf("qty_taxed", 0.005)))
+    val (merged, singles) = groups.partition(_.size > 1)
+    assert(merged.size == 1 &&
+      merged.head.map(_.name).toSet == Set("qty_taxed", "qty_cheap"), groups)
+    assert(singles.flatten.map(_.name) == Seq("qty_returned"), groups)
+  }
+
   test("every input job lands in exactly one output group") {
     val jobs = (0 until 9).map(k => jobOf(s"j$k", 0.02 * (k + 1) * (if (k % 2 == 0) 1 else 40)))
     val out = plan(jobs).flatten.map(_.name)

@@ -295,6 +295,60 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally { ex.shutdown(); spark.catalog.clearCache() }
   }
 
+  test("served shared_scan mix: merged answers == isolated, <= 8 jobs, budget fallback") {
+    spark.read.format("graft.sources.SynthSource").option("rows", "4000").load()
+      .createOrReplaceTempView("ws_synth")
+    def grepCount(w: String) = s"SELECT count(*) AS n FROM ws_synth WHERE text LIKE '%$w%'"
+    def wordCount(w: String, having: String = "") =
+      "SELECT token, count(*) AS n FROM (SELECT explode(split(text, ' ')) AS token " +
+        s"FROM ws_synth WHERE text LIKE '%$w%') t GROUP BY token $having ORDER BY token"
+    val mix = Seq("gc_key" -> grepCount("key"), "gc_scan" -> grepCount("scan"),
+      "wc_hash" -> wordCount("hash"), "wc_sort" -> wordCount("sort"))
+    val having = "wc_having" -> wordCount("merge", "HAVING count(*) > 40")
+    // ORDER BY answers compare as ordered lists
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+    val isolated = (mix :+ having).map { case (n, q) => n -> rows(spark.sql(q)) }.toMap
+    def window(stmts: Seq[(String, String)], ex: WorkSharingExecutor): Unit = {
+      val out = ex.runBatch(stmts.map { case (n, q) => QueryJob[Seq[String]](n, _.sql(q), rows) })
+      stmts.foreach { case (n, _) => assert(out(n) == isolated(n), s"job $n") }
+    }
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.incrementAndGet()
+    }
+    def drained(): Unit = {
+      val deadline = System.nanoTime() + 10.seconds.toNanos
+      var last = -1
+      while ((started.get != ended.get || started.get != last) && System.nanoTime() < deadline) {
+        last = started.get
+        Thread.sleep(200)
+      }
+    }
+    val (groups, unmerged) = AutoMerge.detect(
+      (mix :+ having).map { case (n, q) => n -> spark.sql(q) })
+    assert(groups.map(_.map(_.name)) == Seq(Seq("gc_key", "gc_scan"), Seq("wc_hash", "wc_sort")))
+    assert(unmerged == Seq("wc_having"))
+    val ex = new WorkSharingExecutor(spark)
+    try {
+      window(mix :+ having, ex) // cold: caches the synth scan
+      drained()
+      spark.sparkContext.addSparkListener(listener)
+      try { window(mix, ex); drained() }
+      finally spark.sparkContext.removeSparkListener(listener)
+      assert(started.get <= 8, s"${started.get} jobs for a warm window")
+    } finally { ex.shutdown(); spark.catalog.clearCache() }
+    // a meta-result over the budget runs its members unmerged
+    val wc = groups(1)
+    assert(AutoMerge.collectWithin(org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      AutoMerge.metaPlan(wc)), 64L).isEmpty)
+    val tiny = new WorkSharingExecutor(spark, budgetBytes = 64L)
+    try window(mix, tiny) finally tiny.shutdown()
+  }
+
   test("zero budget -> no caching, results still correct") {
     val isolated = jobs.map(j => j.name -> j.action(j.build(spark))).toMap
     val ex = new WorkSharingExecutor(spark, budgetBytes = 0L)
