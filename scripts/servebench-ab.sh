@@ -4,8 +4,8 @@
 #
 #   scripts/servebench-ab.sh <parent-rev> <workload> <seed> <pairs>
 #
-# The parent is checked out with `git worktree` in a temporary directory
-# under ${TMPDIR:-/tmp} and removed on exit. Each pair runs
+# The parent is cloned (`git clone`) into a temporary directory under
+# ${TMPDIR:-/tmp} and removed on exit. Each pair runs
 # `servebench/run.py` once on each side for BENCHMARK.json's run_seconds,
 # after one unrecorded warm-up run per side; pair 1 runs the parent first
 # and the order flips every pair. Each run's
@@ -13,6 +13,9 @@
 # For every end-to-end metric of BENCHMARK.json the summary gives each side's
 # median and quartiles, the change's wins over the parent (ties count for
 # neither) and the median difference against the parent's quartile spread.
+# Each run's `correct` and `failed` values are printed too, and the script
+# exits 1 if any run on either side failed a statement or answered one
+# wrongly, so a median cannot hide a wrong answer.
 # Nothing under servebench/ is written.
 set -euo pipefail
 if [ $# -ne 4 ]; then
@@ -24,9 +27,9 @@ ROOT="$(git rev-parse --show-toplevel)"
 SECONDS_RUN="$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' "$ROOT/BENCHMARK.json")"
 WORK="$(mktemp -d "${TMPDIR:-/tmp}/servebench-ab.XXXXXX")"
 PARENT="$WORK/parent"
-cleanup() { git -C "$ROOT" worktree remove --force "$PARENT" 2>/dev/null || true; }
-trap cleanup EXIT
-git -C "$ROOT" worktree add --detach "$PARENT" "$REV" >&2
+trap 'rm -rf "$PARENT"' EXIT
+git clone --quiet "$ROOT" "$PARENT" >&2
+git -C "$PARENT" checkout --quiet --detach "$(git -C "$ROOT" rev-parse "$REV^{commit}")" >&2
 # one unrecorded short run per side builds it and makes its corpus and
 # class-data archive, which a build's first run alone pays for
 for d in "$PARENT" "$ROOT"; do
@@ -50,6 +53,7 @@ for p in $(seq 1 "$PAIRS"); do
   fi
 done
 
+echo "runs: $WORK/runs.jsonl" >&2
 python3 - "$ROOT/BENCHMARK.json" "$WORK/runs.jsonl" "$WORKLOAD" "$SEED" <<'EOF'
 import json, statistics, sys
 bench = json.load(open(sys.argv[1]))
@@ -60,6 +64,10 @@ def quartiles(xs):
 pairs = sorted({r["pair"] for r in runs})
 side = lambda s, p: next(r for r in runs if r["side"] == s and r["pair"] == p)
 print(f"workload={sys.argv[3]} seed={sys.argv[4]} pairs={len(pairs)}")
+for p in pairs:
+    print(f"pair {p}: " + "  ".join(
+        f"{s} correct={json.dumps(side(s, p)['correct'])} failed={side(s, p)['failed']}"
+        for s in ("parent", "change")))
 print(f"{'metric':18} {'parent q1/med/q3':>30} {'change q1/med/q3':>30} {'wins':>6} {'diff':>10} {'parent iqr':>10}")
 for m in bench["end_to_end"]:
     name, higher = m["name"], m["better"] == "higher"
@@ -70,5 +78,9 @@ for m in bench["end_to_end"]:
     fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
     print(f"{name:18} {fmt(pq):>30} {fmt(cq):>30} {wins:>3}/{len(pairs):<2} "
           f"{cq[1] - pq[1]:>+10.4g} {pq[2] - pq[0]:>10.4g}")
+bad = [r for r in runs if r["failed"] or not r["correct"]]
+for r in bad:
+    print(f"WRONG: {r['side']} pair {r['pair']} correct={json.dumps(r['correct'])} "
+          f"failed={r['failed']}")
+sys.exit(1 if bad else 0)
 EOF
-echo "runs: $WORK/runs.jsonl" >&2

@@ -108,8 +108,8 @@ object ShareBench {
     // warm-up: one batch of each workload through the executor path (JIT for
     // the generator, the noop sink, and the cache write path)
     new WorkSharingExecutor(spark, budgetBytes = 0L, autoMerge = false)
-      .runBatch(jobs(workloads.head._2, 2))
-    new WorkSharingExecutor(spark).runBatch(jobs(workloads.last._2, 2))
+      .runBatch(jobs(workloads.head._2, 2)).values.foreach(_.get)
+    new WorkSharingExecutor(spark).runBatch(jobs(workloads.last._2, 2)).values.foreach(_.get)
     spark.catalog.clearCache()
 
     // min of 3 reps per cell: single-shot timings are dominated by GC from
@@ -125,9 +125,11 @@ object ShareBench {
       win <- Seq(2, 5, 10)
     } yield {
       val sep = best(new WorkSharingExecutor(spark, budgetBytes = 0L, autoMerge = false)
-        .runBatch(jobs(build, win)))
-      val cachedT = best(new WorkSharingExecutor(spark, autoMerge = false).runBatch(jobs(build, win)))
-      val mergedT = best(new WorkSharingExecutor(spark).runBatch(jobs(build, win)))
+        .runBatch(jobs(build, win)).values.foreach(_.get))
+      val cachedT = best(new WorkSharingExecutor(spark, autoMerge = false)
+        .runBatch(jobs(build, win)).values.foreach(_.get))
+      val mergedT = best(new WorkSharingExecutor(spark)
+        .runBatch(jobs(build, win)).values.foreach(_.get))
       spark.catalog.clearCache()
       s"""{"workload":"$wname","window":$win,"separate":$sep,"cached":$cachedT,"merged":$mergedT}"""
     }
@@ -155,10 +157,11 @@ object ShareBench {
       ).map { case (n, b) => QueryJob[Unit](n, b, noop) }
       val frag = Seq("lsh_pairs" ->
         ((s: SparkSession) => Dedup.d04MinhashLshPairs(T(s, sfDir))))
-      val sepD = best(new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(dedupJobs))
+      val sepD = best(new WorkSharingExecutor(spark, budgetBytes = 0L)
+        .runBatch(dedupJobs).values.foreach(_.get))
       val fragD = best {
         val ex = new WorkSharingExecutor(spark)
-        try ex.runBatch(dedupJobs, frag) finally ex.shutdown()
+        try ex.runBatch(dedupJobs, frag).values.foreach(_.get) finally ex.shutdown()
       }
       lines2 += s"""{"workload":"dedup_family","window":5,"separate":$sepD,"fragment_shared":$fragD}"""
     }
@@ -223,9 +226,9 @@ object ShareBench {
       // reference benched on a contended 17-node YARN queue).
       val (sepS, fragS) = pairedMedian(spark)(
         new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(simJobs),
+          maxConcurrency = 1).runBatch(simJobs).values.foreach(_.get),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(simJobs, simFrags) finally ex.shutdown() })
+          try ex.runBatch(simJobs, simFrags).values.foreach(_.get) finally ex.shutdown() })
       lines2 += s"""{"workload":"similarity_family","window":8,"separate":$sepS,"fragment_shared":$fragS}"""
     }
     // text family: five analysis queries that all contain the
@@ -250,9 +253,9 @@ object ShareBench {
         "doc_word_counts" -> (s => TextAnalysis.docWordCounts(T(s, txtDir))))
       val (sepT, fragT) = pairedMedian(spark)(
         new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(txtJobs),
+          maxConcurrency = 1).runBatch(txtJobs).values.foreach(_.get),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(txtJobs, txtFrags) finally ex.shutdown() })
+          try ex.runBatch(txtJobs, txtFrags).values.foreach(_.get) finally ex.shutdown() })
       lines2 += s"""{"workload":"text_family","window":5,"separate":$sepT,"fragment_shared":$fragT}"""
     }
     // multimodal family: the decode-once-analyze-many scenario. m01 (per-
@@ -277,9 +280,9 @@ object ShareBench {
         "media_features" -> (s => Multimodal.mediaFeatures(T(s, mmDir))))
       val (sepM, fragM) = pairedMedian(spark)(
         new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(mmJobs),
+          maxConcurrency = 1).runBatch(mmJobs).values.foreach(_.get),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(mmJobs, mmFrags) finally ex.shutdown() })
+          try ex.runBatch(mmJobs, mmFrags).values.foreach(_.get) finally ex.shutdown() })
       lines2 += s"""{"workload":"multimodal_family","window":3,"separate":$sepM,"fragment_shared":$fragM}"""
     }
     // curation family: the funnel (p29) literally CONTAINS p11's quality
@@ -305,9 +308,9 @@ object ShareBench {
         "five_grams"    -> (s => Pipeline.fiveGrams(T(s, curDir).documents)))
       val (sepC, fragC) = pairedMedian(spark)(
         new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(curJobs),
+          maxConcurrency = 1).runBatch(curJobs).values.foreach(_.get),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(curJobs, curFrags) finally ex.shutdown() })
+          try ex.runBatch(curJobs, curFrags).values.foreach(_.get) finally ex.shutdown() })
       lines2 += s"""{"workload":"curation_family","window":4,"separate":$sepC,"fragment_shared":$fragC}"""
     }
     // graph family: every graph query recomputes the LSH pair graph before
@@ -334,9 +337,9 @@ object ShareBench {
         "lsh_pairs" -> (s => Dedup.d04MinhashLshPairs(T(s, gDir))))
       val (sepG, fragG) = pairedMedian(spark)(
         new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(gJobs),
+          maxConcurrency = 1).runBatch(gJobs).values.foreach(_.get),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(gJobs, gFrags) finally ex.shutdown() })
+          try ex.runBatch(gJobs, gFrags).values.foreach(_.get) finally ex.shutdown() })
       lines2 += s"""{"workload":"graph_family","window":6,"separate":$sepG,"fragment_shared":$fragG}"""
     }
     // ownership family (r12): the cross-door reuse the snapshot-memoized
@@ -393,9 +396,9 @@ object ShareBench {
         "pq_codes"     -> (s => Sim.pqCodesPacked(T(s, iDir))))
       val (sepI, fragI) = pairedMedian(spark)(
         new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(iJobs),
+          maxConcurrency = 1).runBatch(iJobs).values.foreach(_.get),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(iJobs, iFrags) finally ex.shutdown() })
+          try ex.runBatch(iJobs, iFrags).values.foreach(_.get) finally ex.shutdown() })
       lines2 += s"""{"workload":"ivf_family","window":4,"separate":$sepI,"fragment_shared":$fragI}"""
     }
     (lines ++ lines2).foreach(println)

@@ -4,7 +4,8 @@ import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.net.{ServerSocket, Socket}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Thin SQL-over-TCP gateway — the modern shape of the reference's socket
   * front-end.
@@ -25,10 +26,12 @@ import org.apache.spark.sql.SparkSession
   *           ends the session. `warn` lines cannot be confused with rows
   *           (rows are JSON objects and start with '{').
   *
-  * Results stream through `toLocalIterator` — one partition on the driver at
-  * a time, so a result bigger than driver memory still flows; the trailer
-  * carries the count that a pre-counted header would have forced us to
-  * materialize for. `maxRows` bounds what one statement may send.
+  * Unwindowed results stream through `toLocalIterator` — one partition on
+  * the driver at a time, so a result bigger than driver memory still flows;
+  * the trailer carries the count that a pre-counted header would have forced
+  * us to materialize for. `maxRows` bounds what one statement may send.
+  * Windowed results are taken whole, at most `min(maxRows, maxBatchRows)`
+  * rows plus one, by [[QueryGateway.takeJson]].
   *
   * Each connection gets `SparkSession.newSession()` — shared SparkContext and
   * cache (so work-sharing still applies across clients) but isolated temp
@@ -46,11 +49,14 @@ final class QueryGateway(
 
   // The windowed path materializes each statement's rows on the driver (a
   // shared window's results multiplex back through its future), so unlike
-  // the streaming toLocalIterator path it MUST be finitely bounded — an
-  // unbounded SELECT through a batching gateway would otherwise buffer the
-  // whole result set in driver memory. Effective cap = min(maxRows,
-  // maxBatchRows); the "+1" sentinel row preserves the truncated trailer.
+  // the unwindowed path, which streams through toLocalIterator, it MUST be
+  // finitely bounded — an unbounded SELECT through a batching gateway would
+  // otherwise buffer the whole result set in driver memory. Effective cap =
+  // min(maxRows, maxBatchRows); takeJson takes one sentinel row more, which
+  // preserves the truncated trailer, and holds at most that many rows per
+  // partition it reads. executeTake counts rows in an Int.
   private val batchCap: Long = math.min(maxRows, maxBatchRows)
+  private val takeCap: Int = math.min(batchCap, Int.MaxValue - 1L).toInt + 1
 
   private val server = new ServerSocket(port)
   private val connIds = new AtomicLong()
@@ -113,17 +119,9 @@ final class QueryGateway(
             val it: java.util.Iterator[String] = batching match {
               case Some(win) =>
                 stmtNo += 1
-                val cap = batchCap + 1
                 val job = graft.sharing.QueryJob[Seq[String]](
                   s"gw-$id-$stmtNo", s => s.sql(sql),
-                  df => {
-                    val li = df.toJSON.toLocalIterator()
-                    val buf = scala.collection.mutable.ListBuffer.empty[String]
-                    var k = 0L
-                    while (k < cap && li.hasNext) { buf += li.next(); k += 1 }
-                    buf.toSeq
-                  },
-                  effective)
+                  df => QueryGateway.takeJson(df, takeCap), effective)
                 val rows = scala.concurrent.Await.result(
                   win.submit(job), scala.concurrent.duration.Duration(30, "min"))
                 java.util.Arrays.asList(rows: _*).iterator()
@@ -195,6 +193,22 @@ object DeadlineTelemetry {
 }
 
 object QueryGateway {
+  /** At most `cap` rows of `df`, as the JSON lines `df.toJSON` would give,
+    * through the built plan's own `executeTake`. A local relation — a merged
+    * member's split, already on the driver — answers with no Spark job. Any
+    * other plan reads its P partitions in growing batches: at most
+    * ⌈log₄P⌉+1 jobs at the default `spark.sql.limit.scaleUpFactor` of 4
+    * (`toLocalIterator` runs P). Every partition of a batch sends at most
+    * `cap` rows, so the driver holds at most `cap` rows per partition read
+    * in the current batch, never a whole partition. */
+  def takeJson(df: DataFrame, cap: Int): Seq[String] = {
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("graft-take")) {
+      qe.executedPlan.executeTake(cap)
+    }
+    GraftSqlShim.jsonLines(df, rows).toSeq
+  }
+
   private val MetaHint =
     """(?s)^\s*/\*\+\s*graft\(([^)]*)\)\s*\*/\s*(.*)$""".r
 

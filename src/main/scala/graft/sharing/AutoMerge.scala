@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeMap, BoundReference, Coalesce, Expression, Literal, NamedExpression, Or, SubqueryExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LocalRelation, LogicalPlan, Project, Repartition, Sort, SubqueryAlias, View}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LocalRelation, LogicalPlan, Project, Sort, SubqueryAlias, View}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
 
@@ -34,8 +34,9 @@ import org.apache.spark.sql.types.StructType
   *    and split there: member i keeps the rows with presence > 0 (all of
   *    them for an ungrouped aggregate, whose one row exists even when its
   *    filter matches nothing), then its own top is applied with Catalyst's
-  *    projections and ordering. The member's action gets a one-partition
-  *    local DataFrame of exactly those rows.
+  *    projections and ordering. The member's action gets a local
+  *    DataFrame of exactly those rows (a `LocalRelation`, so an action that
+  *    takes or collects it runs no Spark job).
   *
   * Anything else — Limit, HAVING, window functions, DISTINCT or
   * non-deterministic aggregates, subqueries — is not a member and runs
@@ -191,7 +192,7 @@ object AutoMerge {
 
   /** Member `i`'s answer out of the group's collected meta-result: its rows
     * (presence > 0, or the single row of an ungrouped aggregate), then its
-    * own top applied on the driver, as a one-partition local plan. */
+    * own top applied on the driver, as a `LocalRelation` of those rows. */
   def split(meta: Array[InternalRow], group: Seq[Member], i: Int): LogicalPlan = {
     val m = group(i)
     val width = m.agg.aggregateExpressions.size
@@ -208,6 +209,6 @@ object AutoMerge {
       case ((rs, _), s: SubqueryAlias) => (rs, s.output)
       case (_, other) => sys.error(s"not a member top: ${other.nodeName}")
     }
-    Repartition(1, shuffle = false, LocalRelation(out, rows.toSeq))
+    LocalRelation(out, rows.toSeq)
   }
 }

@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
-import scala.util.Try
+import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -357,9 +357,12 @@ final class WorkSharingExecutor(
       maxConcurrency,
       (r: Runnable) => { val t = new Thread(r, "graft-sharing"); t.setDaemon(true); t }))
 
-  /** Run one window of jobs with scan sharing; returns each job's action
-    * result. Semantics are identical to running each job in isolation (the
-    * metamorphic property the spec asserts).
+  /** Run one window of jobs with scan sharing; returns each job's own
+    * outcome: its action result, or the error of its build or action. A
+    * job whose build fails takes no part in merging or scan detection, so
+    * one failing statement fails only itself. Semantics are identical to
+    * running each job in isolation (the metamorphic property the spec
+    * asserts).
     *
     * `sharedFragments` extends sharing from scan granularity to SUBPLAN
     * granularity (the reference's MuxRDD "one RDD, N pipelines" idea one
@@ -374,7 +377,7 @@ final class WorkSharingExecutor(
     * the expensive subplans worth sharing. */
   def runBatch[A](jobs: Seq[QueryJob[A]],
                   sharedFragments: Seq[(String, SparkSession => DataFrame)] = Nil)
-      : Map[String, A] = synchronized {
+      : Map[String, Try[A]] = synchronized {
     batchNo += 1
     val kappa = spark.conf.getOption("spark.graft.share.fragmentReadPenalty")
       .map(_.toDouble).getOrElse(FragmentGate.DefaultKappa)
@@ -428,7 +431,8 @@ final class WorkSharingExecutor(
         }
       }
     }
-    val built = jobs.map(j => (j.name, j.build(spark)))
+    val builds = jobs.map(j => j.name -> Try(j.build(spark)))
+    val built = builds.collect { case (n, Success(df)) => (n, df) }
     val byName = jobs.map(j => j.name -> j).toMap
     val (mergeGroups, unmergedNames) =
       if (autoMerge) AutoMerge.detect(built)
@@ -503,7 +507,10 @@ final class WorkSharingExecutor(
         }
       }
     }
-    (singleFutures ++ memberFutures).map { case (n, f) => n -> Await.result(f, 30.minutes) }.toMap
+    val failedBuilds = builds.collect { case (n, Failure(e)) => n -> Failure(e) }
+    (singleFutures ++ memberFutures).map { case (n, f) =>
+      n -> Try(Await.result(f, 30.minutes))
+    }.toMap ++ failedBuilds
   }
 
   /** LRU eviction — the reference unpersisted *everything* between windows
@@ -571,8 +578,10 @@ final class BatchWindow[A](
         try {
           // pre-scheduling: admission order within the window
           val results = executor.runBatch(strategy.order(jobs.map(_.job)))
-          jobs.foreach(p => p.promise.success(results(p.job.name)))
+          jobs.foreach(p => p.promise.complete(results(p.job.name)))
         } catch {
+          // only a window-wide failure (caching a shared scan, say) reaches
+          // here; a statement's own failure is in its own result
           case e: Throwable => jobs.foreach(_.promise.tryFailure(e))
         }
         batch.clear()

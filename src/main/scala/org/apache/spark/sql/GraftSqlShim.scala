@@ -1,5 +1,9 @@
 package org.apache.spark.sql
 
+import java.io.CharArrayWriter
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.json.{JacksonGenerator, JSONOptions}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal `private[sql]` bridge (the standard Spark-extension-library
@@ -14,4 +18,16 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `rows` of `df`'s result as JSON lines, encoded on the driver exactly
+    * as `df.toJSON` encodes them in its tasks: the same generator over the
+    * same schema, with no options but the session time zone. */
+  def jsonLines(df: DataFrame, rows: Array[InternalRow]): Array[String] = {
+    val tz = df.sparkSession.asInstanceOf[classic.SparkSession]
+      .sessionState.conf.sessionLocalTimeZone
+    val writer = new CharArrayWriter()
+    val gen = new JacksonGenerator(df.schema, writer,
+      new JSONOptions(Map.empty[String, String], tz))
+    rows.map { r => writer.reset(); gen.write(r); gen.flush(); writer.toString }
+  }
 }

@@ -89,6 +89,9 @@ class QueryGatewaySpec extends SparkSpec {
     val win = new BatchWindow[Seq[String]](ex, windowSize = 2, maxWaitMs = 5000)
     Tables.register(spark, sfDir) // windowed jobs run on the root session
     val gw = new QueryGateway(spark, s => Tables.register(s, sfDir), batching = Some(win))
+    // no AQE coalescing, so a small ORDER BY keeps all its partitions
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
     try {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
@@ -106,7 +109,36 @@ class QueryGatewaySpec extends SparkSpec {
       assert(hb == "ok" && rb.size == 1, (hb, rb))
       // the shared lineitem scan was detected and cached by the window
       assert(ex.cachedFingerprints.exists(_.contains("lineitem")), ex.cachedFingerprints)
-    } finally { gw.close(); win.close(); ex.shutdown(); spark.catalog.clearCache() }
+      // windowed replies equal unwindowed ones line for line: a merged
+      // grep-count pair (answered from its driver-side split), a
+      // multi-partition ORDER BY over timestamp and double columns, and an
+      // array column beside a NULL one
+      val grep = Seq("SELECT count(*) AS n FROM documents WHERE text LIKE '%a%'",
+        "SELECT count(*) AS n FROM documents WHERE text LIKE '%e%'")
+      assert(graft.sharing.AutoMerge.detect(grep.map(q => q -> spark.sql(q)))._1.size == 1)
+      val ordered = "SELECT event_id, ts, value, event_type FROM events ORDER BY event_id"
+      assert(spark.sql(ordered).rdd.getNumPartitions > 1)
+      val nested = "SELECT vec_id, embedding, CAST(NULL AS STRING) AS missing " +
+        "FROM embeddings ORDER BY vec_id"
+      val plain = new QueryGateway(spark, s => {
+        Tables.register(s, sfDir); s.conf.set(coalesce, "false")
+      })
+      try {
+        val (sock, out, in) = connect(plain.boundPort)
+        try Seq(grep, Seq(ordered, nested)).foreach { pair =>
+          val windowed = pair.map(ask) // both statements in one window
+          pair.zip(windowed).foreach { case (q, w) =>
+            out.println(q)
+            val unwindowed = readResponse(in)
+            assert(unwindowed._1 == "ok" && unwindowed._2.nonEmpty, unwindowed)
+            assert(Await.result(w, 5.minutes) == unwindowed, q)
+          }
+        } finally sock.close()
+      } finally plain.close()
+    } finally {
+      gw.close(); win.close(); ex.shutdown(); spark.catalog.clearCache()
+      spark.conf.unset(coalesce)
+    }
   }
 
   test("soak: 8 concurrent clients through gateway -> BatchWindow -> FAIR pools, metamorphic") {
@@ -332,6 +364,23 @@ class QueryGatewaySpec extends SparkSpec {
       assert(h2 == "ok" && r2.size == 1)
       sock.close()
     } finally capped.close()
+    // the windowed path takes the same capped answer through executeTake
+    import graft.sharing.{BatchWindow, WorkSharingExecutor}
+    val ex = new WorkSharingExecutor(spark)
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 1, maxWaitMs = 200)
+    val windowed = new QueryGateway(spark, _ => (), batching = Some(win), maxBatchRows = 100)
+    try {
+      val (sock, out, in) = connect(windowed.boundPort)
+      out.println("SELECT id FROM range(0, 200000, 1, 8)")
+      val (h, rows, trailer) = readResponse(in)
+      assert(h == "ok")
+      assert(rows.size == 100 && rows.head == "{\"id\":0}", rows.take(3))
+      assert(trailer == "done 100 truncated", trailer)
+      out.println("SELECT 1 AS one")
+      val (h2, r2, t2) = readResponse(in)
+      assert(h2 == "ok" && r2 == List("{\"one\":1}") && t2 == "done 1", (h2, r2, t2))
+      sock.close()
+    } finally { windowed.close(); win.close(); ex.shutdown() }
   }
 
   test("connections are catalog-isolated but share the SparkContext") {

@@ -28,7 +28,7 @@ class AutoMergeSpec extends SparkSpec {
     val ex = new WorkSharingExecutor(spark)
     try {
       val out = ex.runBatch(defs.map { case (n, f) => QueryJob[Seq[String]](n, _ => f(), snap) })
-      isolated.foreach { case (n, rows) => assert(out(n) == rows, s"job $n") }
+      isolated.foreach { case (n, rows) => assert(out(n).get == rows, s"job $n") }
     } finally ex.shutdown()
     AutoMerge.detect(defs.map { case (n, f) => n -> f() })._1.map(_.map(_.name))
   }
@@ -94,8 +94,8 @@ class AutoMergeSpec extends SparkSpec {
     val ex = new WorkSharingExecutor(spark)
     val out = try ex.runBatch(defs.map { case (n, f) => QueryJob[Seq[String]](n, _ => f(), snap) })
     finally ex.shutdown()
-    assert(out("all").nonEmpty)
-    assert(out("impossible").isEmpty, out("impossible"))
+    assert(out("all").get.nonEmpty)
+    assert(out("impossible").get.isEmpty, out("impossible"))
   }
 
   test("an ungrouped aggregate whose filter matches nothing keeps its one row") {

@@ -51,7 +51,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     try {
       val batched = ex.runBatch(jobs)
       assert(batched.keySet == isolated.keySet)
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.size == 1)
     } finally ex.shutdown()
   }
@@ -86,7 +86,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val ex = new WorkSharingExecutor(spark)
     try {
       val batched = ex.runBatch(v2jobs)
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       // separately-built plans hit the cached relation (value-equal tables)
       val probe = synth(spark).groupBy("lang").count()
       assert(probe.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
@@ -107,7 +107,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       val batched = ex.runBatch(family,
         sharedFragments = Seq("lsh_pairs" -> (s => Dedup.d04MinhashLshPairs(T(s, sfDir)))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:lsh_pairs"), ex.cachedFingerprints)
       // a sibling built AFTER the batch reads the fragment's cache, proving
       // canonical substitution (d15 contains the d04 subtree verbatim)
@@ -137,7 +137,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         "s02_ann"         -> (s => Similarity.s02HyperplaneLsh(T(s, sfDir))),
         "sym_scored"      -> (s => Similarity.symScored(T(s, sfDir)))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:sym_scored"), ex.cachedFingerprints)
       // siblings built AFTER the batch read the fragment caches, proving
       // canonical substitution across BOTH candidate fragments (probe_cands
@@ -164,7 +164,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
         "lsh_pairs" -> (s => Dedup.d04MinhashLshPairs(T(s, sfDir)))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:lsh_pairs"), ex.cachedFingerprints)
       // a sibling built AFTER the batch reads the fragment cache
       val probe = Graph.g04DegreeHistogram(T(spark, sfDir))
@@ -184,7 +184,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
         "ivf_assigned" -> (s => Sim.ivfAssignedRaw(T(s, sfDir))),
         "pq_codes"     -> (s => Sim.pqCodesPacked(T(s, sfDir)))))
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:ivf_assigned"), ex.cachedFingerprints)
       // a sibling built AFTER the batch reads the assignment fragment cache
       val probe = Sim.s04IvfAnn(T(spark, sfDir))
@@ -208,7 +208,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         "doc_tokens"      -> (s => TextAnalysis.docTokens(T(s, sfDir))),
         "doc_word_counts" -> (s => TextAnalysis.docWordCounts(T(s, sfDir)))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:doc_tokens"), ex.cachedFingerprints)
       // siblings built AFTER the batch read the fragment caches: t16 goes
       // through doc_tokens, t12 through doc_word_counts
@@ -232,7 +232,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
         "media_features" -> (s => Multimodal.mediaFeatures(T(s, sfDir)))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:media_features"), ex.cachedFingerprints)
       // every sibling contains the mediaFeatures subtree verbatim, so a
       // sibling built AFTER the batch reads the fragment cache — the codec
@@ -257,7 +257,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         "quality_flags" -> (s => Pipeline.qualityFlags(T(s, sfDir))),
         "five_grams"    -> (s => Pipeline.fiveGrams(T(s, sfDir).documents))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:quality_flags"), ex.cachedFingerprints)
       assert(ex.cachedFingerprints.contains("frag:five_grams"), ex.cachedFingerprints)
       // siblings built AFTER the batch read both fragment caches: p11 goes
@@ -287,7 +287,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val ex = new WorkSharingExecutor(spark, subplanSharing = true)
     try {
       val batched = ex.runBatch(fragJobs)
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.exists(_.startsWith("autofrag:")), ex.cachedFingerprints)
       // a sibling built afterwards reads the fragment cache
       val probe = baseAgg(spark).filter(col("n") > 5)
@@ -295,7 +295,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally { ex.shutdown(); spark.catalog.clearCache() }
   }
 
-  test("served shared_scan mix: merged answers == isolated, <= 8 jobs, budget fallback") {
+  test("served shared_scan mix: merged answers == isolated, <= 4 jobs, budget fallback") {
     spark.read.format("graft.sources.SynthSource").option("rows", "4000").load()
       .createOrReplaceTempView("ws_synth")
     def grepCount(w: String) = s"SELECT count(*) AS n FROM ws_synth WHERE text LIKE '%$w%'"
@@ -310,7 +310,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val isolated = (mix :+ having).map { case (n, q) => n -> rows(spark.sql(q)) }.toMap
     def window(stmts: Seq[(String, String)], ex: WorkSharingExecutor): Unit = {
       val out = ex.runBatch(stmts.map { case (n, q) => QueryJob[Seq[String]](n, _.sql(q), rows) })
-      stmts.foreach { case (n, _) => assert(out(n) == isolated(n), s"job $n") }
+      stmts.foreach { case (n, _) => assert(out(n).get == isolated(n), s"job $n") }
     }
     val started = new java.util.concurrent.atomic.AtomicInteger()
     val ended = new java.util.concurrent.atomic.AtomicInteger()
@@ -339,7 +339,9 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       spark.sparkContext.addSparkListener(listener)
       try { window(mix, ex); drained() }
       finally spark.sparkContext.removeSparkListener(listener)
-      assert(started.get <= 8, s"${started.get} jobs for a warm window")
+      // only the two meta-plans run jobs (AQE runs each as 2); a merged
+      // member's split is a local relation, which collect() reads on the driver
+      assert(started.get <= 4, s"${started.get} jobs for a warm window")
     } finally { ex.shutdown(); spark.catalog.clearCache() }
     // a meta-result over the budget runs its members unmerged
     val wc = groups(1)
@@ -354,9 +356,28 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val ex = new WorkSharingExecutor(spark, budgetBytes = 0L)
     try {
       val batched = ex.runBatch(jobs)
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.isEmpty)
     } finally ex.shutdown()
+  }
+
+  test("a failing statement fails only itself, not its window") {
+    val bad = QueryJob[Seq[String]]("missing_table",
+      _.sql("SELECT count(*) AS n FROM ws_no_such_table"), snap)
+    val good = jobs.take(2)
+    val ex = new WorkSharingExecutor(spark)
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 3, maxWaitMs = 5000)
+    try {
+      val isolated = good.map(j => j.name -> j.action(j.build(spark))).toMap
+      val futures = (good :+ bad).map(j => j.name -> win.submit(j)).toMap
+      good.foreach(j => assert(Await.result(futures(j.name), 5.minutes) == isolated(j.name),
+        s"job ${j.name}"))
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        Await.result(futures(bad.name), 5.minutes))
+      assert(e.getMessage.contains("ws_no_such_table"), e.getMessage)
+      // the good statements still shared their lineitem scan
+      assert(ex.cachedFingerprints.size == 1, ex.cachedFingerprints)
+    } finally { win.close(); ex.shutdown(); spark.catalog.clearCache() }
   }
 
   test("batch window: size-or-timeout trigger completes all submissions") {
@@ -388,7 +409,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
             JobMeta(deadlineMs = Some(start + (4 - i) * 1200L)))
         }
         val done = ex.runBatch(strategy.order(dJobs))
-        dJobs.count(j => done(j.name) > j.meta.deadlineMs.get)
+        dJobs.count(j => done(j.name).get > j.meta.deadlineMs.get)
       } finally ex.shutdown()
     }
     val fifoLate = run(FifoStrategy)
