@@ -205,9 +205,9 @@ object PairJoinAudit extends Logging {
     * warn-only remains the shipped behavior. */
   val RewriteFlag = "spark.graft.audit.rewrite"
 
-  /** Process-wide count of rewrites actually applied — the soak artifact
-    * (GWSOAK.json `audit_rewrites`) and the gateway spec read it to prove
-    * the opt-in path FIRED, not merely that the flag was set. */
+  /** Process-wide count of rewrites actually applied — the gateway soak
+    * reads it (and logs it as `audit_rewrites`) to prove the opt-in path
+    * FIRED, not merely that the flag was set. */
   private val rewriteCounter = new java.util.concurrent.atomic.LongAdder
   def rewritesApplied: Long = rewriteCounter.sum()
 

@@ -1,10 +1,16 @@
 package graft.server
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
+import java.io.{BufferedOutputStream, BufferedReader, IOException, InputStreamReader,
+  OutputStreamWriter, PrintWriter}
 import java.net.{ServerSocket, Socket}
+import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SQLExecution
 
 /** Thin SQL-over-TCP gateway — the modern shape of the reference's socket
@@ -33,6 +39,14 @@ import org.apache.spark.sql.execution.SQLExecution
   * Windowed results are taken whole, at most `min(maxRows, maxBatchRows)`
   * rows plus one, by [[QueryGateway.takeJson]].
   *
+  * A reply goes out in two flushes: `ok` at once, then the audit's `warn`
+  * lines, the rows and the trailer. Every accepted socket sets TCP_NODELAY:
+  * under Nagle the second flush would wait for the client to ACK `ok`, and
+  * a client delays that ACK (40 ms minimum on Linux), so every reply would
+  * pay it. With Nagle off, each socket write is its own segment, so the
+  * writer buffers 64 KB of encoded bytes and a flush of a reply smaller
+  * than that is one write.
+  *
   * Each connection gets `SparkSession.newSession()` — shared SparkContext and
   * cache (so work-sharing still applies across clients) but isolated temp
   * views and conf, and its own FAIR scheduler pool so one client's scan
@@ -60,6 +74,7 @@ final class QueryGateway(
 
   private val server = new ServerSocket(port)
   private val connIds = new AtomicLong()
+  private val live = ConcurrentHashMap.newKeySet[Socket]()
   @volatile private var running = true
 
   /** Actual bound port (ephemeral when constructed with 0). */
@@ -69,9 +84,14 @@ final class QueryGateway(
     while (running) {
       try {
         val sock = server.accept()
-        val t = new Thread(() => handle(sock, connIds.incrementAndGet()), s"graft-gw-conn")
-        t.setDaemon(true)
-        t.start()
+        sock.setTcpNoDelay(true)
+        live.add(sock)
+        if (!running) sock.close() // close() ran between accept and add
+        else {
+          val t = new Thread(() => handle(sock, connIds.incrementAndGet()), s"graft-gw-conn")
+          t.setDaemon(true)
+          t.start()
+        }
       } catch { case _: Throwable if !running => }
     }
   }, "graft-gw-accept")
@@ -84,10 +104,13 @@ final class QueryGateway(
     session.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft-client-$id")
     var stmtNo = 0L
     val in = new BufferedReader(new InputStreamReader(sock.getInputStream))
-    // no autoflush: one flush per response, not one syscall per row
-    val out = new PrintWriter(new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(sock.getOutputStream,
-        java.nio.charset.StandardCharsets.UTF_8), 1 << 16), false)
+    // no autoflush, and the 64 KB buffer sits under the encoder: the encoder
+    // hands its own buffer down in 8 KB pieces, and with TCP_NODELAY each
+    // piece that reached the socket would go out as its own segment; this
+    // way one flush is one write
+    val out = new PrintWriter(new OutputStreamWriter(
+      new BufferedOutputStream(sock.getOutputStream, 1 << 16),
+      StandardCharsets.UTF_8), false)
     try {
       var line = in.readLine()
       while (line != null && line.trim != "quit") {
@@ -115,8 +138,11 @@ final class QueryGateway(
             // queue -> window -> shared scans -> results multiplexed back).
             // Windowed statements run on the executor's root session, so
             // connection-local temp views don't resolve there — the same
-            // trade the reference's shared executor made.
-            val it: java.util.Iterator[String] = batching match {
+            // trade the reference's shared executor made. The unwindowed path
+            // keeps its DataFrame's analyzed plan for the audit below; a
+            // windowed statement's plan is built on the root session inside
+            // its window, so the audit analyzes the statement afresh.
+            val (it, analyzed): (Iterator[String], Option[LogicalPlan]) = batching match {
               case Some(win) =>
                 stmtNo += 1
                 val job = graft.sharing.QueryJob[Seq[String]](
@@ -124,13 +150,15 @@ final class QueryGateway(
                   df => QueryGateway.takeJson(df, takeCap), effective)
                 val rows = scala.concurrent.Await.result(
                   win.submit(job), scala.concurrent.duration.Duration(30, "min"))
-                java.util.Arrays.asList(rows: _*).iterator()
-              case None => session.sql(sql).toJSON.toLocalIterator()
+                (rows.iterator, None)
+              case None =>
+                val df = session.sql(sql)
+                (df.toJSON.toLocalIterator().asScala, Some(df.queryExecution.analyzed))
             }
             out.println("ok")
             out.flush() // the client's ack must not wait on the audit below
             // plan audit (VERDICT r9 missing-1): an analyzer-only pass —
-            // parsePlan + analyzed never executes commands, so DDL through
+            // `analyzed` is taken before commands execute, so DDL through
             // either path still runs exactly once via `it`. The verdict is
             // surfaced as a `warn` protocol line AFTER `ok` (ADVICE r10:
             // a flagged shape on a cold corpus triggers the linear mass
@@ -138,9 +166,9 @@ final class QueryGateway(
             // ack). The census inside inspect() is snapshot-memoized, so a
             // clean statement pays pure plan analysis only.
             val auditWarn: Option[String] =
-              try graft.plans.PairJoinAudit.inspect(
+              try graft.plans.PairJoinAudit.inspect(analyzed.getOrElse(
                 session.sessionState.executePlan(
-                  session.sessionState.sqlParser.parsePlan(sql)).analyzed, session)
+                  session.sessionState.sqlParser.parsePlan(sql)).analyzed), session)
               catch { case _: Throwable => None }
             auditWarn.foreach(w =>
               out.println("warn " + w.replaceAll("\\s+", " ").take(500)))
@@ -161,10 +189,18 @@ final class QueryGateway(
         }
         line = in.readLine()
       }
-    } finally sock.close()
+    } catch {
+      case _: IOException => // the client went away, or close() closed its socket
+    } finally { live.remove(sock); sock.close() }
   }
 
-  def close(): Unit = { running = false; server.close() }
+  /** Stop accepting and close every open connection: a handler blocked
+    * reading its next statement ends and drops its session. */
+  def close(): Unit = {
+    running = false
+    server.close()
+    live.forEach(_.close())
+  }
 }
 
 /** Deadline-miss accounting for `deadlineMs`-carrying statements (VERDICT
@@ -172,8 +208,8 @@ final class QueryGateway(
   * whether a deadline was actually MET — and the reference's pitch is
   * explicitly throughput vs soft deadlines, README.md:4). The gateway
   * records each successfully-completed hinted statement's finish time
-  * against its deadline; the soak artifact (GWSOAK.json) reports the
-  * aggregate miss rate. Process-wide, like the scheduler it audits. */
+  * against its deadline; the gateway soak logs the aggregate miss rate.
+  * Process-wide, like the scheduler it audits. */
 object DeadlineTelemetry {
   private val total = new AtomicLong()
   private val missed = new AtomicLong()

@@ -336,6 +336,67 @@ class QueryGatewaySpec extends SparkSpec {
     } finally gw.close()
   }
 
+  test("unwindowed audit: a pair-enumerating self-join warns once, rows equal the isolated answer") {
+    // the audit reads the analyzed plan of the DataFrame that ran, so the
+    // statement is parsed once; its verdict still reaches the client
+    Tables.register(spark, sfDir)
+    val selfJoin =
+      "SELECT count(*) AS n FROM documents a JOIN documents b " +
+        "ON substring(a.text, 1, 64) = substring(b.text, 1, 64) AND a.doc_id < b.doc_id"
+    val expected = spark.sql(selfJoin).toJSON.collect().toList
+    val gw = new QueryGateway(spark, s => Tables.register(s, sfDir))
+    try {
+      val (sock, out, in) = connect(gw.boundPort)
+      try {
+        warnCount.set(0L)
+        out.println(selfJoin)
+        val (head, rows, trailer) = readResponse(in)
+        assert(head == "ok" && trailer == "done 1", (head, trailer))
+        assert(warnCount.get == 1L, s"warn lines: ${warnCount.get}")
+        assert(rows == expected, rows)
+      } finally sock.close()
+    } finally gw.close()
+  }
+
+  test("windowed replies do not wait for the client's delayed ACK") {
+    // `ok` is flushed on its own before the rows and trailer; with Nagle on,
+    // that second write waits for the client's ACK of `ok`, which Linux
+    // delays by at least 40 ms
+    import graft.sharing.{BatchWindow, WorkSharingExecutor}
+    Tables.register(spark, sfDir) // windowed jobs run on the root session
+    val ex = new WorkSharingExecutor(spark)
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 1)
+    val gw = new QueryGateway(spark, s => Tables.register(s, sfDir), batching = Some(win))
+    try {
+      val (sock, out, in) = connect(gw.boundPort)
+      try {
+        val gapsMs = (1 to 20).map { _ =>
+          out.println("SELECT r_name FROM region WHERE r_regionkey = 1")
+          assert(in.readLine() == "ok")
+          val t0 = System.nanoTime()
+          var line = in.readLine()
+          while (!line.startsWith("done") && !line.startsWith("error")) line = in.readLine()
+          assert(line == "done 1", line)
+          (System.nanoTime() - t0) / 1e6
+        }.sorted
+        info(f"median ok -> trailer gap ${gapsMs(gapsMs.size / 2)}%.1f ms")
+        assert(gapsMs(gapsMs.size / 2) < 25.0, s"ok -> trailer gaps (ms): $gapsMs")
+      } finally sock.close()
+    } finally { gw.close(); win.close(); ex.shutdown() }
+  }
+
+  test("close() closes the connections it accepted") {
+    val gw = new QueryGateway(spark, _ => ())
+    val (sock, out, in) = connect(gw.boundPort)
+    try {
+      out.println("SELECT 1 AS one")
+      assert(readResponse(in)._3 == "done 1")
+      gw.close()
+      sock.setSoTimeout(30000) // an open connection fails by timing out here
+      assert(in.readLine() == null)
+    } finally { sock.close(); gw.close() }
+  }
+
   test("large results stream partition-by-partition, row cap truncates") {
     // 200k rows over 8 partitions: far more than a sane header-count
     // materialization; toLocalIterator holds one partition at a time
