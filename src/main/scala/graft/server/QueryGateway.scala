@@ -7,8 +7,6 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SQLExecution
@@ -32,12 +30,20 @@ import org.apache.spark.sql.execution.SQLExecution
   *           ends the session. `warn` lines cannot be confused with rows
   *           (rows are JSON objects and start with '{').
   *
-  * Unwindowed results stream through `toLocalIterator` — one partition on
-  * the driver at a time, so a result bigger than driver memory still flows;
-  * the trailer carries the count that a pre-counted header would have forced
-  * us to materialize for. `maxRows` bounds what one statement may send.
-  * Windowed results are taken whole, at most `min(maxRows, maxBatchRows)`
-  * rows plus one, by [[QueryGateway.takeJson]].
+  * Unwindowed results stream as internal rows through
+  * [[QueryGateway.streamJson]]: one job per partition, and one partition's
+  * compact row bytes on the driver at a time, so a result bigger than driver
+  * memory still flows; the trailer carries the count that a pre-counted
+  * header would have forced us to materialize for. `maxRows` bounds what one
+  * statement may send, and reading stops at the cap. Windowed results are
+  * taken whole, at most `min(maxRows, maxBatchRows)` rows plus one, by
+  * [[QueryGateway.takeJson]]. Both paths encode each row on the driver with
+  * the one encoder, `GraftSqlShim.jsonLines`, into the line `df.toJSON`
+  * would give.
+  *
+  * Every statement on a connection gets the id `gw-<conn>-<n>`. An
+  * unwindowed statement runs under that id as its Spark job group; a
+  * windowed one carries it as its job's name.
   *
   * A reply goes out in two flushes: `ok` at once, then the audit's `warn`
   * lines, the rows and the trailer. Every accepted socket sets TCP_NODELAY:
@@ -63,7 +69,7 @@ final class QueryGateway(
 
   // The windowed path materializes each statement's rows on the driver (a
   // shared window's results multiplex back through its future), so unlike
-  // the unwindowed path, which streams through toLocalIterator, it MUST be
+  // the unwindowed path, which streams one partition at a time, it MUST be
   // finitely bounded — an unbounded SELECT through a batching gateway would
   // otherwise buffer the whole result set in driver memory. Effective cap =
   // min(maxRows, maxBatchRows); takeJson takes one sentinel row more, which
@@ -88,7 +94,8 @@ final class QueryGateway(
         live.add(sock)
         if (!running) sock.close() // close() ran between accept and add
         else {
-          val t = new Thread(() => handle(sock, connIds.incrementAndGet()), s"graft-gw-conn")
+          val id = connIds.incrementAndGet()
+          val t = new Thread(() => handle(sock, id), s"graft-gw-conn-$id")
           t.setDaemon(true)
           t.start()
         }
@@ -101,7 +108,8 @@ final class QueryGateway(
   private def handle(sock: Socket, id: Long): Unit = {
     val session = root.newSession()
     sessionInit(session)
-    session.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft-client-$id")
+    val sc = session.sparkContext
+    sc.setLocalProperty("spark.scheduler.pool", s"graft-client-$id")
     var stmtNo = 0L
     val in = new BufferedReader(new InputStreamReader(sock.getInputStream))
     // no autoflush, and the 64 KB buffer sits under the encoder: the encoder
@@ -115,6 +123,8 @@ final class QueryGateway(
       var line = in.readLine()
       while (line != null && line.trim != "quit") {
         if (line.trim.nonEmpty) {
+          stmtNo += 1
+          val stmtId = s"gw-$id-$stmtNo"
           try {
             val (meta, sql) = QueryGateway.parseMeta(line)
             // per-statement scheduling class (the reference's --metadata
@@ -131,7 +141,7 @@ final class QueryGateway(
             val pool =
               if (effective.priority != 0) effective.pool
               else s"graft-client-$id"
-            session.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
+            sc.setLocalProperty("spark.scheduler.pool", pool)
             // Optional work-sharing path: statements queue into the
             // BatchWindow and execute as a shared window (the reference's
             // DAGQueue -> WorksharingExecutor deployment shape: wire ->
@@ -144,16 +154,19 @@ final class QueryGateway(
             // its window, so the audit analyzes the statement afresh.
             val (it, analyzed): (Iterator[String], Option[LogicalPlan]) = batching match {
               case Some(win) =>
-                stmtNo += 1
                 val job = graft.sharing.QueryJob[Seq[String]](
-                  s"gw-$id-$stmtNo", s => s.sql(sql),
+                  stmtId, s => s.sql(sql),
                   df => QueryGateway.takeJson(df, takeCap), effective)
                 val rows = scala.concurrent.Await.result(
                   win.submit(job), scala.concurrent.duration.Duration(30, "min"))
                 (rows.iterator, None)
               case None =>
+                // the group covers every job the statement runs on this
+                // thread: an eager command's, and each partition's read; with
+                // no description, its SQL executions keep their call site
+                sc.setJobGroup(stmtId, null)
                 val df = session.sql(sql)
-                (df.toJSON.toLocalIterator().asScala, Some(df.queryExecution.analyzed))
+                (QueryGateway.streamJson(df), Some(df.queryExecution.analyzed))
             }
             out.println("ok")
             out.flush() // the client's ack must not wait on the audit below
@@ -184,7 +197,7 @@ final class QueryGateway(
             case e: Throwable =>
               out.println("error " + Option(e.getMessage).getOrElse(e.toString)
                 .replaceAll("\\s+", " ").take(500))
-          }
+          } finally sc.clearJobGroup()
           out.flush()
         }
         line = in.readLine()
@@ -229,12 +242,26 @@ object DeadlineTelemetry {
 }
 
 object QueryGateway {
+  /** Every row of `df`, as the JSON lines `df.toJSON` would give, read the
+    * way `Dataset.toLocalIterator` reads them but without its row objects:
+    * the built plan's `executeToIterator` runs one job per partition as the
+    * lines are pulled and holds one partition's compact row bytes on the
+    * driver at a time, and each row is encoded on the caller's thread as it
+    * is printed. A caller that stops pulling runs no further job. */
+  def streamJson(df: DataFrame): Iterator[String] = {
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("toLocalIterator")) {
+      qe.executedPlan.executeToIterator()
+    }
+    GraftSqlShim.jsonLines(df, rows)
+  }
+
   /** At most `cap` rows of `df`, as the JSON lines `df.toJSON` would give,
     * through the built plan's own `executeTake`. A local relation — a merged
     * member's split, already on the driver — answers with no Spark job. Any
     * other plan reads its P partitions in growing batches: at most
     * ⌈log₄P⌉+1 jobs at the default `spark.sql.limit.scaleUpFactor` of 4
-    * (`toLocalIterator` runs P). Every partition of a batch sends at most
+    * (`streamJson` runs P). Every partition of a batch sends at most
     * `cap` rows, so the driver holds at most `cap` rows per partition read
     * in the current batch, never a whole partition. */
   def takeJson(df: DataFrame, cap: Int): Seq[String] = {
@@ -242,7 +269,7 @@ object QueryGateway {
     val rows = SQLExecution.withNewExecutionId(qe, Some("graft-take")) {
       qe.executedPlan.executeTake(cap)
     }
-    GraftSqlShim.jsonLines(df, rows).toSeq
+    GraftSqlShim.jsonLines(df, rows.iterator).toSeq
   }
 
   private val MetaHint =

@@ -21,8 +21,9 @@ object GraftSqlShim {
 
   /** `rows` of `df`'s result as JSON lines, encoded on the driver exactly
     * as `df.toJSON` encodes them in its tasks: the same generator over the
-    * same schema, with no options but the session time zone. */
-  def jsonLines(df: DataFrame, rows: Array[InternalRow]): Array[String] = {
+    * same schema, with no options but the session time zone. One generator
+    * serves the whole reply; each line is encoded as it is pulled. */
+  def jsonLines(df: DataFrame, rows: Iterator[InternalRow]): Iterator[String] = {
     val tz = df.sparkSession.asInstanceOf[classic.SparkSession]
       .sessionState.conf.sessionLocalTimeZone
     val writer = new CharArrayWriter()

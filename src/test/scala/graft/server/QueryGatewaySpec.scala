@@ -1,16 +1,19 @@
 package graft.server
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
+import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter, PrintWriter}
 import java.net.Socket
+import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.{SparkSpec, Tables}
 
 class QueryGatewaySpec extends SparkSpec {
 
+  /** The gateway writes UTF-8, so the client decodes UTF-8 whatever the
+    * platform's default charset is. */
   private def connect(port: Int): (Socket, PrintWriter, BufferedReader) = {
     val s = new Socket("localhost", port)
-    (s, new PrintWriter(s.getOutputStream, true),
-      new BufferedReader(new InputStreamReader(s.getInputStream)))
+    (s, new PrintWriter(new OutputStreamWriter(s.getOutputStream, UTF_8), true),
+      new BufferedReader(new InputStreamReader(s.getInputStream, UTF_8)))
   }
 
   /** Reads one response: "ok" + rows until the "done <n>[ truncated]" trailer,
@@ -399,7 +402,8 @@ class QueryGatewaySpec extends SparkSpec {
 
   test("large results stream partition-by-partition, row cap truncates") {
     // 200k rows over 8 partitions: far more than a sane header-count
-    // materialization; toLocalIterator holds one partition at a time
+    // materialization; the unwindowed path holds one partition's rows on
+    // the driver at a time (the job-count spec below pins that)
     val gw = new QueryGateway(spark, _ => ())
     try {
       val (sock, out, in) = connect(gw.boundPort)
@@ -442,6 +446,124 @@ class QueryGatewaySpec extends SparkSpec {
       assert(h2 == "ok" && r2 == List("{\"one\":1}") && t2 == "done 1", (h2, r2, t2))
       sock.close()
     } finally { windowed.close(); win.close(); ex.shutdown() }
+  }
+
+  test("both gateway modes send the lines df.toJSON gives, under a non-UTC time zone") {
+    // one encoder serves both paths; it must match the executors' toJSON
+    // byte for byte on the types whose rendering it special-cases
+    import graft.sharing.{BatchWindow, WorkSharingExecutor}
+    val tzKey = "spark.sql.session.timeZone"
+    val zone = "Asia/Kolkata" // +05:30 all year
+    // the statement travels as ASCII: the SQL parser unescapes its unicode
+    // and newline escapes, and chr(1) makes the control character
+    val stmt = "SELECT id, timestamp_seconds(1700000000 + id * 90061) AS ts, " +
+      "date_add(DATE '2024-02-28', CAST(id AS INT)) AS d, " +
+      "CAST(id * 1234.5678 - 1 AS DECIMAL(20, 4)) AS dec, " +
+      "array(id, NULL, -id) AS arr, " +
+      "map(concat('k\"', id), id / 4, 'none', CAST(NULL AS DOUBLE)) AS m, " +
+      "named_struct('s', concat('x', id), 'n', IF(id % 2 = 0, NULL, id)) AS st, " +
+      "IF(id = 1, NULL, concat('caf\\u00e9 \\u65e5\\u672c \"q\" \\\\ a\\nb', chr(1))) AS txt " +
+      "FROM range(0, 4, 1, 2)"
+    def answer(port: Int): (String, List[String], String) = {
+      val (sock, out, in) = connect(port)
+      try {
+        out.println(s"SET $tzKey=$zone")
+        assert(readResponse(in)._3 == "done 1")
+        out.println(stmt)
+        readResponse(in)
+      } finally sock.close()
+    }
+    def check(reply: (String, List[String], String), expected: List[String]): Unit = {
+      // the statement reaches what the spec claims to cover
+      val all = expected.mkString("\n")
+      Seq("+05:30", "\"d\":\"2024-02-29\"", "\"dec\":1233.5678", "[0,null,0]",
+        "\"none\":null", "caf\u00e9 \u65e5\u672c \\\"q\\\" \\\\ a\\nb\\u0001")
+        .foreach(s => assert(all.contains(s), s"$s not in $all"))
+      assert(expected.exists(l => !l.contains("\"txt\"")), "no row omits its NULL field")
+      assert(reply == (("ok", expected, s"done ${expected.size}")), reply)
+    }
+    // unwindowed: the statement runs on the connection's own session
+    val sessions = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.SparkSession]()
+    val gw = new QueryGateway(spark, s => sessions.add(s))
+    try {
+      val reply = answer(gw.boundPort)
+      check(reply, sessions.peek().sql(stmt).toJSON.collect().toList)
+    } finally gw.close()
+    // windowed: the statement, and the SET before it, run on the root session
+    val rootZone = spark.conf.get(tzKey)
+    val ex = new WorkSharingExecutor(spark)
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 1)
+    val windowed = new QueryGateway(spark, _ => (), batching = Some(win))
+    try {
+      val reply = answer(windowed.boundPort)
+      check(reply, spark.sql(stmt).toJSON.collect().toList)
+    } finally {
+      windowed.close(); win.close(); ex.shutdown(); spark.conf.set(tzKey, rootZone)
+    }
+  }
+
+  test("an error in a later partition ends the streamed reply; the connection survives") {
+    val gw = new QueryGateway(spark, _ => ())
+    try {
+      val (sock, out, in) = connect(gw.boundPort)
+      try {
+        // partition 6 of 8 holds ids 150000..174999
+        out.println("SELECT CASE WHEN id = 150000 THEN raise_error('boom') ELSE id END AS v " +
+          "FROM range(0, 200000, 1, 8)")
+        val (head, rows, trailer) = readResponse(in)
+        assert(head == "ok")
+        assert(rows.size == 150000 && rows.head == "{\"v\":0}", rows.size)
+        assert(trailer.startsWith("error ") && trailer.contains("boom"), trailer)
+        out.println("SELECT 1 AS one")
+        assert(readResponse(in) == (("ok", List("{\"one\":1}"), "done 1")))
+      } finally sock.close()
+    } finally gw.close()
+  }
+
+  test("an unwindowed reply reads one partition per job and stops reading at the row cap") {
+    // a statement's jobs carry its id, gw-<conn>-<n>, as their job group
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tasksPerJob = new java.util.concurrent.ConcurrentHashMap[String, Vector[Int]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => tasksPerJob.merge(g, Vector(e.stageInfos.map(_.numTasks).sum), _ ++ _))
+    }
+    // events reach a listener in the order they were posted, so once a job
+    // started after the reply is seen, every job of the reply has been too
+    def jobsOf(group: String): Vector[Int] = {
+      val marker = s"marker-${System.nanoTime()}"
+      sc.setJobGroup(marker, null)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!tasksPerJob.containsKey(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(tasksPerJob.containsKey(marker), "listener never saw the marker job")
+      tasksPerJob.getOrDefault(group, Vector.empty)
+    }
+    def reply(gw: QueryGateway): (String, Int, String) = {
+      val (sock, out, in) = connect(gw.boundPort)
+      try {
+        out.println("SELECT id FROM range(0, 200000, 1, 8)")
+        val (head, rows, trailer) = readResponse(in)
+        (head, rows.size, trailer)
+      } finally sock.close()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val whole = new QueryGateway(spark, _ => ())
+      try {
+        assert(reply(whole) == (("ok", 200000, "done 200000")))
+        assert(jobsOf("gw-1-1") == Vector.fill(8)(1))
+      } finally whole.close()
+      tasksPerJob.clear()
+      val capped = new QueryGateway(spark, _ => (), maxRows = 100)
+      try {
+        assert(reply(capped) == (("ok", 100, "done 100 truncated")))
+        assert(jobsOf("gw-1-1") == Vector(1))
+      } finally capped.close()
+    } finally sc.removeSparkListener(listener)
   }
 
   test("connections are catalog-isolated but share the SparkContext") {
