@@ -12,7 +12,15 @@
 # JSON result line goes to <dir>/runs.jsonl (the directory is printed).
 # For every end-to-end metric of BENCHMARK.json the summary gives each side's
 # median and quartiles, the change's wins over the parent (ties count for
-# neither) and the median difference against the parent's quartile spread.
+# neither), the median difference against the parent's quartile spread, and
+# a verdict:
+#   gain        the change wins at least 0.9 of the pairs and its median is
+#               better than the parent's by more than the parent's IQR
+#   WORSE       the change's median is worse than the parent's by more than
+#               the metric's BENCHMARK.json bound (a fraction of the parent's
+#               median)
+#   unresolved  neither, and the parent's IQR is wider than that bound
+#   flat        neither, within the bound
 # Each run's `correct` and `failed` values are printed too, and the script
 # exits 1 if any run on either side failed a statement or answered one
 # wrongly, so a median cannot hide a wrong answer.
@@ -68,7 +76,7 @@ for p in pairs:
     print(f"pair {p}: " + "  ".join(
         f"{s} correct={json.dumps(side(s, p)['correct'])} failed={side(s, p)['failed']}"
         for s in ("parent", "change")))
-print(f"{'metric':18} {'parent q1/med/q3':>30} {'change q1/med/q3':>30} {'wins':>6} {'diff':>10} {'parent iqr':>10}")
+print(f"{'metric':18} {'parent q1/med/q3':>30} {'change q1/med/q3':>30} {'wins':>6} {'diff':>10} {'parent iqr':>10}  verdict")
 for m in bench["end_to_end"]:
     name, higher = m["name"], m["better"] == "higher"
     par = [side("parent", p)["metrics"][name]["value"] for p in pairs]
@@ -76,8 +84,17 @@ for m in bench["end_to_end"]:
     wins = sum((c > a) if higher else (c < a) for a, c in zip(par, chg))
     pq, cq = quartiles(par), quartiles(chg)
     fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
+    iqr, better = pq[2] - pq[0], (cq[1] - pq[1]) * (1 if higher else -1)
+    if wins >= 0.9 * len(pairs) and better > iqr:
+        verdict = "gain"
+    elif -better > m["bound"] * abs(pq[1]):
+        verdict = "WORSE"
+    elif iqr > m["bound"] * abs(pq[1]):
+        verdict = "unresolved"
+    else:
+        verdict = "flat"
     print(f"{name:18} {fmt(pq):>30} {fmt(cq):>30} {wins:>3}/{len(pairs):<2} "
-          f"{cq[1] - pq[1]:>+10.4g} {pq[2] - pq[0]:>10.4g}")
+          f"{cq[1] - pq[1]:>+10.4g} {iqr:>10.4g}  {verdict}")
 bad = [r for r in runs if r["failed"] or not r["correct"]]
 for r in bad:
     print(f"WRONG: {r['side']} pair {r['pair']} correct={json.dumps(r['correct'])} "

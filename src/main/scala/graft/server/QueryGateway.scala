@@ -8,8 +8,10 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.execution.SQLExecution
+
+import graft.sharing.AutoMerge
 
 /** Thin SQL-over-TCP gateway — the modern shape of the reference's socket
   * front-end.
@@ -30,20 +32,32 @@ import org.apache.spark.sql.execution.SQLExecution
   *           ends the session. `warn` lines cannot be confused with rows
   *           (rows are JSON objects and start with '{').
   *
-  * Unwindowed results stream as internal rows through
+  * An unwindowed reply is computed after `ok` is flushed, by
+  * [[QueryGateway.replyJson]]: when its rows fit `min(maxRows, maxBatchRows)`
+  * rows and [[QueryGateway.CollectBytes]], one Spark job collects them, and a
+  * top-level ORDER BY and the projection above it run on the driver.
+  * A reply that does not fit streams as internal rows through
   * [[QueryGateway.streamJson]]: one job per partition, and one partition's
   * compact row bytes on the driver at a time, so a result bigger than driver
   * memory still flows; the trailer carries the count that a pre-counted
-  * header would have forced us to materialize for. `maxRows` bounds what one
-  * statement may send, and reading stops at the cap. Windowed results are
+  * header would have forced us to materialize for. Windowed results are
   * taken whole, at most `min(maxRows, maxBatchRows)` rows plus one, by
-  * [[QueryGateway.takeJson]]. Both paths encode each row on the driver with
+  * [[QueryGateway.takeJson]]. Driver memory per statement: an unwindowed
+  * collect holds about `CollectBytes` of compact rows at most (each task
+  * stops once its own rows pass it, and the driver cancels the job once
+  * their sum does), a streamed reply one partition's, and a windowed reply
+  * `min(maxRows, maxBatchRows) + 1` rows per partition of a take's batch. `maxRows` bounds what one
+  * statement may send, and reading stops at the cap. Every path encodes each row on the driver with
   * the one encoder, `GraftSqlShim.jsonLines`, into the line `df.toJSON`
   * would give.
   *
-  * Every statement on a connection gets the id `gw-<conn>-<n>`. An
-  * unwindowed statement runs under that id as its Spark job group; a
-  * windowed one carries it as its job's name.
+  * An error after `ok` is sent as the `error` trailer. A collected reply
+  * fails before any row is sent, so its client sees `ok` and then the
+  * error; a streamed reply may have sent rows first.
+  *
+  * Every statement on a connection gets the id `gw-<conn>-<n>` and runs
+  * under it as its Spark job group: on the connection's thread, and a
+  * windowed statement's action also on the window's thread that runs it.
   *
   * A reply goes out in two flushes: `ok` at once, then the audit's `warn`
   * lines, the rows and the trailer. Every accepted socket sets TCP_NODELAY:
@@ -57,6 +71,8 @@ import org.apache.spark.sql.execution.SQLExecution
   * cache (so work-sharing still applies across clients) but isolated temp
   * views and conf, and its own FAIR scheduler pool so one client's scan
   * cannot starve another (reference intent: .../FIFOStrategy.scala:107-111).
+  * Every statement, windowed or not, is parsed and analyzed on its
+  * connection's session, so a command or SET runs there, once.
   */
 final class QueryGateway(
     root: SparkSession,
@@ -67,16 +83,15 @@ final class QueryGateway(
     batching: Option[graft.sharing.BatchWindow[Seq[String]]] = None,
     maxBatchRows: Long = 1000000L) {
 
-  // The windowed path materializes each statement's rows on the driver (a
-  // shared window's results multiplex back through its future), so unlike
-  // the unwindowed path, which streams one partition at a time, it MUST be
-  // finitely bounded — an unbounded SELECT through a batching gateway would
-  // otherwise buffer the whole result set in driver memory. Effective cap =
-  // min(maxRows, maxBatchRows); takeJson takes one sentinel row more, which
-  // preserves the truncated trailer, and holds at most that many rows per
-  // partition it reads. executeTake counts rows in an Int.
-  private val batchCap: Long = math.min(maxRows, maxBatchRows)
-  private val takeCap: Int = math.min(batchCap, Int.MaxValue - 1L).toInt + 1
+  // The one per-statement bound on the rows the driver holds, in both
+  // modes: a windowed statement's rows are materialized on the driver (a
+  // shared window's results multiplex back through its future), and an
+  // unwindowed reply is collected whole when it fits, so an unbounded SELECT
+  // must not buffer its whole result in driver memory. Effective cap =
+  // min(maxRows, maxBatchRows); takeJson and collectWithin read one sentinel
+  // row more, which preserves the truncated trailer. Both count rows in an
+  // Int.
+  private val rowCap: Int = math.min(math.min(maxRows, maxBatchRows), Int.MaxValue - 1L).toInt
 
   private val server = new ServerSocket(port)
   private val connIds = new AtomicLong()
@@ -111,7 +126,7 @@ final class QueryGateway(
     val sc = session.sparkContext
     sc.setLocalProperty("spark.scheduler.pool", s"graft-client-$id")
     var stmtNo = 0L
-    val in = new BufferedReader(new InputStreamReader(sock.getInputStream))
+    val in = new BufferedReader(new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
     // no autoflush, and the 64 KB buffer sits under the encoder: the encoder
     // hands its own buffer down in 8 KB pieces, and with TCP_NODELAY each
     // piece that reached the socket would go out as its own segment; this
@@ -142,50 +157,43 @@ final class QueryGateway(
               if (effective.priority != 0) effective.pool
               else s"graft-client-$id"
             sc.setLocalProperty("spark.scheduler.pool", pool)
+            // the group covers every job the statement runs on this thread:
+            // an eager command's, and an unwindowed reply's; with no
+            // description, its SQL executions keep their call site
+            sc.setJobGroup(stmtId, null)
+            // built on the connection's own session in both modes, so its
+            // temp views and conf apply and a command runs here, once
+            val df = session.sql(sql)
             // Optional work-sharing path: statements queue into the
             // BatchWindow and execute as a shared window (the reference's
             // DAGQueue -> WorksharingExecutor deployment shape: wire ->
             // queue -> window -> shared scans -> results multiplexed back).
-            // Windowed statements run on the executor's root session, so
-            // connection-local temp views don't resolve there — the same
-            // trade the reference's shared executor made. The unwindowed path
-            // keeps its DataFrame's analyzed plan for the audit below; a
-            // windowed statement's plan is built on the root session inside
-            // its window, so the audit analyzes the statement afresh.
-            val (it, analyzed): (Iterator[String], Option[LogicalPlan]) = batching match {
+            val it: Iterator[String] = batching match {
               case Some(win) =>
                 val job = graft.sharing.QueryJob[Seq[String]](
-                  stmtId, s => s.sql(sql),
-                  df => QueryGateway.takeJson(df, takeCap), effective)
-                val rows = scala.concurrent.Await.result(
-                  win.submit(job), scala.concurrent.duration.Duration(30, "min"))
-                (rows.iterator, None)
+                  stmtId, _ => df, QueryGateway.takeJson(_, rowCap + 1), effective)
+                scala.concurrent.Await.result(
+                  win.submit(job), scala.concurrent.duration.Duration(30, "min")).iterator
               case None =>
-                // the group covers every job the statement runs on this
-                // thread: an eager command's, and each partition's read; with
-                // no description, its SQL executions keep their call site
-                sc.setJobGroup(stmtId, null)
-                val df = session.sql(sql)
-                (QueryGateway.streamJson(df), Some(df.queryExecution.analyzed))
+                // by-name: the reply's jobs run at the first hasNext, after `ok`
+                Iterator.empty ++ QueryGateway.replyJson(df, maxRows, rowCap)
             }
             out.println("ok")
             out.flush() // the client's ack must not wait on the audit below
-            // plan audit (VERDICT r9 missing-1): an analyzer-only pass —
-            // `analyzed` is taken before commands execute, so DDL through
-            // either path still runs exactly once via `it`. The verdict is
+            // plan audit (VERDICT r9 missing-1): an analyzer-only pass over
+            // the statement's own analyzed plan, with no second parse, so a
+            // command still runs exactly once, in session.sql. The verdict is
             // surfaced as a `warn` protocol line AFTER `ok` (ADVICE r10:
             // a flagged shape on a cold corpus triggers the linear mass
             // census — that job must not sit between the client and its
             // ack). The census inside inspect() is snapshot-memoized, so a
             // clean statement pays pure plan analysis only.
             val auditWarn: Option[String] =
-              try graft.plans.PairJoinAudit.inspect(analyzed.getOrElse(
-                session.sessionState.executePlan(
-                  session.sessionState.sqlParser.parsePlan(sql)).analyzed), session)
+              try graft.plans.PairJoinAudit.inspect(df.queryExecution.analyzed, session)
               catch { case _: Throwable => None }
             auditWarn.foreach(w =>
               out.println("warn " + w.replaceAll("\\s+", " ").take(500)))
-            val printCap = if (batching.isDefined) batchCap else maxRows
+            val printCap = if (batching.isDefined) rowCap else maxRows
             var n = 0L
             while (n < printCap && it.hasNext) { out.println(it.next()); n += 1 }
             out.println(if (it.hasNext) s"done $n truncated" else s"done $n")
@@ -242,6 +250,35 @@ object DeadlineTelemetry {
 }
 
 object QueryGateway {
+  /** The most compact row bytes an unwindowed reply collects on the driver
+    * in one job; a bigger reply streams. */
+  val CollectBytes: Long = 64L << 20
+
+  /** Every row of `df`, at most `maxRows`, as the JSON lines `df.toJSON`
+    * would give. When its rows fit `rowCap` rows and [[CollectBytes]], one
+    * job collects them: the plan below a top-level global ORDER BY (see
+    * `AutoMerge.topOf`) runs in the job, and the sort and the projections
+    * above it run on the driver (`AutoMerge.applyTop`); a plan with no such
+    * sort runs as it is, so a command's result is read, not re-run. When
+    * they do not fit, or the plan's size estimate alone exceeds the budget,
+    * the reply streams through [[streamJson]]; except that an unsorted reply
+    * over a `rowCap` of `maxRows` sends the first `maxRows` rows it
+    * collected, the ones streaming would send, and the `truncated` trailer
+    * follows. */
+  def replyJson(df: DataFrame, maxRows: Long, rowCap: Int): Iterator[String] = {
+    val top = AutoMerge.topOf(df.queryExecution.analyzed)._1.dropWhile(!_.isInstanceOf[Sort])
+    val body = top.headOption.fold(df)(s => GraftSqlShim.ofRows(df.sparkSession, s.children.head))
+    val collected =
+      if (body.queryExecution.optimizedPlan.stats.sizeInBytes > CollectBytes) None
+      else Some(AutoMerge.collectWithin(body, CollectBytes, rowCap))
+    collected match {
+      case Some(c) if c.complete => GraftSqlShim.jsonLines(df, AutoMerge.applyTop(c.rows, top).iterator)
+      case Some(c) if top.isEmpty && rowCap == maxRows && c.rows.length > maxRows =>
+        GraftSqlShim.jsonLines(df, c.rows.iterator)
+      case _ => streamJson(df)
+    }
+  }
+
   /** Every row of `df`, as the JSON lines `df.toJSON` would give, read the
     * way `Dataset.toLocalIterator` reads them but without its row objects:
     * the built plan's `executeToIterator` runs one job per partition as the

@@ -1,14 +1,19 @@
 package graft.sharing
 
 import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.util.Failure
 
+import org.apache.spark.SimpleFutureAction
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeMap, BoundReference, Coalesce, Expression, Literal, NamedExpression, Or, SubqueryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeMap, BoundReference, Coalesce, Expression, Literal, NamedExpression, Or, RuntimeReplaceable, SortOrder, SubqueryExpression, Unevaluable, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LocalRelation, LogicalPlan, Project, Sort, SubqueryAlias, View}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
+import org.apache.spark.sql.execution.{CommandResultExec, LocalTableScanExec, SQLExecution}
 import org.apache.spark.sql.types.StructType
 
 /** Automatic merge of a window's same-shape aggregate statements — MRShare's
@@ -66,15 +71,47 @@ object AutoMerge {
     case _ => None
   }
 
+  /** Evaluable on the driver, over rows already read, with the result Spark
+    * would give: plain, and nothing the optimizer must first rewrite (a
+    * `RuntimeReplaceable`, a current-time or current-database call) or that
+    * only a physical operator evaluates (an `Unevaluable` other than the
+    * attributes and sort orders the projection and ordering bind). */
+  private def onDriver(e: Expression): Boolean = plain(e) && !e.containsPattern(CURRENT_LIKE) &&
+    !e.exists {
+      case _: Attribute | _: SortOrder => false
+      case _: Unevaluable | _: RuntimeReplaceable => true
+      case _ => false
+    }
+
+  /** The top chain of `plan`: its `Project`, global `Sort` and
+    * `SubqueryAlias` nodes down to the first other node, listed bottom first
+    * and all evaluable on the driver by [[applyTop]], and the plan below
+    * them. */
+  def topOf(plan: LogicalPlan): (List[LogicalPlan], LogicalPlan) = {
+    def peel(p: LogicalPlan, acc: List[LogicalPlan]): (List[LogicalPlan], LogicalPlan) = p match {
+      case pr: Project if pr.projectList.forall(onDriver) => peel(pr.child, pr :: acc)
+      case s: Sort if s.global && s.order.forall(onDriver) => peel(s.child, s :: acc)
+      case s: SubqueryAlias => peel(s.child, s :: acc)
+      case _ => (acc, p)
+    }
+    peel(plan, Nil)
+  }
+
+  /** `rows` of the child of `top`'s lowest node, with `top` (bottom first,
+    * as [[topOf]] lists it) applied on the driver: each `Project` by an
+    * `UnsafeProjection`, each `Sort` by Catalyst's ordering, stably. */
+  def applyTop(rows: Array[InternalRow], top: List[LogicalPlan]): Array[InternalRow] =
+    top.foldLeft(rows) {
+      case (rs, p: Project) =>
+        val proj = UnsafeProjection.create(p.projectList, p.child.output)
+        rs.map(r => proj(r).copy(): InternalRow)
+      case (rs, s: Sort) => rs.sorted(new LazilyGeneratedOrdering(s.order, s.child.output))
+      case (rs, _: SubqueryAlias) => rs
+      case (_, other) => sys.error(s"not a top node: ${other.nodeName}")
+    }
+
   /** Recognize a member's shape; anything else → None (runs unmerged). */
   def shapeOf(name: String, plan: LogicalPlan): Option[Member] = {
-    def top(p: LogicalPlan, acc: List[LogicalPlan]): Option[Member] = p match {
-      case a: Aggregate => aggregate(a, acc)
-      case pr: Project if pr.projectList.forall(plain) => top(pr.child, pr :: acc)
-      case s: Sort if s.global && s.order.forall(plain) => top(s.child, s :: acc)
-      case s: SubqueryAlias => top(s.child, s :: acc)
-      case _ => None
-    }
     def aggregate(a: Aggregate, tops: List[LogicalPlan]): Option[Member] = {
       val aggs = a.aggregateExpressions.flatMap(_.collect { case ae: AggregateExpression => ae })
       val ok = (a.groupingExpressions ++ a.aggregateExpressions).forall(plain) &&
@@ -92,20 +129,25 @@ object AutoMerge {
       case s: SubqueryAlias if scanOf(s).isEmpty => below(s.child, s :: acc)
       case _ => scanOf(p).map(fp => (acc, None, p, fp))
     }
-    top(plan, Nil)
+    topOf(plan) match {
+      case (tops, a: Aggregate) => aggregate(a, tops)
+      case _ => None
+    }
   }
 
   /** Partition a window into merge groups (>= 2 members that read the same
-    * scan, group identically and differ below the aggregate only in the
-    * filter predicate) and the names of the unmerged rest, in window order. */
+    * scan, group identically, differ below the aggregate only in the filter
+    * predicate and were built on sessions with equal confs, so one session
+    * can run them all) and the names of the unmerged rest, in window order. */
   def detect(built: Seq[(String, DataFrame)]): (Seq[Seq[Member]], Seq[String]) = {
     val members = built.flatMap { case (n, df) => shapeOf(n, df.queryExecution.analyzed) }
+    val confs = built.map { case (n, df) => n -> df.sparkSession.conf.getAll }.toMap
     def template(m: Member): LogicalPlan =
       Aggregate(m.agg.groupingExpressions, Nil, m.agg.child.transformDown {
         case f: Filter if m.filter.exists(_ eq f) => f.child
       }).canonicalized
     // groupBy keeps window order inside each group
-    val groups = members.groupBy(m => (m.fp, template(m)))
+    val groups = members.groupBy(m => (m.fp, template(m), confs(m.name)))
       .values.filter(_.size >= 2).toSeq
       .sortBy(g => built.indexWhere(_._1 == g.head.name))
     val merged = groups.flatten.map(_.name).toSet
@@ -156,37 +198,79 @@ object AutoMerge {
     Aggregate(c.agg.groupingExpressions, cols, rowLocal)
   }
 
-  /** Run `df` once and bring its rows to the driver as UnsafeRows if they
-    * fit `budgetBytes`; None when they do not. A task stops reading once its
-    * own rows overflow (and reports -1 bytes), and the driver drops every
-    * row it holds once the running total does. */
-  def collectWithin(df: DataFrame, budgetBytes: Long): Option[Array[InternalRow]] = {
+  /** The first rows of a result, in partition order, and whether they are
+    * all of them. */
+  final case class Collected(rows: Array[InternalRow], complete: Boolean)
+
+  /** Run `df` in one job over all its partitions and bring its rows to the
+    * driver as UnsafeRows, as far as they fit `maxRows` and `budgetBytes`.
+    * Each task sends at most `maxRows + 1` rows and stops reading once its
+    * own rows pass the budget. The driver cancels the job as soon as the rows
+    * it holds pass the budget, or the partitions it holds from the first on
+    * hold more than `maxRows` rows; a failure after the rows passed either
+    * limit is ignored, as the result is incomplete anyway.
+    *
+    * Complete: every row. Over the row limit: the first `maxRows + 1` rows,
+    * when the partitions they lie in arrived, else fewer. Over the budget: no
+    * rows. A plan whose rows are already on the driver (a local relation, a
+    * command's result) is read there, with no job. */
+  def collectWithin(df: DataFrame, budgetBytes: Long,
+                    maxRows: Int = Int.MaxValue - 1): Collected = {
     val qe = df.queryExecution
     val schema: StructType = df.schema
-    SQLExecution.withNewExecutionId(qe, Some("graft-merge")) {
-      val capped = qe.toRdd.mapPartitions { it =>
-        val proj = UnsafeProjection.create(schema)
-        val buf = mutable.ArrayBuffer.empty[InternalRow]
-        var bytes = 0L
-        while (bytes <= budgetBytes && it.hasNext) {
-          val r = proj(it.next()).copy()
-          bytes += r.getSizeInBytes
-          buf += r
-        }
-        Iterator.single((buf.toArray, if (it.hasNext || bytes > budgetBytes) -1L else bytes))
+    SQLExecution.withNewExecutionId(qe, Some("graft-collect")) {
+      qe.executedPlan match {
+        case local @ (_: LocalTableScanExec | _: CommandResultExec) =>
+          val rows = local.executeCollect()
+          Collected(rows.take(maxRows + 1), rows.length <= maxRows)
+        case _ =>
+          val capped = qe.toRdd.mapPartitions { it =>
+            val proj = UnsafeProjection.create(schema)
+            val buf = mutable.ArrayBuffer.empty[InternalRow]
+            var bytes = 0L
+            while (bytes <= budgetBytes && buf.length <= maxRows && it.hasNext) {
+              val r = proj(it.next()).copy()
+              bytes += r.getSizeInBytes
+              buf += r
+            }
+            Iterator.single((buf.toArray, bytes))
+          }
+          val n = capped.getNumPartitions
+          val parts = new Array[Array[InternalRow]](n)
+          var rows, bytes, prefixRows = 0L
+          var prefix = 0 // partitions held from the first on
+          var job: SimpleFutureAction[Unit] = null
+          // the handler runs on the scheduler's thread, one task at a time,
+          // and cancels the job there; holding the lock until `job` is set
+          // keeps an early handler waiting for it
+          parts.synchronized {
+            job = df.sparkSession.sparkContext.submitJob(capped,
+              (it: Iterator[(Array[InternalRow], Long)]) => it.next(), 0 until n,
+              (i: Int, res: (Array[InternalRow], Long)) => parts.synchronized {
+                if (!job.isCancelled) {
+                  parts(i) = res._1
+                  rows += res._1.length
+                  bytes += res._2
+                  while (prefix < n && parts(prefix) != null) {
+                    prefixRows += parts(prefix).length
+                    prefix += 1
+                  }
+                  if (bytes > budgetBytes || prefixRows > maxRows) job.cancel()
+                }
+              }, ())
+          }
+          Await.ready(job, Duration.Inf)
+          parts.synchronized {
+            job.value.get match {
+              case Failure(e) if rows <= maxRows && bytes <= budgetBytes => throw e
+              case _ =>
+            }
+            if (bytes > budgetBytes) Collected(Array.empty, complete = false)
+            else if (rows > maxRows)
+              Collected(parts.iterator.take(prefix).flatten.take(maxRows + 1).toArray, complete = false)
+            else Collected(parts.flatten, complete = true)
+          }
       }
-      val parts = new Array[Array[InternalRow]](capped.getNumPartitions)
-      var total = 0L
-      var over = false
-      df.sparkSession.sparkContext.runJob(capped,
-        (it: Iterator[(Array[InternalRow], Long)]) => it.next(),
-        (i: Int, res: (Array[InternalRow], Long)) => if (!over) {
-          if (res._2 < 0 || total + res._2 > budgetBytes) {
-            over = true
-            parts.indices.foreach(parts(_) = null)
-          } else { total += res._2; parts(i) = res._1 }
-        })
-      if (over) None else Some(parts.flatten)
     }
   }
 
@@ -201,14 +285,8 @@ object AutoMerge {
     val slice = UnsafeProjection.create(aggOut.zipWithIndex.map { case (a, j) =>
       BoundReference(base + j, a.dataType, a.nullable) })
     val kept = if (m.grouped) meta.filter(_.getLong(base + width) > 0) else meta
-    val (rows, out) = m.top.foldLeft((kept.map(r => slice(r).copy(): InternalRow), aggOut)) {
-      case ((rs, in), p: Project) =>
-        val proj = UnsafeProjection.create(p.projectList, in)
-        (rs.map(r => proj(r).copy(): InternalRow), p.output)
-      case ((rs, in), s: Sort) => (rs.sorted(new LazilyGeneratedOrdering(s.order, in)), in)
-      case ((rs, _), s: SubqueryAlias) => (rs, s.output)
-      case (_, other) => sys.error(s"not a member top: ${other.nodeName}")
-    }
+    val rows = applyTop(kept.map(r => slice(r).copy(): InternalRow), m.top)
+    val out = m.top.lastOption.fold(aggOut)(_.output)
     LocalRelation(out, rows.toSeq)
   }
 }

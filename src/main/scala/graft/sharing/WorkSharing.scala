@@ -482,28 +482,35 @@ final class WorkSharingExecutor(
     // happens lazily at first execution, and a rebuild would make an
     // eager-build job (checkpointing operators) pay its build twice.
     val builtByName = built.toMap
-    def inPool[T](pool: String)(body: => T): T = {
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-      try body finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
+    // a job's action runs under its name as the Spark job group (a gateway
+    // statement's id), cleared afterwards with the pool
+    def inPool[T](pool: String, group: Option[String])(body: => T): T = {
+      val sc = spark.sparkContext
+      sc.setLocalProperty("spark.scheduler.pool", pool)
+      group.foreach(sc.setJobGroup(_, null))
+      try body finally { sc.setLocalProperty("spark.scheduler.pool", null); sc.clearJobGroup() }
     }
     val singleFutures = unmergedNames.map(byName).map { j =>
-      j.name -> Future(inPool(j.meta.pool)(j.action(builtByName(j.name))))
+      j.name -> Future(inPool(j.meta.pool, Some(j.name))(j.action(builtByName(j.name))))
     }
-    // each merge group = one meta-job collected once; its members' actions
-    // then run concurrently on their driver-side splits, or unmerged when
-    // the meta-result overflowed the budget or the meta-plan failed
+    // each merge group = one meta-job collected once, on its first member's
+    // session (merged members' confs are equal); its members' actions then
+    // run concurrently on their driver-side splits, or unmerged when the
+    // meta-result overflowed the budget or the meta-plan failed
     val memberFutures = mergeGroups.flatMap { group =>
       val pool = group.map(m => byName(m.name).meta).maxBy(_.priority).pool
-      def frame(p: LogicalPlan) = org.apache.spark.sql.GraftSqlShim.ofRows(spark, p)
-      val meta = Future(inPool(pool)(
-        AutoMerge.collectWithin(frame(AutoMerge.metaPlan(group)), budgetBytes)))
+      def frame(name: String, p: LogicalPlan) =
+        org.apache.spark.sql.GraftSqlShim.ofRows(builtByName(name).sparkSession, p)
+      val meta = Future(inPool(pool, None)(AutoMerge.collectWithin(
+        frame(group.head.name, AutoMerge.metaPlan(group)), budgetBytes)))
+        .map(c => Option.when(c.complete)(c.rows))
         .recover { case NonFatal(_) => None }
       group.indices.map { i =>
         val j = byName(group(i).name)
         j.name -> meta.map { rows =>
-          val df = rows.flatMap(r => Try(frame(AutoMerge.split(r, group, i))).toOption)
+          val df = rows.flatMap(r => Try(frame(j.name, AutoMerge.split(r, group, i))).toOption)
             .getOrElse(builtByName(j.name))
-          inPool(j.meta.pool)(j.action(df))
+          inPool(j.meta.pool, Some(j.name))(j.action(df))
         }
       }
     }

@@ -34,6 +34,34 @@ class QueryGatewaySpec extends SparkSpec {
     (head, rows.result(), line)
   }
 
+  /** Runs `body` with a listener that records, per Spark job group, each
+    * started job's task count; `body` gets a function that returns a group's
+    * jobs so far. Events reach a listener in the order they were posted, so
+    * once a job started after a reply is seen, every job of the reply has
+    * been too. */
+  private def withJobsByGroup[A](body: (String => Vector[Int]) => A): A = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tasksPerJob = new java.util.concurrent.ConcurrentHashMap[String, Vector[Int]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => tasksPerJob.merge(g, Vector(e.stageInfos.map(_.numTasks).sum), _ ++ _))
+    }
+    def jobsOf(group: String): Vector[Int] = {
+      val marker = s"marker-${System.nanoTime()}"
+      sc.setJobGroup(marker, null)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!tasksPerJob.containsKey(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(tasksPerJob.containsKey(marker), "listener never saw the marker job")
+      tasksPerJob.remove(group) match { case null => Vector.empty; case v => v }
+    }
+    sc.addSparkListener(listener)
+    try body(jobsOf) finally sc.removeSparkListener(listener)
+  }
+
   test("metadata hint parses to JobMeta and the hinted statement still runs") {
     import graft.sharing.JobMeta
     // pure parse: the wire form of the reference's --metadata flags
@@ -90,10 +118,15 @@ class QueryGatewaySpec extends SparkSpec {
     import graft.sharing.{BatchWindow, WorkSharingExecutor}
     val ex = new WorkSharingExecutor(spark)
     val win = new BatchWindow[Seq[String]](ex, windowSize = 2, maxWaitMs = 5000)
-    Tables.register(spark, sfDir) // windowed jobs run on the root session
-    val gw = new QueryGateway(spark, s => Tables.register(s, sfDir), batching = Some(win))
-    // no AQE coalescing, so a small ORDER BY keeps all its partitions
+    // no AQE coalescing, so a small ORDER BY keeps all its partitions; every
+    // connection, windowed or not, gets the same conf, so windowed members
+    // may merge and their replies can equal the unwindowed ones
     val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    def init(s: org.apache.spark.sql.SparkSession): Unit = {
+      Tables.register(s, sfDir); s.conf.set(coalesce, "false")
+    }
+    val gw = new QueryGateway(spark, init, batching = Some(win))
+    Tables.register(spark, sfDir) // the plan checks below run on the root session
     spark.conf.set(coalesce, "false")
     try {
       import scala.concurrent.{Await, Future}
@@ -123,9 +156,7 @@ class QueryGatewaySpec extends SparkSpec {
       assert(spark.sql(ordered).rdd.getNumPartitions > 1)
       val nested = "SELECT vec_id, embedding, CAST(NULL AS STRING) AS missing " +
         "FROM embeddings ORDER BY vec_id"
-      val plain = new QueryGateway(spark, s => {
-        Tables.register(s, sfDir); s.conf.set(coalesce, "false")
-      })
+      val plain = new QueryGateway(spark, init)
       try {
         val (sock, out, in) = connect(plain.boundPort)
         try Seq(grep, Seq(ordered, nested)).foreach { pair =>
@@ -153,7 +184,7 @@ class QueryGatewaySpec extends SparkSpec {
     // isolated on the session — sharing must never change answers.
     val ex = new WorkSharingExecutor(spark)
     val win = new BatchWindow[Seq[String]](ex, windowSize = 4, maxWaitMs = 1000)
-    Tables.register(spark, sfDir) // windowed jobs run on the root session
+    Tables.register(spark, sfDir) // the isolated answers run on the root session
     val gw = new QueryGateway(spark, s => Tables.register(s, sfDir),
       maxHintPriority = 9, batching = Some(win))
     // the adversarial statement (VERDICT r10 next-5): user-authored
@@ -251,13 +282,10 @@ class QueryGatewaySpec extends SparkSpec {
       val warnsMain = med.warns
       // opt-in rewrite under load (VERDICT r11 next-6): a second,
       // non-batched gateway on a REAL extensions session (the rewrite runs
-      // in the optimizer, so the session needs the production injection;
-      // the windowed path above runs statements on the executor's root
-      // session, where a per-connection SET cannot reach — the same
-      // documented trade as temp views). Each client opts in over the wire
-      // with plain SET, issues the naive all-pairs kernel, and must get the
-      // byte-identical isolated-naive answer while the rewrite counter
-      // proves the door actually executed.
+      // in the optimizer, so the session needs the production injection).
+      // Each client opts in over the wire with plain SET, issues the naive
+      // all-pairs kernel, and must get the byte-identical isolated-naive
+      // answer while the rewrite counter proves the door actually executed.
       // the BARE kernel (an aggregate above it would let column pruning
       // narrow the subtree out of canonical template equality); responses
       // compare as sorted sets since the two plans stream in different
@@ -366,7 +394,6 @@ class QueryGatewaySpec extends SparkSpec {
     // that second write waits for the client's ACK of `ok`, which Linux
     // delays by at least 40 ms
     import graft.sharing.{BatchWindow, WorkSharingExecutor}
-    Tables.register(spark, sfDir) // windowed jobs run on the root session
     val ex = new WorkSharingExecutor(spark)
     val win = new BatchWindow[Seq[String]](ex, windowSize = 1)
     val gw = new QueryGateway(spark, s => Tables.register(s, sfDir), batching = Some(win))
@@ -482,66 +509,59 @@ class QueryGatewaySpec extends SparkSpec {
       assert(expected.exists(l => !l.contains("\"txt\"")), "no row omits its NULL field")
       assert(reply == (("ok", expected, s"done ${expected.size}")), reply)
     }
-    // unwindowed: the statement runs on the connection's own session
+    // both modes run the statement, and the SET before it, on the
+    // connection's own session
     val sessions = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.SparkSession]()
     val gw = new QueryGateway(spark, s => sessions.add(s))
     try {
       val reply = answer(gw.boundPort)
-      check(reply, sessions.peek().sql(stmt).toJSON.collect().toList)
+      check(reply, sessions.poll().sql(stmt).toJSON.collect().toList)
     } finally gw.close()
-    // windowed: the statement, and the SET before it, run on the root session
-    val rootZone = spark.conf.get(tzKey)
     val ex = new WorkSharingExecutor(spark)
     val win = new BatchWindow[Seq[String]](ex, windowSize = 1)
-    val windowed = new QueryGateway(spark, _ => (), batching = Some(win))
+    val windowed = new QueryGateway(spark, s => sessions.add(s), batching = Some(win))
     try {
       val reply = answer(windowed.boundPort)
-      check(reply, spark.sql(stmt).toJSON.collect().toList)
-    } finally {
-      windowed.close(); win.close(); ex.shutdown(); spark.conf.set(tzKey, rootZone)
-    }
+      check(reply, sessions.poll().sql(stmt).toJSON.collect().toList)
+    } finally { windowed.close(); win.close(); ex.shutdown() }
   }
 
   test("an error in a later partition ends the streamed reply; the connection survives") {
-    val gw = new QueryGateway(spark, _ => ())
-    try {
+    // partition 6 of 8 holds ids 150000..174999; a collect that overflows
+    // maxBatchRows reads 1001 rows of each partition, so never reaches 160000
+    val failing = "SELECT CASE WHEN id = 160000 THEN raise_error('boom') ELSE id END AS v " +
+      "FROM range(0, 200000, 1, 8)"
+    def answers(gw: QueryGateway): (String, List[String], String) = {
       val (sock, out, in) = connect(gw.boundPort)
       try {
-        // partition 6 of 8 holds ids 150000..174999
-        out.println("SELECT CASE WHEN id = 150000 THEN raise_error('boom') ELSE id END AS v " +
-          "FROM range(0, 200000, 1, 8)")
-        val (head, rows, trailer) = readResponse(in)
-        assert(head == "ok")
-        assert(rows.size == 150000 && rows.head == "{\"v\":0}", rows.size)
-        assert(trailer.startsWith("error ") && trailer.contains("boom"), trailer)
+        out.println(failing)
+        val reply = readResponse(in)
         out.println("SELECT 1 AS one")
         assert(readResponse(in) == (("ok", List("{\"one\":1}"), "done 1")))
+        reply
       } finally sock.close()
-    } finally gw.close()
+    }
+    // a reply that fits is collected before any row is sent: `ok`, then
+    // the error
+    val collected = new QueryGateway(spark, _ => ())
+    try {
+      val (head, rows, trailer) = answers(collected)
+      assert(head == "ok" && rows.isEmpty, (head, rows.size))
+      assert(trailer.startsWith("error ") && trailer.contains("boom"), trailer)
+    } finally collected.close()
+    // one over the row bound streams: the partitions before the failing one
+    // go out first
+    val streamed = new QueryGateway(spark, _ => (), maxBatchRows = 1000)
+    try {
+      val (head, rows, trailer) = answers(streamed)
+      assert(head == "ok")
+      assert(rows.size == 150000 && rows.head == "{\"v\":0}", rows.size)
+      assert(trailer.startsWith("error ") && trailer.contains("boom"), trailer)
+    } finally streamed.close()
   }
 
   test("an unwindowed reply reads one partition per job and stops reading at the row cap") {
     // a statement's jobs carry its id, gw-<conn>-<n>, as their job group
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tasksPerJob = new java.util.concurrent.ConcurrentHashMap[String, Vector[Int]]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => tasksPerJob.merge(g, Vector(e.stageInfos.map(_.numTasks).sum), _ ++ _))
-    }
-    // events reach a listener in the order they were posted, so once a job
-    // started after the reply is seen, every job of the reply has been too
-    def jobsOf(group: String): Vector[Int] = {
-      val marker = s"marker-${System.nanoTime()}"
-      sc.setJobGroup(marker, null)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!tasksPerJob.containsKey(marker) && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      assert(tasksPerJob.containsKey(marker), "listener never saw the marker job")
-      tasksPerJob.getOrDefault(group, Vector.empty)
-    }
     def reply(gw: QueryGateway): (String, Int, String) = {
       val (sock, out, in) = connect(gw.boundPort)
       try {
@@ -550,20 +570,153 @@ class QueryGatewaySpec extends SparkSpec {
         (head, rows.size, trailer)
       } finally sock.close()
     }
-    sc.addSparkListener(listener)
-    try {
+    withJobsByGroup { jobsOf =>
+      // a reply that fits the row bound is collected by one job, capped or not
       val whole = new QueryGateway(spark, _ => ())
       try {
         assert(reply(whole) == (("ok", 200000, "done 200000")))
-        assert(jobsOf("gw-1-1") == Vector.fill(8)(1))
+        assert(jobsOf("gw-1-1") == Vector(8))
       } finally whole.close()
-      tasksPerJob.clear()
       val capped = new QueryGateway(spark, _ => (), maxRows = 100)
       try {
         assert(reply(capped) == (("ok", 100, "done 100 truncated")))
-        assert(jobsOf("gw-1-1") == Vector(1))
+        assert(jobsOf("gw-1-1") == Vector(8))
       } finally capped.close()
-    } finally sc.removeSparkListener(listener)
+      // over the row bound: the collect attempt is cancelled, then the reply
+      // streams one partition per job and stops at the row cap, 30000 rows
+      // into partition 1
+      val streamed = new QueryGateway(spark, _ => (), maxRows = 30000, maxBatchRows = 1000)
+      try {
+        assert(reply(streamed) == (("ok", 30000, "done 30000 truncated")))
+        assert(jobsOf("gw-1-1") == Vector(8, 1, 1))
+      } finally streamed.close()
+    }
+  }
+
+  test("sorted unwindowed replies equal df.toJSON line for line, sorted on the driver") {
+    val zone = "Asia/Kolkata"
+    val sessions = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.SparkSession]()
+    def init(s: org.apache.spark.sql.SparkSession): Unit = {
+      s.conf.set("spark.sql.session.timeZone", zone)
+      s.sql("CREATE TEMP VIEW sorted_src AS SELECT id, IF(id % 7 = 0, NULL, id % 50) AS k, " +
+        "timestamp_seconds(1700000000 + id * 3599) AS ts, concat('s', id % 13) AS s " +
+        "FROM range(0, 3000, 1, 6)")
+      sessions.add(s)
+    }
+    // every order is total, so a stable sort on the driver and Spark's own
+    // sort agree on every line. With each statement, the jobs it runs when
+    // its sort runs on the driver: no sampling job or range shuffle, so a
+    // plain sort runs one job and a GROUP BY its aggregate's two. nvl is
+    // rewritten by the optimizer before Spark evaluates it, so a projection
+    // of it above the sort keeps the whole statement in Spark.
+    val cases = Seq(
+      "SELECT id, ts FROM sorted_src ORDER BY ts" -> Some(1),
+      "SELECT id, k FROM sorted_src ORDER BY k DESC NULLS LAST, id" -> Some(1),
+      "SELECT id, k FROM sorted_src ORDER BY k NULLS FIRST, id DESC" -> Some(1),
+      "SELECT s, ts FROM sorted_src ORDER BY id DESC" -> Some(1), // Project over Sort
+      "SELECT s, count(*) AS n, max(ts) AS last FROM sorted_src GROUP BY s ORDER BY s DESC" -> Some(2),
+      "SELECT nvl(k, -1) AS k2 FROM (SELECT k, id FROM sorted_src ORDER BY id DESC)" -> None)
+    val sorted = cases.map(_._1)
+    def replies(gw: QueryGateway): (org.apache.spark.sql.SparkSession, Seq[(String, List[String], String)]) = {
+      val (sock, out, in) = connect(gw.boundPort)
+      try {
+        val answered = sorted.map { q => out.println(q); readResponse(in) }
+        (sessions.poll(), answered)
+      } finally sock.close()
+    }
+    def expected(session: org.apache.spark.sql.SparkSession, q: String) = {
+      val lines = session.sql(q).toJSON.collect().toList
+      ("ok", lines, s"done ${lines.size}")
+    }
+    withJobsByGroup { jobsOf =>
+      val gw = new QueryGateway(spark, init)
+      try {
+        val (session, answered) = replies(gw)
+        assert(answered.head._2.head.contains("+05:30"), answered.head._2.head)
+        cases.zip(answered).zipWithIndex.foreach { case (((q, jobs), reply), i) =>
+          assert(reply == expected(session, q), q)
+          val ran = jobsOf(s"gw-1-${i + 1}").size
+          jobs.foreach(n => assert(ran == n, q))
+        }
+      } finally gw.close()
+      // over the row bound, a sorted reply falls back to streaming
+      val streamed = new QueryGateway(spark, init, maxBatchRows = 1000)
+      try {
+        val (session, answered) = replies(streamed)
+        sorted.zip(answered).foreach { case (q, reply) => assert(reply == expected(session, q), q) }
+        assert(jobsOf("gw-1-1").size > 1)
+      } finally streamed.close()
+    }
+  }
+
+  test("statements arrive as UTF-8") {
+    val gw = new QueryGateway(spark, _ => ())
+    try {
+      val (sock, _, in) = connect(gw.boundPort)
+      try {
+        sock.getOutputStream.write("SELECT 'caf\u00e9' AS x\n".getBytes(UTF_8))
+        sock.getOutputStream.flush()
+        assert(readResponse(in) == (("ok", List("{\"x\":\"caf\u00e9\"}"), "done 1")))
+      } finally sock.close()
+    } finally gw.close()
+  }
+
+  test("a windowed statement runs under its id as its Spark job group") {
+    import graft.sharing.{BatchWindow, WorkSharingExecutor}
+    val ex = new WorkSharingExecutor(spark)
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 1)
+    val gw = new QueryGateway(spark, _ => (), batching = Some(win))
+    try withJobsByGroup { jobsOf =>
+      val (sock, out, in) = connect(gw.boundPort)
+      try {
+        out.println("SELECT id FROM range(0, 1000, 1, 4)")
+        assert(readResponse(in)._3 == "done 1000")
+      } finally sock.close()
+      assert(jobsOf("gw-1-1").nonEmpty)
+    } finally { gw.close(); win.close(); ex.shutdown() }
+  }
+
+  test("a windowed client's temp view and SET reach neither another client nor the root session") {
+    import graft.sharing.{BatchWindow, WorkSharingExecutor}
+    val key = "spark.sql.shuffle.partitions"
+    val rootValue = spark.conf.get(key)
+    val ex = new WorkSharingExecutor(spark)
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 1)
+    val gw = new QueryGateway(spark, _ => (), batching = Some(win))
+    try {
+      val (sa, oa, ia) = connect(gw.boundPort)
+      val (sb, ob, ib) = connect(gw.boundPort)
+      try {
+        oa.println("CREATE OR REPLACE TEMP VIEW only_a AS SELECT 42 AS secret")
+        assert(readResponse(ia)._1 == "ok")
+        oa.println("SELECT secret FROM only_a")
+        assert(readResponse(ia) == (("ok", List("{\"secret\":42}"), "done 1")))
+        ob.println("SELECT secret FROM only_a")
+        assert(readResponse(ib)._1.startsWith("error "))
+        assert(!spark.catalog.tableExists("only_a"))
+        def bValue(): List[String] = { ob.println(s"SET $key"); readResponse(ib)._2 }
+        val before = bValue()
+        oa.println(s"SET $key=1")
+        assert(readResponse(ia)._2 == List(s"{\"key\":\"$key\",\"value\":\"1\"}"))
+        assert(bValue() == before && !before.head.contains("\"value\":\"1\""), before)
+        assert(spark.conf.get(key) == rootValue)
+      } finally { sa.close(); sb.close() }
+    } finally { gw.close(); win.close(); ex.shutdown(); spark.conf.set(key, rootValue) }
+  }
+
+  test("a view that sessionInit registers resolves in its connection's windowed statements") {
+    import graft.sharing.{BatchWindow, WorkSharingExecutor}
+    val ex = new WorkSharingExecutor(spark)
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 1)
+    val gw = new QueryGateway(spark,
+      s => s.sql("CREATE TEMP VIEW init_only AS SELECT 7 AS seven"), batching = Some(win))
+    try {
+      val (sock, out, in) = connect(gw.boundPort)
+      try {
+        out.println("SELECT seven FROM init_only")
+        assert(readResponse(in) == (("ok", List("{\"seven\":7}"), "done 1")))
+      } finally sock.close()
+    } finally { gw.close(); win.close(); ex.shutdown() }
   }
 
   test("connections are catalog-isolated but share the SparkContext") {

@@ -63,6 +63,17 @@ class AutoMergeSpec extends SparkSpec {
     assert(unmerged == Seq("join"))
   }
 
+  test("detect merges only statements built on sessions with equal confs") {
+    def q(f: String) = s"SELECT count(*) AS n FROM parquet.`$sfDir/lineitem.parquet` WHERE $f"
+    val Seq(a, b, c) = Seq.fill(3)(spark.newSession())
+    val ansi = "spark.sql.ansi.enabled"
+    c.conf.set(ansi, (!c.conf.get(ansi).toBoolean).toString)
+    val (groups, unmerged) = AutoMerge.detect(Seq("a" -> a.sql(q("l_tax > 0.05")),
+      "b" -> b.sql(q("l_returnflag = 'R'")), "c" -> c.sql(q("l_quantity < 10"))))
+    assert(groups.map(_.map(_.name)) == Seq(Seq("a", "b")))
+    assert(unmerged == Seq("c"))
+  }
+
   test("metamorphic: auto-merged window results == isolated results") {
     val groups = mergedEqualsIsolated(Seq(
       "returned" -> (() => returned), "taxed" -> (() => taxed),

@@ -345,8 +345,9 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally { ex.shutdown(); spark.catalog.clearCache() }
     // a meta-result over the budget runs its members unmerged
     val wc = groups(1)
-    assert(AutoMerge.collectWithin(org.apache.spark.sql.GraftSqlShim.ofRows(spark,
-      AutoMerge.metaPlan(wc)), 64L).isEmpty)
+    val over = AutoMerge.collectWithin(org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      AutoMerge.metaPlan(wc)), 64L)
+    assert(!over.complete && over.rows.isEmpty)
     val tiny = new WorkSharingExecutor(spark, budgetBytes = 64L)
     try window(mix, tiny) finally tiny.shutdown()
   }
