@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.execution.SQLExecution
 
-import graft.sharing.AutoMerge
+import graft.sharing.{AutoMerge, ByteBudget}
 
 /** Thin SQL-over-TCP gateway — the modern shape of the reference's socket
   * front-end.
@@ -34,22 +34,28 @@ import graft.sharing.AutoMerge
   *
   * An unwindowed reply is computed after `ok` is flushed, by
   * [[QueryGateway.replyJson]]: when its rows fit `min(maxRows, maxBatchRows)`
-  * rows and [[QueryGateway.CollectBytes]], one Spark job collects them, and a
-  * top-level ORDER BY and the projection above it run on the driver.
+  * rows and the bytes it may draw (below), one Spark job collects them, and
+  * a top-level ORDER BY and the projection above it run on the driver.
   * A reply that does not fit streams as internal rows through
   * [[QueryGateway.streamJson]]: one job per partition, and one partition's
   * compact row bytes on the driver at a time, so a result bigger than driver
   * memory still flows; the trailer carries the count that a pre-counted
   * header would have forced us to materialize for. Windowed results are
   * taken whole, at most `min(maxRows, maxBatchRows)` rows plus one, by
-  * [[QueryGateway.takeJson]]. Driver memory per statement: an unwindowed
-  * collect holds about `CollectBytes` of compact rows at most (each task
-  * stops once its own rows pass it, and the driver cancels the job once
-  * their sum does), a streamed reply one partition's, and a windowed reply
-  * `min(maxRows, maxBatchRows) + 1` rows per partition of a take's batch. `maxRows` bounds what one
-  * statement may send, and reading stops at the cap. Every path encodes each row on the driver with
-  * the one encoder, `GraftSqlShim.jsonLines`, into the line `df.toJSON`
+  * [[QueryGateway.takeJson]]. `maxRows` bounds what one statement may send,
+  * and reading stops at the cap. Every path encodes each row on the driver
+  * with the one encoder, `GraftSqlShim.jsonLines`, into the line `df.toJSON`
   * would give.
+  *
+  * Driver memory. The rows every unwindowed collect in the JVM keeps are
+  * drawn on one budget, [[QueryGateway.CollectPoolBytes]], at most
+  * [[QueryGateway.CollectBytes]] of compact row bytes per statement, and
+  * given back when the statement ends; a reply that cannot draw its rows
+  * streams instead. Beyond what it keeps, a collect briefly holds the task
+  * results the driver fetched before its cancel took effect, each at most
+  * `CollectBytes` (a task whose rows pass that sends none). A streamed
+  * reply holds one partition's rows, and a windowed reply
+  * `min(maxRows, maxBatchRows) + 1` rows per partition of a take's batch.
   *
   * An error after `ok` is sent as the `error` trailer. A collected reply
   * fails before any row is sent, so its client sees `ok` and then the
@@ -72,7 +78,9 @@ import graft.sharing.AutoMerge
   * views and conf, and its own FAIR scheduler pool so one client's scan
   * cannot starve another (reference intent: .../FIFOStrategy.scala:107-111).
   * Every statement, windowed or not, is parsed and analyzed on its
-  * connection's session, so a command or SET runs there, once.
+  * connection's session, so a command or SET runs there, once. The
+  * session is the connection thread's active one, so an expression the
+  * driver evaluates there reads the connection's conf.
   */
 final class QueryGateway(
     root: SparkSession,
@@ -122,6 +130,7 @@ final class QueryGateway(
 
   private def handle(sock: Socket, id: Long): Unit = {
     val session = root.newSession()
+    SparkSession.setActiveSession(session)
     sessionInit(session)
     val sc = session.sparkContext
     sc.setLocalProperty("spark.scheduler.pool", s"graft-client-$id")
@@ -140,6 +149,7 @@ final class QueryGateway(
         if (line.trim.nonEmpty) {
           stmtNo += 1
           val stmtId = s"gw-$id-$stmtNo"
+          val lease = QueryGateway.collectBudget.lease(QueryGateway.CollectBytes)
           try {
             val (meta, sql) = QueryGateway.parseMeta(line)
             // per-statement scheduling class (the reference's --metadata
@@ -176,7 +186,7 @@ final class QueryGateway(
                   win.submit(job), scala.concurrent.duration.Duration(30, "min")).iterator
               case None =>
                 // by-name: the reply's jobs run at the first hasNext, after `ok`
-                Iterator.empty ++ QueryGateway.replyJson(df, maxRows, rowCap)
+                Iterator.empty ++ QueryGateway.replyJson(df, maxRows, rowCap, lease)
             }
             out.println("ok")
             out.flush() // the client's ack must not wait on the audit below
@@ -205,7 +215,7 @@ final class QueryGateway(
             case e: Throwable =>
               out.println("error " + Option(e.getMessage).getOrElse(e.toString)
                 .replaceAll("\\s+", " ").take(500))
-          } finally sc.clearJobGroup()
+          } finally { sc.clearJobGroup(); lease.close() }
           out.flush()
         }
         line = in.readLine()
@@ -250,33 +260,38 @@ object DeadlineTelemetry {
 }
 
 object QueryGateway {
-  /** The most compact row bytes an unwindowed reply collects on the driver
+  /** The most compact row bytes one unwindowed reply collects on the driver
     * in one job; a bigger reply streams. */
   val CollectBytes: Long = 64L << 20
+
+  /** The most compact row bytes all unwindowed collects in the JVM keep on
+    * the driver at once: a quarter of the driver's max heap. */
+  val CollectPoolBytes: Long = Runtime.getRuntime.maxMemory / 4
+
+  /** The budget every gateway's collects draw on, [[CollectPoolBytes]]. */
+  val collectBudget: ByteBudget = new ByteBudget(CollectPoolBytes)
 
   /** Every row of `df`, at most `maxRows`, as the JSON lines `df.toJSON`
     * would give. When its rows fit `rowCap` rows and [[CollectBytes]], one
     * job collects them: the plan below a top-level global ORDER BY (see
     * `AutoMerge.topOf`) runs in the job, and the sort and the projections
     * above it run on the driver (`AutoMerge.applyTop`); a plan with no such
-    * sort runs as it is, so a command's result is read, not re-run. When
-    * they do not fit, or the plan's size estimate alone exceeds the budget,
-    * the reply streams through [[streamJson]]; except that an unsorted reply
-    * over a `rowCap` of `maxRows` sends the first `maxRows` rows it
-    * collected, the ones streaming would send, and the `truncated` trailer
-    * follows. */
-  def replyJson(df: DataFrame, maxRows: Long, rowCap: Int): Iterator[String] = {
+    * sort runs as it is, so a command's result is read, not re-run. The
+    * collected rows are drawn on `lease`, which the caller closes when the
+    * reply is sent. When they do not fit, the lease is closed and the reply
+    * streams through [[streamJson]]; except that an unsorted reply over a
+    * `rowCap` of `maxRows` whose first `maxRows + 1` rows were collected
+    * sends its first `maxRows`, the ones streaming would send, and the
+    * `truncated` trailer follows. */
+  def replyJson(df: DataFrame, maxRows: Long, rowCap: Int,
+                lease: ByteBudget#Lease): Iterator[String] = {
     val top = AutoMerge.topOf(df.queryExecution.analyzed)._1.dropWhile(!_.isInstanceOf[Sort])
     val body = top.headOption.fold(df)(s => GraftSqlShim.ofRows(df.sparkSession, s.children.head))
-    val collected =
-      if (body.queryExecution.optimizedPlan.stats.sizeInBytes > CollectBytes) None
-      else Some(AutoMerge.collectWithin(body, CollectBytes, rowCap))
-    collected match {
-      case Some(c) if c.complete => GraftSqlShim.jsonLines(df, AutoMerge.applyTop(c.rows, top).iterator)
-      case Some(c) if top.isEmpty && rowCap == maxRows && c.rows.length > maxRows =>
-        GraftSqlShim.jsonLines(df, c.rows.iterator)
-      case _ => streamJson(df)
-    }
+    val c = AutoMerge.collectWithin(body, lease, rowCap)
+    if (c.complete) GraftSqlShim.jsonLines(df, AutoMerge.applyTop(c.rows, top).iterator)
+    else if (top.isEmpty && rowCap == maxRows && c.rows.length > maxRows)
+      GraftSqlShim.jsonLines(df, c.rows.iterator)
+    else { lease.close(); streamJson(df) }
   }
 
   /** Every row of `df`, as the JSON lines `df.toJSON` would give, read the

@@ -1,5 +1,8 @@
 package graft.sharing
 
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.annotation.tailrec
 import scala.collection.mutable
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
@@ -203,21 +206,31 @@ object AutoMerge {
   final case class Collected(rows: Array[InternalRow], complete: Boolean)
 
   /** Run `df` in one job over all its partitions and bring its rows to the
-    * driver as UnsafeRows, as far as they fit `maxRows` and `budgetBytes`.
-    * Each task sends at most `maxRows + 1` rows and stops reading once its
-    * own rows pass the budget. The driver cancels the job as soon as the rows
-    * it holds pass the budget, or the partitions it holds from the first on
-    * hold more than `maxRows` rows; a failure after the rows passed either
-    * limit is ignored, as the result is incomplete anyway.
-    *
-    * Complete: every row. Over the row limit: the first `maxRows + 1` rows,
-    * when the partitions they lie in arrived, else fewer. Over the budget: no
-    * rows. A plan whose rows are already on the driver (a local relation, a
-    * command's result) is read there, with no job. */
+    * driver as UnsafeRows, as far as they fit `maxRows` and `budgetBytes`;
+    * the budget is the collect's own. */
   def collectWithin(df: DataFrame, budgetBytes: Long,
-                    maxRows: Int = Int.MaxValue - 1): Collected = {
+                    maxRows: Int = Int.MaxValue - 1): Collected =
+    collectWithin(df, new ByteBudget(budgetBytes).lease(budgetBytes), maxRows)
+
+  /** Run `df` in one job over all its partitions and bring its rows to the
+    * driver as UnsafeRows, as far as they fit `maxRows` and what `lease`
+    * lets it draw. Each task sends at most `maxRows + 1` rows; a task whose
+    * own rows pass the lease's cap stops reading and sends none, only their
+    * size. The driver draws each task's bytes on `lease` before it keeps the
+    * rows, and cancels the job as soon as a draw fails or the rows it holds
+    * number more than `maxRows`; a failure after either is ignored, as the
+    * result is incomplete anyway. The rows it returns stay drawn on `lease`
+    * until the caller closes it.
+    *
+    * Complete: every row. Over the row limit: the first `maxRows + 1` rows
+    * when the partitions they lie in arrived before the job ended, else
+    * fewer. Over the lease: no rows, and the lease is closed. A plan whose
+    * rows are already on the driver (a local relation, a command's result)
+    * is read there, with no job and no draw. */
+  def collectWithin(df: DataFrame, lease: ByteBudget#Lease, maxRows: Int): Collected = {
     val qe = df.queryExecution
     val schema: StructType = df.schema
+    val taskBytes = lease.cap
     SQLExecution.withNewExecutionId(qe, Some("graft-collect")) {
       qe.executedPlan match {
         case local @ (_: LocalTableScanExec | _: CommandResultExec) =>
@@ -228,46 +241,45 @@ object AutoMerge {
             val proj = UnsafeProjection.create(schema)
             val buf = mutable.ArrayBuffer.empty[InternalRow]
             var bytes = 0L
-            while (bytes <= budgetBytes && buf.length <= maxRows && it.hasNext) {
+            while (bytes <= taskBytes && buf.length <= maxRows && it.hasNext) {
               val r = proj(it.next()).copy()
               bytes += r.getSizeInBytes
               buf += r
             }
-            Iterator.single((buf.toArray, bytes))
+            Iterator.single((if (bytes > taskBytes) Array.empty[InternalRow] else buf.toArray, bytes))
           }
           val n = capped.getNumPartitions
           val parts = new Array[Array[InternalRow]](n)
-          var rows, bytes, prefixRows = 0L
-          var prefix = 0 // partitions held from the first on
+          var rows = 0L
+          var overBytes = false
           var job: SimpleFutureAction[Unit] = null
           // the handler runs on the scheduler's thread, one task at a time,
           // and cancels the job there; holding the lock until `job` is set
-          // keeps an early handler waiting for it
+          // keeps an early handler waiting for it. Results that arrive after
+          // a cancel for rows are still kept: they may complete the prefix.
           parts.synchronized {
             job = df.sparkSession.sparkContext.submitJob(capped,
               (it: Iterator[(Array[InternalRow], Long)]) => it.next(), 0 until n,
               (i: Int, res: (Array[InternalRow], Long)) => parts.synchronized {
-                if (!job.isCancelled) {
-                  parts(i) = res._1
-                  rows += res._1.length
-                  bytes += res._2
-                  while (prefix < n && parts(prefix) != null) {
-                    prefixRows += parts(prefix).length
-                    prefix += 1
-                  }
-                  if (bytes > budgetBytes || prefixRows > maxRows) job.cancel()
+                if (!overBytes) {
+                  if (lease.tryTake(res._2)) {
+                    parts(i) = res._1
+                    rows += res._1.length
+                  } else overBytes = true
+                  if ((overBytes || rows > maxRows) && !job.isCancelled) job.cancel()
                 }
               }, ())
           }
           Await.ready(job, Duration.Inf)
           parts.synchronized {
             job.value.get match {
-              case Failure(e) if rows <= maxRows && bytes <= budgetBytes => throw e
+              case Failure(e) if rows <= maxRows && !overBytes => throw e
               case _ =>
             }
-            if (bytes > budgetBytes) Collected(Array.empty, complete = false)
+            if (overBytes) { lease.close(); Collected(Array.empty, complete = false) }
             else if (rows > maxRows)
-              Collected(parts.iterator.take(prefix).flatten.take(maxRows + 1).toArray, complete = false)
+              Collected(parts.iterator.takeWhile(_ != null).flatten.take(maxRows + 1).toArray,
+                complete = false)
             else Collected(parts.flatten, complete = true)
           }
       }
@@ -288,5 +300,36 @@ object AutoMerge {
     val rows = applyTop(kept.map(r => slice(r).copy(): InternalRow), m.top)
     val out = m.top.lastOption.fold(aggOut)(_.output)
     LocalRelation(out, rows.toSeq)
+  }
+}
+
+/** Bytes that concurrent collects hold on the driver, all drawn on one
+  * `capacity`. Each collect draws through its own [[ByteBudget#Lease]],
+  * which caps its share and gives everything it drew back at `close`. */
+final class ByteBudget(val capacity: Long) {
+  private val used = new AtomicLong()
+
+  /** Bytes drawn and not yet given back. */
+  def inUse: Long = used.get
+
+  @tailrec private def take(n: Long): Boolean = {
+    val u = used.get
+    u + n <= capacity && (used.compareAndSet(u, u + n) || take(n))
+  }
+
+  def lease(cap: Long): Lease = new Lease(cap)
+
+  final class Lease(val cap: Long) {
+    private var held = 0L
+
+    /** Draw `n` more bytes; false, drawing nothing, when they would pass
+      * `cap` or the budget. */
+    def tryTake(n: Long): Boolean = synchronized {
+      val ok = held + n <= cap && take(n)
+      if (ok) held += n
+      ok
+    }
+
+    def close(): Unit = synchronized { used.addAndGet(-held); held = 0 }
   }
 }

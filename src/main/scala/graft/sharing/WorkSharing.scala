@@ -483,15 +483,19 @@ final class WorkSharingExecutor(
     // eager-build job (checkpointing operators) pay its build twice.
     val builtByName = built.toMap
     // a job's action runs under its name as the Spark job group (a gateway
-    // statement's id), cleared afterwards with the pool
-    def inPool[T](pool: String, group: Option[String])(body: => T): T = {
+    // statement's id), cleared afterwards with the pool, and with its
+    // session active, so what the driver evaluates reads that session's conf
+    def inPool[T](pool: String, group: Option[String], session: SparkSession)(body: => T): T = {
       val sc = spark.sparkContext
       sc.setLocalProperty("spark.scheduler.pool", pool)
       group.foreach(sc.setJobGroup(_, null))
-      try body finally { sc.setLocalProperty("spark.scheduler.pool", null); sc.clearJobGroup() }
+      try org.apache.spark.sql.GraftSqlShim.withActive(session)(body)
+      finally { sc.setLocalProperty("spark.scheduler.pool", null); sc.clearJobGroup() }
     }
+    def sessionOf(name: String) = builtByName(name).sparkSession
     val singleFutures = unmergedNames.map(byName).map { j =>
-      j.name -> Future(inPool(j.meta.pool, Some(j.name))(j.action(builtByName(j.name))))
+      j.name -> Future(inPool(j.meta.pool, Some(j.name), sessionOf(j.name))(
+        j.action(builtByName(j.name))))
     }
     // each merge group = one meta-job collected once, on its first member's
     // session (merged members' confs are equal); its members' actions then
@@ -500,17 +504,19 @@ final class WorkSharingExecutor(
     val memberFutures = mergeGroups.flatMap { group =>
       val pool = group.map(m => byName(m.name).meta).maxBy(_.priority).pool
       def frame(name: String, p: LogicalPlan) =
-        org.apache.spark.sql.GraftSqlShim.ofRows(builtByName(name).sparkSession, p)
-      val meta = Future(inPool(pool, None)(AutoMerge.collectWithin(
+        org.apache.spark.sql.GraftSqlShim.ofRows(sessionOf(name), p)
+      val meta = Future(inPool(pool, None, sessionOf(group.head.name))(AutoMerge.collectWithin(
         frame(group.head.name, AutoMerge.metaPlan(group)), budgetBytes)))
         .map(c => Option.when(c.complete)(c.rows))
         .recover { case NonFatal(_) => None }
       group.indices.map { i =>
         val j = byName(group(i).name)
         j.name -> meta.map { rows =>
-          val df = rows.flatMap(r => Try(frame(j.name, AutoMerge.split(r, group, i))).toOption)
-            .getOrElse(builtByName(j.name))
-          inPool(j.meta.pool, Some(j.name))(j.action(df))
+          inPool(j.meta.pool, Some(j.name), sessionOf(j.name)) {
+            val df = rows.flatMap(r => Try(frame(j.name, AutoMerge.split(r, group, i))).toOption)
+              .getOrElse(builtByName(j.name))
+            j.action(df)
+          }
         }
       }
     }

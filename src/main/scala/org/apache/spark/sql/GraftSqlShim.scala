@@ -19,6 +19,11 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Run `body` with `spark` as the thread's active session, so the conf
+    * that an expression or encoder reads on the driver is `spark`'s. */
+  def withActive[T](spark: SparkSession)(body: => T): T =
+    spark.asInstanceOf[classic.SparkSession].withActive(body)
+
   /** `rows` of `df`'s result as JSON lines, encoded on the driver exactly
     * as `df.toJSON` encodes them in its tasks: the same generator over the
     * same schema, with no options but the session time zone. One generator
