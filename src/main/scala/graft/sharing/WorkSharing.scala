@@ -101,13 +101,13 @@ object FairPools {
   }
 }
 
-/** A scan relation shared by >= 2 jobs in a window. `relation` is the exact
-  * LogicalRelation node from the first job's analyzed plan — caching wraps it
-  * directly so CacheManager substitution is immune to path-string spelling. */
-final case class ScanGroup(fingerprint: String, format: String,
-                           paths: Seq[String], schemaDDL: String,
-                           sizeBytes: BigInt, jobNames: Seq[String],
-                           relation: LogicalPlan)
+/** A scan relation shared by >= 2 jobs in a window. `fingerprint` is its
+  * [[ShareDetector.scanLeaves]] identity (format and root paths, or `v2:`,
+  * table name and options). `relation` is the exact scan leaf from the first
+  * job's analyzed plan — caching wraps it directly so CacheManager
+  * substitution is immune to path-string spelling. */
+final case class ScanGroup(fingerprint: String, sizeBytes: BigInt,
+                           jobNames: Seq[String], relation: LogicalPlan)
 
 object ShareDetector {
 
@@ -154,88 +154,13 @@ object ShareDetector {
         entry._2 += name
       }
     }
-    byScan.iterator.collect {
-      case (fp, (lr: LogicalRelation, names)) if names.size >= 2 =>
-        val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-        ScanGroup(fp,
-          format = fs.fileFormat.toString.toLowerCase.stripSuffix("format"),
-          paths = fs.location.rootPaths.map(_.toString),
-          schemaDDL = fs.dataSchema.toDDL,
-          sizeBytes = lr.stats.sizeInBytes,
-          jobNames = names.toSeq,
-          relation = lr)
-      case (fp, (r: DataSourceV2Relation, names)) if names.size >= 2 =>
-        ScanGroup(fp,
-          format = "v2",
-          paths = Seq(r.table.name()),
-          schemaDDL = r.schema.toDDL,
-          sizeBytes = v2Size(r),
-          jobNames = names.toSeq,
-          relation = r)
+    byScan.iterator.collect { case (fp, (leaf, names)) if names.size >= 2 =>
+      val size = leaf match {
+        case r: DataSourceV2Relation => v2Size(r)
+        case lr => lr.stats.sizeInBytes
+      }
+      ScanGroup(fp, size, names.toSeq, leaf)
     }.toSeq
-  }
-
-  /** A non-leaf subplan shared by >= 2 jobs: the subplan-granularity
-    * upgrade of [[detect]] for PURE plans (fragments that a build-time
-    * checkpoint has erased must be declared instead — see runBatch). */
-  final case class FragmentGroup(fingerprint: String, plan: LogicalPlan,
-                                 jobNames: Seq[String], nNodes: Int)
-
-  /** Canonically-equal expensive subtrees (Join / Aggregate / Window roots)
-    * appearing in >= 2 jobs' analyzed plans. Only deterministic, fully
-    * declarative subtrees qualify (no LogicalRDD leaves — those are
-    * per-build identities that can never match a sibling). Nested shared
-    * fragments are dropped in favor of the largest enclosing shared one. */
-  def fragments(jobs: Seq[(String, DataFrame)]): Seq[FragmentGroup] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate => LAgg, Join => LJoin, Window => LWin}
-    def expensive(p: LogicalPlan): Boolean = p match {
-      case _: LJoin | _: LAgg | _: LWin => true
-      case _ => false
-    }
-    def pure(p: LogicalPlan): Boolean =
-      !p.exists(n => n.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] ||
-        n.expressions.exists(e => e.exists(!_.deterministic)))
-    // Group by semantic hash BUT confirm with canonicalized-plan equality
-    // (sameResult) before merging (ADVICE r6): a bare hashCode key would
-    // conflate two distinct subplans on collision — the second plan would
-    // silently never be cached and its jobs would be attributed to the
-    // wrong group. Result correctness was never at stake (substitution
-    // goes through CacheManager plan equality), but the sharing DECISION
-    // must not be collision-dependent. Colliding-but-different plans get
-    // "-k" suffixed fingerprints so downstream cache keys stay distinct.
-    final case class Entry(plan: LogicalPlan, names: mutable.ListBuffer[String])
-    val byHash = mutable.LinkedHashMap.empty[Int, mutable.ListBuffer[Entry]]
-    jobs.foreach { case (name, df) =>
-      val subs = df.queryExecution.analyzed.collect {
-        case p if expensive(p) && pure(p) => p
-      }
-      val seen = mutable.ListBuffer.empty[LogicalPlan] // per-job dedup, exact
-      subs.foreach { p =>
-        if (!seen.exists(_.sameResult(p))) {
-          seen += p
-          val bucket = byHash.getOrElseUpdate(p.semanticHash(), mutable.ListBuffer.empty)
-          bucket.find(_.plan.sameResult(p)) match {
-            case Some(e) => e.names += name
-            case None    => bucket += Entry(p, mutable.ListBuffer(name))
-          }
-        }
-      }
-    }
-    val shared = byHash.iterator.flatMap { case (h, entries) =>
-      entries.zipWithIndex.collect {
-        case (e, i) if e.names.size >= 2 =>
-          val fp = if (entries.size == 1) h.toString else s"$h-$i"
-          FragmentGroup(fp, e.plan, e.names.toSeq, e.plan.collect { case _ => 1 }.size)
-      }
-    }.toSeq.sortBy(-_.nNodes)
-    // keep maximal fragments only: a subtree of an already-kept shared
-    // fragment is computed inside that fragment's cache anyway
-    val kept = mutable.ListBuffer.empty[FragmentGroup]
-    shared.foreach { g =>
-      val nested = kept.exists(k => k.plan.exists(_.sameResult(g.plan)))
-      if (!nested) kept += g
-    }
-    kept.toSeq
   }
 }
 
@@ -314,41 +239,30 @@ object FragmentGate {
   def clear(): Unit = probes.clear()
 }
 
-/** Cache-or-not policy: stats-backed replacement for the reference's
-  * random-coin ScanCachingCM. */
-final class SharePolicy(budgetBytes: Long) {
-  /** Share (cache) iff the relation fits the remaining budget. Groups are
-    * considered in descending (reuseCount * size) order — best payoff first. */
-  def choose(groups: Seq[ScanGroup]): Seq[ScanGroup] = {
-    var remaining = BigInt(budgetBytes)
-    groups
-      .sortBy(g => -(g.sizeBytes * g.jobNames.size))
-      .filter { g =>
-        val ok = g.sizeBytes <= remaining
-        if (ok) remaining -= g.sizeBytes
-        ok
-      }
-  }
-}
-
-/** Batched work-sharing executor over one shared SparkSession.
-  *
-  * With `autoMerge` on (the default), the window first runs [[AutoMerge]]:
-  * aggregate jobs that differ only in the filter over a shared scan collapse
-  * into one FILTER-aggregate meta-plan, collected once within `budgetBytes`
-  * and split per member on the driver; everything else executes unmerged but
-  * still shares cached scans — the two rewrites composing is the reference's
-  * hybrid slot (§2.1 #19, a stub there). A group whose meta-result overflows
-  * the budget, or whose meta-plan fails, runs its members unmerged. */
+/** Batched work-sharing executor over one shared SparkSession. A window
+  * runs in this order:
+  *  1. each declared fragment is materialized into the cache, unless
+  *     [[FragmentGate]]'s measured economics reject it;
+  *  2. the jobs build;
+  *  3. with `autoMerge` on (the default), [[AutoMerge]] picks the aggregate
+  *     jobs that differ only in the filter over a shared scan: each such
+  *     group runs as one FILTER-aggregate meta-plan, collected once within
+  *     `budgetBytes` and split per member with no further Spark job;
+  *  4. [[ShareDetector]] finds the scans that >= 2 built jobs read, and those
+  *     that fit `budgetBytes` are cached;
+  *  5. the least recently used entries of earlier windows are evicted until
+  *     the cache fits `budgetBytes`;
+  *  6. the jobs run concurrently on FAIR pools.
+  * Merging and scan caching compose — the reference's hybrid slot (§2.1
+  * #19, a stub there). A group whose meta-result overflows the budget, or
+  * whose meta-plan fails, runs its members unmerged. */
 final class WorkSharingExecutor(
     spark: SparkSession,
     budgetBytes: Long = 2L * 1024 * 1024 * 1024,
     maxConcurrency: Int = 8,
-    autoMerge: Boolean = true,
-    subplanSharing: Boolean = false) {
+    autoMerge: Boolean = true) {
 
-  private val policy = new SharePolicy(budgetBytes)
-  /** fingerprint -> (cached scan DF, size, last-used batch). */
+  /** fingerprint -> (cached DF, size, last-used batch). */
   private val cached = mutable.LinkedHashMap.empty[String, (DataFrame, BigInt, Long)]
   private var batchNo = 0L
 
@@ -372,9 +286,10 @@ final class WorkSharingExecutor(
     * checkpointing iterative operator like connectedComponents — reads the
     * fragment's InMemoryRelation instead of recomputing it. Fragments are
     * declared by the caller because eager-build operators erase their
-    * upstream plan (a checkpoint leaves only a LogicalRDD behind), which
-    * makes post-build automatic detection structurally blind to exactly
-    * the expensive subplans worth sharing. */
+    * upstream plan (a checkpoint leaves only a LogicalRDD behind), so no
+    * detector over the built plans could find the expensive subplans worth
+    * sharing. Fragments and shared scans take the one cache path,
+    * [[touchOrMaterialize]]. */
   def runBatch[A](jobs: Seq[QueryJob[A]],
                   sharedFragments: Seq[(String, SparkSession => DataFrame)] = Nil)
       : Map[String, Try[A]] = synchronized {
@@ -395,39 +310,31 @@ final class WorkSharingExecutor(
     // into many unrelated jobs would over-share it.
     val fanOut = jobs.size
     sharedFragments.foreach { case (fragName, mk) =>
-      val fp = s"frag:$fragName"
-      if (cached.contains(fp)) {
-        val (df, sz, _) = cached(fp)
-        cached.update(fp, (df, sz, batchNo))
-      } else {
+      touchOrMaterialize(s"frag:$fragName") {
         val frame = mk(spark) // plan-only build; no job runs here
         val gateKey = FragmentGate.keyFor(fragName, frame)
         val prior = FragmentGate.decision(gateKey)
+        def gate(p: FragmentGate.Probe, memo: String): Boolean = {
+          val ok = FragmentGate.share(p, fanOut, kappa, minSec)
+          System.err.println(f"[fragment-gate] $fragName n=$fanOut " +
+            f"build=${p.buildSec}%.3f read=${p.readSec}%.3f share=$ok$memo")
+          ok
+        }
         prior match {
+          // measured: at this fan-out the rebuilds are cheaper than the reads
           case Some(p) if !FragmentGate.share(p, fanOut, kappa, minSec) =>
-            // measured: at this fan-out the rebuilds are cheaper than the reads
-            System.err.println(f"[fragment-gate] $fragName n=$fanOut " +
-              f"build=${p.buildSec}%.3f read=${p.readSec}%.3f share=false (memo)")
-          case _ =>
-            val df = frame.persist(StorageLevel.MEMORY_AND_DISK)
-            val t0 = System.nanoTime()
-            df.count() // materialize once, blocking, like scan warming below
-            val buildSec = (System.nanoTime() - t0) / 1e9
+            gate(p, " (memo)"); None
+          case _ => Some(frame -> { buildSec =>
             val probe = prior.getOrElse {
               // one standalone scan of the cached copy = the read-cost probe
               val t1 = System.nanoTime()
-              df.write.format("noop").mode("overwrite").save()
-              val readSec = (System.nanoTime() - t1) / 1e9
-              val p = FragmentGate.Probe(buildSec, readSec)
+              frame.write.format("noop").mode("overwrite").save()
+              val p = FragmentGate.Probe(buildSec, (System.nanoTime() - t1) / 1e9)
               FragmentGate.record(gateKey, p)
               p
             }
-            val ok = FragmentGate.share(probe, fanOut, kappa, minSec)
-            System.err.println(f"[fragment-gate] $fragName n=$fanOut " +
-              f"build=${probe.buildSec}%.3f read=${probe.readSec}%.3f share=$ok")
-            if (ok)
-              cached.put(fp, (df, df.queryExecution.optimizedPlan.stats.sizeInBytes, batchNo))
-            else df.unpersist(blocking = false)
+            Option.when(gate(probe, ""))(frame.queryExecution.optimizedPlan.stats.sizeInBytes)
+          })
         }
       }
     }
@@ -437,42 +344,11 @@ final class WorkSharingExecutor(
     val (mergeGroups, unmergedNames) =
       if (autoMerge) AutoMerge.detect(built)
       else (Seq.empty[Seq[AutoMerge.Member]], built.map(_._1))
-    // automatic subplan sharing (opt-in): canonically-equal Join/Aggregate/
-    // Window subtrees across >= 2 built plans are cached once; Catalyst's
-    // CacheManager substitutes them into every sibling at first execution.
-    // Complements declared fragments: this sees only PURE plans (a build-
-    // time checkpoint leaves LogicalRDDs nothing can match).
-    if (subplanSharing) {
-      ShareDetector.fragments(built).foreach { g =>
-        val fp = s"autofrag:${g.fingerprint}"
-        if (!cached.contains(fp)) {
-          val df = org.apache.spark.sql.GraftSqlShim.ofRows(spark, g.plan)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          df.count()
-          cached.put(fp, (df, df.queryExecution.optimizedPlan.stats.sizeInBytes, batchNo))
-        } else {
-          val (df, sz, _) = cached(fp)
-          cached.update(fp, (df, sz, batchNo))
-        }
-      }
-    }
-    val groups = ShareDetector.detect(spark, built)
-    val toShare = policy.choose(groups)
-
     // Rewrite = persist the shared relation; Catalyst's CacheManager
     // substitutes the InMemoryRelation into every sibling plan automatically.
-    toShare.foreach { g =>
-      if (!cached.contains(g.fingerprint)) {
-        val scan = org.apache.spark.sql.GraftSqlShim.ofRows(spark, g.relation)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // materialize once, blocking — the reference's "first job warms the
-        // cache" ordering without making job 1 special
-        scan.count()
-        cached.put(g.fingerprint, (scan, g.sizeBytes, batchNo))
-      } else {
-        val (df, sz, _) = cached(g.fingerprint)
-        cached.update(g.fingerprint, (df, sz, batchNo))
-      }
+    chooseScans(ShareDetector.detect(spark, built)).foreach { g =>
+      touchOrMaterialize(g.fingerprint)(Some(
+        org.apache.spark.sql.GraftSqlShim.ofRows(spark, g.relation) -> (_ => Some(g.sizeBytes))))
     }
     evictOverBudget()
 
@@ -524,6 +400,42 @@ final class WorkSharingExecutor(
     (singleFutures ++ memberFutures).map { case (n, f) =>
       n -> Try(Await.result(f, 30.minutes))
     }.toMap ++ failedBuilds
+  }
+
+  /** The window's one cache path. A cached `fp` is only touched, so this
+    * batch's eviction keeps it. Otherwise `candidate` gives the frame to
+    * cache (None: cache nothing) and a verdict on its build seconds: the
+    * frame is persisted and materialized once, blocking — the reference's
+    * "first job warms the cache" ordering without making job 1 special —
+    * then kept at the size the verdict returns, or unpersisted on None. */
+  private def touchOrMaterialize(fp: String)(
+      candidate: => Option[(DataFrame, Double => Option[BigInt])]): Unit =
+    cached.get(fp) match {
+      case Some((df, sz, _)) => cached.update(fp, (df, sz, batchNo))
+      case None => candidate.foreach { case (frame, verdict) =>
+        val df = frame.persist(StorageLevel.MEMORY_AND_DISK)
+        val t0 = System.nanoTime()
+        df.count()
+        verdict((System.nanoTime() - t0) / 1e9) match {
+          case Some(size) => cached.put(fp, (df, size, batchNo))
+          case None => df.unpersist(blocking = false)
+        }
+      }
+    }
+
+  /** Which shared scans to cache — the stats-backed replacement for the
+    * reference's random-coin ScanCachingCM: in descending (reuse count ×
+    * size) order, best payoff first, each iff it fits what the budget has
+    * left. */
+  private def chooseScans(groups: Seq[ScanGroup]): Seq[ScanGroup] = {
+    var remaining = BigInt(budgetBytes)
+    groups
+      .sortBy(g => -(g.sizeBytes * g.jobNames.size))
+      .filter { g =>
+        val ok = g.sizeBytes <= remaining
+        if (ok) remaining -= g.sizeBytes
+        ok
+      }
   }
 
   /** LRU eviction — the reference unpersisted *everything* between windows

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
@@ -42,7 +43,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // lineitem shared by 3 jobs; orders has only 1 job -> not a group
     assert(groups.size == 1)
     assert(groups.head.jobNames.toSet == Set("agg_by_flag", "count_by_status", "cheap_items"))
-    assert(groups.head.paths.exists(_.contains("lineitem")))
+    assert(groups.head.fingerprint.contains("lineitem"), groups.head.fingerprint)
   }
 
   test("metamorphic: batch-with-sharing results == isolated results") {
@@ -77,7 +78,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         s => synth(s).filter(length(col("text")) > 150).agg(count(lit(1)).as("n")), snap))
     val built = v2jobs.map(j => (j.name, j.build(spark)))
     val groups = ShareDetector.detect(spark, built)
-    assert(groups.size == 1 && groups.head.format == "v2", groups)
+    assert(groups.size == 1 && groups.head.fingerprint.startsWith("v2:"), groups)
     // size comes from SynthScan.estimateStatistics, not the logical-plan
     // defaultSizeInBytes sentinel (Long.MaxValue)
     assert(groups.head.sizeBytes == BigInt(5000L * 190), groups.head.sizeBytes)
@@ -269,29 +270,43 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally { ex.shutdown(); spark.catalog.clearCache() }
   }
 
-  test("automatic subplan sharing caches a shared aggregate subtree once") {
-    // two jobs whose plans contain the SAME aggregate subtree with
-    // different post-processing — scan sharing alone would re-aggregate
-    def baseAgg(s: SparkSession) =
-      T(s, sfDir).lineitem.groupBy("l_returnflag", "l_linestatus")
-        .agg(sum("l_quantity").as("q"), count(lit(1)).as("n"))
-    val fragJobs: Seq[QueryJob[Seq[String]]] = Seq(
-      QueryJob("hot_flags", s => baseAgg(s).filter(col("q") > 1000), snap),
-      QueryJob("flag_count", s => baseAgg(s).groupBy("l_returnflag")
-        .agg(sum(col("n")).as("rows")), snap))
-    val built = fragJobs.map(j => (j.name, j.build(spark)))
-    val groups = ShareDetector.fragments(built)
-    assert(groups.size == 1 && groups.head.jobNames.toSet == Set("hot_flags", "flag_count"),
-      groups.map(g => (g.jobNames, g.nNodes)))
-    val isolated = fragJobs.map(j => j.name -> j.action(j.build(spark))).toMap
-    val ex = new WorkSharingExecutor(spark, subplanSharing = true)
+  test("a warm window touches its cached scan and fragment, materializing neither") {
+    val frags = Seq[(String, SparkSession => DataFrame)](
+      "priorities" -> (s => T(s, sfDir).orders.groupBy("o_orderpriority").count()))
+    // no merge group: every job runs under its own name as its job group
+    assert(AutoMerge.detect(jobs.map(j => (j.name, j.build(spark))))._1.isEmpty)
+    val isolated = jobs.map(j => j.name -> j.action(j.build(spark))).toMap
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.incrementAndGet()
+    }
+    val ex = new WorkSharingExecutor(spark)
+    def window(): Unit = ex.runBatch(jobs, frags).foreach { case (name, rows) =>
+      assert(rows.get == isolated(name), s"job $name")
+    }
     try {
-      val batched = ex.runBatch(fragJobs)
-      batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
-      assert(ex.cachedFingerprints.exists(_.startsWith("autofrag:")), ex.cachedFingerprints)
-      // a sibling built afterwards reads the fragment cache
-      val probe = baseAgg(spark).filter(col("n") > 5)
-      assert(probe.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
+      window() // cold: materializes the lineitem scan and the fragment
+      val cold = ex.cachedFingerprints
+      assert(cold.size == 2 && cold.contains("frag:priorities"), cold)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        window()
+        // the listener bus delivers asynchronously: wait until it is quiet
+        val deadline = System.nanoTime() + 10.seconds.toNanos
+        var last = -1
+        while ((groups.size != ended.get || groups.size != last) && System.nanoTime() < deadline) {
+          last = groups.size
+          Thread.sleep(200)
+        }
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(!groups.isEmpty)
+      val names = jobs.map(_.name).toSet
+      assert(groups.asScala.forall(names), s"jobs outside the statements' groups: $groups")
+      assert(ex.cachedFingerprints == cold, ex.cachedFingerprints)
     } finally { ex.shutdown(); spark.catalog.clearCache() }
   }
 
