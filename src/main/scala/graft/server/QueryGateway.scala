@@ -32,34 +32,38 @@ import graft.sharing.{AutoMerge, ByteBudget}
   *           ends the session. `warn` lines cannot be confused with rows
   *           (rows are JSON objects and start with '{').
   *
-  * An unwindowed reply is computed after `ok` is flushed, by
-  * [[QueryGateway.replyJson]]: when its rows fit `min(maxRows, maxBatchRows)`
-  * rows and the bytes it may draw (below), one Spark job collects them, and
-  * a top-level ORDER BY and the projection above it run on the driver.
-  * A reply that does not fit streams as internal rows through
-  * [[QueryGateway.streamJson]]: one job per partition, and one partition's
-  * compact row bytes on the driver at a time, so a result bigger than driver
-  * memory still flows; the trailer carries the count that a pre-counted
-  * header would have forced us to materialize for. Windowed results are
-  * taken whole, at most `min(maxRows, maxBatchRows)` rows plus one, by
-  * [[QueryGateway.takeJson]]. `maxRows` bounds what one statement may send,
-  * and reading stops at the cap. Every path encodes each row on the driver
-  * with the one encoder, `GraftSqlShim.jsonLines`, into the line `df.toJSON`
+  * Every reply is computed by [[QueryGateway.replyJson]]: an unwindowed
+  * one after `ok` is flushed, a windowed one by its window before `ok`,
+  * materialized there to at most `min(maxRows, maxBatchRows) + 1` lines.
+  * When its rows fit `min(maxRows, maxBatchRows)` rows and the bytes it may
+  * draw (below), one Spark job collects them, and a top-level ORDER BY and
+  * the projection above it run on the driver; a merged member's split is
+  * already on the driver and is read there, with no job. A reply that does
+  * not fit streams as internal rows through [[QueryGateway.streamJson]]:
+  * one job per partition, and one partition's compact row bytes on the
+  * driver at a time, so a result bigger than driver memory still flows; the
+  * trailer carries the count that a pre-counted header would have forced us
+  * to materialize for. `maxRows` bounds what one statement may send, and
+  * reading stops at the cap. Every path encodes each row on the driver with
+  * the one encoder, `GraftSqlShim.jsonLines`, into the line `df.toJSON`
   * would give.
   *
-  * Driver memory. The rows every unwindowed collect in the JVM keeps are
-  * drawn on one budget, [[QueryGateway.CollectPoolBytes]], at most
-  * [[QueryGateway.CollectBytes]] of compact row bytes per statement, and
-  * given back when the statement ends; a reply that cannot draw its rows
-  * streams instead. Beyond what it keeps, a collect briefly holds the task
-  * results the driver fetched before its cancel took effect, each at most
-  * `CollectBytes` (a task whose rows pass that sends none). A streamed
-  * reply holds one partition's rows, and a windowed reply
-  * `min(maxRows, maxBatchRows) + 1` rows per partition of a take's batch.
+  * Driver memory. Every collect in the JVM draws the rows it keeps on one
+  * budget, [[graft.sharing.ByteBudget.collectBudget]], a quarter of the max
+  * heap: a reply at most [[QueryGateway.CollectBytes]] of compact row bytes,
+  * given back when the statement ends, and a window's merge meta-result at
+  * most its executor's `budgetBytes`, given back when the window ends. A
+  * reply that cannot draw its rows streams instead, and a meta-result that
+  * cannot runs its members unmerged. Beyond what it keeps, a collect briefly
+  * holds the task results the driver fetched before its cancel took effect,
+  * each at most its lease's cap (a task whose rows pass that sends none). A
+  * streamed reply holds one partition's rows, and a windowed reply its
+  * encoded lines until they are sent.
   *
   * An error after `ok` is sent as the `error` trailer. A collected reply
   * fails before any row is sent, so its client sees `ok` and then the
-  * error; a streamed reply may have sent rows first.
+  * error; a streamed reply may have sent rows first. A windowed reply's
+  * error is sent in place of `ok`.
   *
   * Every statement on a connection gets the id `gw-<conn>-<n>` and runs
   * under it as its Spark job group: on the connection's thread, and a
@@ -92,13 +96,13 @@ final class QueryGateway(
     maxBatchRows: Long = 1000000L) {
 
   // The one per-statement bound on the rows the driver holds, in both
-  // modes: a windowed statement's rows are materialized on the driver (a
-  // shared window's results multiplex back through its future), and an
-  // unwindowed reply is collected whole when it fits, so an unbounded SELECT
-  // must not buffer its whole result in driver memory. Effective cap =
-  // min(maxRows, maxBatchRows); takeJson and collectWithin read one sentinel
-  // row more, which preserves the truncated trailer. Both count rows in an
-  // Int.
+  // modes: a reply is collected whole when it fits, and a windowed reply's
+  // lines are materialized on the driver (a shared window's results
+  // multiplex back through its future), so an unbounded SELECT must not
+  // buffer its whole result in driver memory. Effective cap =
+  // min(maxRows, maxBatchRows); collectWithin reads one sentinel row more,
+  // and a windowed reply keeps one line more, which preserves the truncated
+  // trailer. Both count rows in an Int.
   private val rowCap: Int = math.min(math.min(maxRows, maxBatchRows), Int.MaxValue - 1L).toInt
 
   private val server = new ServerSocket(port)
@@ -149,7 +153,7 @@ final class QueryGateway(
         if (line.trim.nonEmpty) {
           stmtNo += 1
           val stmtId = s"gw-$id-$stmtNo"
-          val lease = QueryGateway.collectBudget.lease(QueryGateway.CollectBytes)
+          val lease = ByteBudget.collectBudget.lease(QueryGateway.CollectBytes)
           try {
             val (meta, sql) = QueryGateway.parseMeta(line)
             // per-statement scheduling class (the reference's --metadata
@@ -180,8 +184,8 @@ final class QueryGateway(
             // queue -> window -> shared scans -> results multiplexed back).
             val it: Iterator[String] = batching match {
               case Some(win) =>
-                val job = graft.sharing.QueryJob[Seq[String]](
-                  stmtId, _ => df, QueryGateway.takeJson(_, rowCap + 1), effective)
+                val job = graft.sharing.QueryJob[Seq[String]](stmtId, _ => df,
+                  QueryGateway.replyJson(_, rowCap, rowCap, lease).take(rowCap + 1).toList, effective)
                 scala.concurrent.Await.result(
                   win.submit(job), scala.concurrent.duration.Duration(30, "min")).iterator
               case None =>
@@ -260,16 +264,9 @@ object DeadlineTelemetry {
 }
 
 object QueryGateway {
-  /** The most compact row bytes one unwindowed reply collects on the driver
-    * in one job; a bigger reply streams. */
+  /** The most compact row bytes one reply collects on the driver in one
+    * job; a bigger reply streams. */
   val CollectBytes: Long = 64L << 20
-
-  /** The most compact row bytes all unwindowed collects in the JVM keep on
-    * the driver at once: a quarter of the driver's max heap. */
-  val CollectPoolBytes: Long = Runtime.getRuntime.maxMemory / 4
-
-  /** The budget every gateway's collects draw on, [[CollectPoolBytes]]. */
-  val collectBudget: ByteBudget = new ByteBudget(CollectPoolBytes)
 
   /** Every row of `df`, at most `maxRows`, as the JSON lines `df.toJSON`
     * would give. When its rows fit `rowCap` rows and [[CollectBytes]], one
@@ -306,22 +303,6 @@ object QueryGateway {
       qe.executedPlan.executeToIterator()
     }
     GraftSqlShim.jsonLines(df, rows)
-  }
-
-  /** At most `cap` rows of `df`, as the JSON lines `df.toJSON` would give,
-    * through the built plan's own `executeTake`. A local relation — a merged
-    * member's split, already on the driver — answers with no Spark job. Any
-    * other plan reads its P partitions in growing batches: at most
-    * ⌈log₄P⌉+1 jobs at the default `spark.sql.limit.scaleUpFactor` of 4
-    * (`streamJson` runs P). Every partition of a batch sends at most
-    * `cap` rows, so the driver holds at most `cap` rows per partition read
-    * in the current batch, never a whole partition. */
-  def takeJson(df: DataFrame, cap: Int): Seq[String] = {
-    val qe = df.queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe, Some("graft-take")) {
-      qe.executedPlan.executeTake(cap)
-    }
-    GraftSqlShim.jsonLines(df, rows.iterator).toSeq
   }
 
   private val MetaHint =

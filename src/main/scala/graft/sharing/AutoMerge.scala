@@ -206,13 +206,6 @@ object AutoMerge {
   final case class Collected(rows: Array[InternalRow], complete: Boolean)
 
   /** Run `df` in one job over all its partitions and bring its rows to the
-    * driver as UnsafeRows, as far as they fit `maxRows` and `budgetBytes`;
-    * the budget is the collect's own. */
-  def collectWithin(df: DataFrame, budgetBytes: Long,
-                    maxRows: Int = Int.MaxValue - 1): Collected =
-    collectWithin(df, new ByteBudget(budgetBytes).lease(budgetBytes), maxRows)
-
-  /** Run `df` in one job over all its partitions and bring its rows to the
     * driver as UnsafeRows, as far as they fit `maxRows` and what `lease`
     * lets it draw. Each task sends at most `maxRows + 1` rows; a task whose
     * own rows pass the lease's cap stops reading and sends none, only their
@@ -332,4 +325,14 @@ final class ByteBudget(val capacity: Long) {
 
     def close(): Unit = synchronized { used.addAndGet(-held); held = 0 }
   }
+}
+
+object ByteBudget {
+  /** The most compact row bytes all collects in the JVM keep on the driver
+    * at once: a quarter of the driver's max heap. */
+  val CollectPoolBytes: Long = Runtime.getRuntime.maxMemory / 4
+
+  /** The budget every collect draws on, gateway replies and merge
+    * meta-results alike: [[CollectPoolBytes]]. */
+  val collectBudget: ByteBudget = new ByteBudget(CollectPoolBytes)
 }

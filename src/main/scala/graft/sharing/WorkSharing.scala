@@ -247,14 +247,15 @@ object FragmentGate {
   *  3. with `autoMerge` on (the default), [[AutoMerge]] picks the aggregate
   *     jobs that differ only in the filter over a shared scan: each such
   *     group runs as one FILTER-aggregate meta-plan, collected once within
-  *     `budgetBytes` and split per member with no further Spark job;
+  *     `budgetBytes` of [[ByteBudget.collectBudget]] and split per member
+  *     with no further Spark job;
   *  4. [[ShareDetector]] finds the scans that >= 2 built jobs read, and those
   *     that fit `budgetBytes` are cached;
   *  5. the least recently used entries of earlier windows are evicted until
   *     the cache fits `budgetBytes`;
   *  6. the jobs run concurrently on FAIR pools.
   * Merging and scan caching compose — the reference's hybrid slot (§2.1
-  * #19, a stub there). A group whose meta-result overflows the budget, or
+  * #19, a stub there). A group whose meta-result cannot draw its bytes, or
   * whose meta-plan fails, runs its members unmerged. */
 final class WorkSharingExecutor(
     spark: SparkSession,
@@ -266,10 +267,9 @@ final class WorkSharingExecutor(
   private val cached = mutable.LinkedHashMap.empty[String, (DataFrame, BigInt, Long)]
   private var batchNo = 0L
 
-  private implicit val ec: ExecutionContext =
-    ExecutionContext.fromExecutor(java.util.concurrent.Executors.newFixedThreadPool(
-      maxConcurrency,
-      (r: Runnable) => { val t = new Thread(r, "graft-sharing"); t.setDaemon(true); t }))
+  private val actionPool = java.util.concurrent.Executors.newFixedThreadPool(maxConcurrency,
+    (r: Runnable) => { val t = new Thread(r, "graft-sharing"); t.setDaemon(true); t })
+  private implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(actionPool)
 
   /** Run one window of jobs with scan sharing; returns each job's own
     * outcome: its action result, or the error of its build or action. A
@@ -374,15 +374,17 @@ final class WorkSharingExecutor(
         j.action(builtByName(j.name))))
     }
     // each merge group = one meta-job collected once, on its first member's
-    // session (merged members' confs are equal); its members' actions then
+    // session (merged members' confs are equal), on a lease of the JVM's one
+    // collect budget that the window's end closes; its members' actions then
     // run concurrently on their driver-side splits, or unmerged when the
-    // meta-result overflowed the budget or the meta-plan failed
-    val memberFutures = mergeGroups.flatMap { group =>
+    // meta-result could not draw its bytes or the meta-plan failed
+    val leases = mergeGroups.map(_ => ByteBudget.collectBudget.lease(budgetBytes))
+    val memberFutures = mergeGroups.zip(leases).flatMap { case (group, lease) =>
       val pool = group.map(m => byName(m.name).meta).maxBy(_.priority).pool
       def frame(name: String, p: LogicalPlan) =
         org.apache.spark.sql.GraftSqlShim.ofRows(sessionOf(name), p)
       val meta = Future(inPool(pool, None, sessionOf(group.head.name))(AutoMerge.collectWithin(
-        frame(group.head.name, AutoMerge.metaPlan(group)), budgetBytes)))
+        frame(group.head.name, AutoMerge.metaPlan(group)), lease, Int.MaxValue - 1)))
         .map(c => Option.when(c.complete)(c.rows))
         .recover { case NonFatal(_) => None }
       group.indices.map { i =>
@@ -397,9 +399,10 @@ final class WorkSharingExecutor(
       }
     }
     val failedBuilds = builds.collect { case (n, Failure(e)) => n -> Failure(e) }
-    (singleFutures ++ memberFutures).map { case (n, f) =>
+    try (singleFutures ++ memberFutures).map { case (n, f) =>
       n -> Try(Await.result(f, 30.minutes))
     }.toMap ++ failedBuilds
+    finally leases.foreach(_.close())
   }
 
   /** The window's one cache path. A cached `fp` is only touched, so this
@@ -462,9 +465,12 @@ final class WorkSharingExecutor(
   /** Currently cached scan fingerprints (for tests/inspection). */
   def cachedFingerprints: Set[String] = synchronized { cached.keySet.toSet }
 
+  /** Unpersist every cached entry and end the action threads; a window
+    * runs no more on this executor. */
   def shutdown(): Unit = synchronized {
     cached.values.foreach(_._1.unpersist(blocking = false))
     cached.clear()
+    actionPool.shutdown()
   }
 }
 

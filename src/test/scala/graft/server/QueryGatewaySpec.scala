@@ -456,7 +456,7 @@ class QueryGatewaySpec extends SparkSpec {
       assert(h2 == "ok" && r2.size == 1)
       sock.close()
     } finally capped.close()
-    // the windowed path takes the same capped answer through executeTake
+    // the windowed path sends the same capped answer through replyJson
     import graft.sharing.{BatchWindow, WorkSharingExecutor}
     val ex = new WorkSharingExecutor(spark)
     val win = new BatchWindow[Seq[String]](ex, windowSize = 1, maxWaitMs = 200)
@@ -633,8 +633,7 @@ class QueryGatewaySpec extends SparkSpec {
       ("ok", lines, s"done ${lines.size}")
     }
     withJobsByGroup { jobsOf =>
-      val gw = new QueryGateway(spark, init)
-      try {
+      def check(gw: QueryGateway): Unit = {
         val (session, answered) = replies(gw)
         assert(answered.head._2.head.contains("+05:30"), answered.head._2.head)
         cases.zip(answered).zipWithIndex.foreach { case (((q, jobs), reply), i) =>
@@ -642,7 +641,15 @@ class QueryGatewaySpec extends SparkSpec {
           val ran = jobsOf(s"gw-1-${i + 1}").size
           jobs.foreach(n => assert(ran == n, q))
         }
-      } finally gw.close()
+      }
+      val gw = new QueryGateway(spark, init)
+      try check(gw) finally gw.close()
+      // a windowed reply takes the same path, with the same jobs
+      import graft.sharing.{BatchWindow, WorkSharingExecutor}
+      val ex = new WorkSharingExecutor(spark)
+      val win = new BatchWindow[Seq[String]](ex, windowSize = 1)
+      val windowed = new QueryGateway(spark, init, batching = Some(win))
+      try check(windowed) finally { windowed.close(); win.close(); ex.shutdown() }
       // over the row bound, a sorted reply falls back to streaming
       val streamed = new QueryGateway(spark, init, maxBatchRows = 1000)
       try {
@@ -657,9 +664,9 @@ class QueryGatewaySpec extends SparkSpec {
     import graft.sharing.{BatchWindow, WorkSharingExecutor}
     // LAST_WIN keeps a duplicate map key's last value, where the default
     // policy fails the statement; with ignoreNullFields off a NULL field is
-    // written, where by default it is left out. The unwindowed reply
-    // evaluates the map above the sort on the driver; the windowed one
-    // evaluates it in Spark and encodes its lines on the window's thread.
+    // written, where by default it is left out. Both replies evaluate the
+    // map above the sort on the driver: the unwindowed one on the
+    // connection's thread, the windowed one on the window's thread.
     val sets = Seq("SET spark.sql.mapKeyDedupPolicy=LAST_WIN",
       "SET spark.sql.jsonGenerator.ignoreNullFields=false")
     val stmt = "SELECT map(k, 'a', k, 'b') AS m, IF(k = 0, NULL, k) AS n " +
@@ -721,7 +728,7 @@ class QueryGatewaySpec extends SparkSpec {
       try {
         out.println("SELECT id FROM range(0, 4000, 1, 4) ORDER BY id DESC")
         assert(readResponse(in)._3 == "done 4000")
-        assert(QueryGateway.collectBudget.inUse == 0)
+        assert(ByteBudget.collectBudget.inUse == 0)
       } finally sock.close()
     } finally gw.close()
   }

@@ -329,9 +329,12 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     }
     val started = new java.util.concurrent.atomic.AtomicInteger()
     val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
         started.incrementAndGet()
+      }
       override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
         ended.incrementAndGet()
     }
@@ -343,28 +346,61 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         Thread.sleep(200)
       }
     }
-    val (groups, unmerged) = AutoMerge.detect(
+    val (detected, unmerged) = AutoMerge.detect(
       (mix :+ having).map { case (n, q) => n -> spark.sql(q) })
-    assert(groups.map(_.map(_.name)) == Seq(Seq("gc_key", "gc_scan"), Seq("wc_hash", "wc_sort")))
+    assert(detected.map(_.map(_.name)) == Seq(Seq("gc_key", "gc_scan"), Seq("wc_hash", "wc_sort")))
     assert(unmerged == Seq("wc_having"))
+    val budget = ByteBudget.collectBudget
     val ex = new WorkSharingExecutor(spark)
     try {
       window(mix :+ having, ex) // cold: caches the synth scan
       drained()
+      val inUse = budget.inUse
       spark.sparkContext.addSparkListener(listener)
       try { window(mix, ex); drained() }
       finally spark.sparkContext.removeSparkListener(listener)
       // only the two meta-plans run jobs (AQE runs each as 2); a merged
       // member's split is a local relation, which collect() reads on the driver
       assert(started.get <= 4, s"${started.get} jobs for a warm window")
+      // the window's end gives its meta-results' draws back
+      assert(budget.inUse == inUse, s"${budget.inUse} bytes drawn, $inUse before")
     } finally { ex.shutdown(); spark.catalog.clearCache() }
-    // a meta-result over the budget runs its members unmerged
-    val wc = groups(1)
+    // a meta-result that cannot draw its bytes runs its members unmerged:
+    // over the executor's budget, its lease's cap ...
     val over = AutoMerge.collectWithin(org.apache.spark.sql.GraftSqlShim.ofRows(spark,
-      AutoMerge.metaPlan(wc)), 64L)
+      AutoMerge.metaPlan(detected(1))), budget.lease(64L), Int.MaxValue - 1)
     assert(!over.complete && over.rows.isEmpty)
     val tiny = new WorkSharingExecutor(spark, budgetBytes = 64L)
     try window(mix, tiny) finally tiny.shutdown()
+    // ... or with 64 bytes left of the JVM's one collect budget: the word
+    // counts' meta-result cannot draw its rows, while the two counts' one
+    // row of 4 longs (40 bytes) still merges
+    val drain = budget.lease(Long.MaxValue)
+    assert(drain.tryTake(budget.capacity - budget.inUse - 64L))
+    val starved = new WorkSharingExecutor(spark)
+    groups.clear()
+    try {
+      spark.sparkContext.addSparkListener(listener)
+      try { window(mix, starved); drained() }
+      finally spark.sparkContext.removeSparkListener(listener)
+      Seq("wc_hash", "wc_sort").foreach(n => assert(groups.contains(n), s"$n ran no job: $groups"))
+      Seq("gc_key", "gc_scan").foreach(n => assert(!groups.contains(n), s"$n ran a job: $groups"))
+    } finally { drain.close(); starved.shutdown(); spark.catalog.clearCache() }
+  }
+
+  test("shutdown() ends the action threads the executor started") {
+    def sharingThreads(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(_.getName == "graft-sharing").toSet
+    val before = sharingThreads()
+    val ex = new WorkSharingExecutor(spark, maxConcurrency = 2)
+    val started = try {
+      ex.runBatch(Seq("a", "b").map(n => QueryJob[Long](n, _.range(1).toDF, _.count())))
+        .values.foreach(_.get)
+      sharingThreads() -- before
+    } finally ex.shutdown()
+    assert(started.nonEmpty)
+    started.foreach(_.join(10000))
+    assert(started.forall(!_.isAlive), s"${started.count(_.isAlive)} threads still alive")
   }
 
   test("zero budget -> no caching, results still correct") {
