@@ -12,6 +12,13 @@ import org.apache.spark.sql.SparkSession
   * runtime (skew-join splitting, partition coalescing), shuffle partitions
   * sized by the caller (cores on local mode, 2-3x total cores on a cluster),
   * UTC session time.
+  *
+  * Every session of the server, and every `newSession()` child the gateway
+  * opens per connection, runs its tasks on the executor's one class loader
+  * (`spark.sql.artifact.isolation.enabled=false`), so a statement's
+  * generated code is compiled once per server, not once per connection.
+  * Artifacts (`addArtifact`, a JDBC `ADD JAR`) are therefore server-wide,
+  * not per-session; the gateway takes SQL text only.
   */
 object Engine {
 
@@ -27,6 +34,13 @@ object Engine {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.scheduler.mode", "FAIR")
+      // Spark 4 gives each session UUID its own executor class loader, and
+      // its codegen cache is keyed by (class loader, code) and holds 100
+      // entries, so every connection's session would compile each generated
+      // class again and thrash that cache. Off, all sessions share the
+      // executor's default loader; only per-session artifacts are lost, and
+      // nothing here adds one.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // priority-class pool weights (urgent 8 : default 2 : bulk 1) for the
       // pre-scheduler's job classes — Spark reads weights only from a file
       .config("spark.scheduler.allocation.file", sharing.FairPools.allocationFile())

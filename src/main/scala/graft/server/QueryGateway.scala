@@ -7,6 +7,9 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.scheduler.GraftPoolShim
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.execution.SQLExecution
@@ -81,6 +84,13 @@ import graft.sharing.{AutoMerge, ByteBudget}
   * cache (so work-sharing still applies across clients) but isolated temp
   * views and conf, and its own FAIR scheduler pool so one client's scan
   * cannot starve another (reference intent: .../FIFOStrategy.scala:107-111).
+  * The pool is removed from the root pool when the connection ends. On the
+  * session [[graft.Engine.session]] builds, connections share the
+  * executor's one class loader and so its compiled generated code: a
+  * statement's classes compile once per server, not once per connection,
+  * and artifacts (jars, files) are server-wide, not per-connection. A
+  * connection whose `sessionInit` fails answers its first statement with
+  * `error <message>` and closes.
   * Every statement, windowed or not, is parsed and analyzed on its
   * connection's session, so a command or SET runs there, once. The
   * session is the connection thread's active one, so an expression the
@@ -133,100 +143,116 @@ final class QueryGateway(
   acceptor.start()
 
   private def handle(sock: Socket, id: Long): Unit = {
-    val session = root.newSession()
-    SparkSession.setActiveSession(session)
-    sessionInit(session)
-    val sc = session.sparkContext
-    sc.setLocalProperty("spark.scheduler.pool", s"graft-client-$id")
-    var stmtNo = 0L
-    val in = new BufferedReader(new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-    // no autoflush, and the 64 KB buffer sits under the encoder: the encoder
-    // hands its own buffer down in 8 KB pieces, and with TCP_NODELAY each
-    // piece that reached the socket would go out as its own segment; this
-    // way one flush is one write
-    val out = new PrintWriter(new OutputStreamWriter(
-      new BufferedOutputStream(sock.getOutputStream, 1 << 16),
-      StandardCharsets.UTF_8), false)
+    val sc = root.sparkContext
+    val connPool = s"graft-client-$id"
     try {
-      var line = in.readLine()
-      while (line != null && line.trim != "quit") {
-        if (line.trim.nonEmpty) {
-          stmtNo += 1
-          val stmtId = s"gw-$id-$stmtNo"
-          val lease = ByteBudget.collectBudget.lease(QueryGateway.CollectBytes)
-          try {
-            val (meta, sql) = QueryGateway.parseMeta(line)
-            // per-statement scheduling class (the reference's --metadata
-            // flags, carried as a hint comment over the same wire): urgent/
-            // bulk statements run in the weighted FAIR pool classes; any
-            // other statement — including deadline-only hints, since EDF
-            // ordering lives in the BatchWindow path, not here — keeps the
-            // connection's own pool and its FAIR isolation. Hinted
-            // priorities are clamped to the server-side cap so a client
-            // can't claim graft-urgent weight unless the operator allows
-            // it (self-demotion to graft-bulk is always permitted).
-            val effective = meta.copy(priority =
-              math.min(meta.priority, maxHintPriority))
-            val pool =
-              if (effective.priority != 0) effective.pool
-              else s"graft-client-$id"
-            sc.setLocalProperty("spark.scheduler.pool", pool)
-            // the group covers every job the statement runs on this thread:
-            // an eager command's, and an unwindowed reply's; with no
-            // description, its SQL executions keep their call site
-            sc.setJobGroup(stmtId, null)
-            // built on the connection's own session in both modes, so its
-            // temp views and conf apply and a command runs here, once
-            val df = session.sql(sql)
-            // Optional work-sharing path: statements queue into the
-            // BatchWindow and execute as a shared window (the reference's
-            // DAGQueue -> WorksharingExecutor deployment shape: wire ->
-            // queue -> window -> shared scans -> results multiplexed back).
-            val it: Iterator[String] = batching match {
-              case Some(win) =>
-                val job = graft.sharing.QueryJob[Seq[String]](stmtId, _ => df,
-                  QueryGateway.replyJson(_, rowCap, rowCap, lease).take(rowCap + 1).toList, effective)
-                scala.concurrent.Await.result(
-                  win.submit(job), scala.concurrent.duration.Duration(30, "min")).iterator
-              case None =>
-                // by-name: the reply's jobs run at the first hasNext, after `ok`
-                Iterator.empty ++ QueryGateway.replyJson(df, maxRows, rowCap, lease)
-            }
-            out.println("ok")
-            out.flush() // the client's ack must not wait on the audit below
-            // plan audit (VERDICT r9 missing-1): an analyzer-only pass over
-            // the statement's own analyzed plan, with no second parse, so a
-            // command still runs exactly once, in session.sql. The verdict is
-            // surfaced as a `warn` protocol line AFTER `ok` (ADVICE r10:
-            // a flagged shape on a cold corpus triggers the linear mass
-            // census — that job must not sit between the client and its
-            // ack). The census inside inspect() is snapshot-memoized, so a
-            // clean statement pays pure plan analysis only.
-            val auditWarn: Option[String] =
-              try graft.plans.PairJoinAudit.inspect(df.queryExecution.analyzed, session)
-              catch { case _: Throwable => None }
-            auditWarn.foreach(w =>
-              out.println("warn " + w.replaceAll("\\s+", " ").take(500)))
-            val printCap = if (batching.isDefined) rowCap else maxRows
-            var n = 0L
-            while (n < printCap && it.hasNext) { out.println(it.next()); n += 1 }
-            out.println(if (it.hasNext) s"done $n truncated" else s"done $n")
-            // deadline accounting: "finished" = last row streamed (errors
-            // are not counted — a failed statement has no service time)
-            effective.deadlineMs.foreach(
-              DeadlineTelemetry.record(_, System.currentTimeMillis()))
-          } catch {
-            case e: Throwable =>
-              out.println("error " + Option(e.getMessage).getOrElse(e.toString)
-                .replaceAll("\\s+", " ").take(500))
-          } finally { sc.clearJobGroup(); lease.close() }
-          out.flush()
-        }
-        line = in.readLine()
+      val in = new BufferedReader(new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
+      // no autoflush, and the 64 KB buffer sits under the encoder: the
+      // encoder hands its own buffer down in 8 KB pieces, and with
+      // TCP_NODELAY each piece that reached the socket would go out as its
+      // own segment; this way one flush is one write
+      val out = new PrintWriter(new OutputStreamWriter(
+        new BufferedOutputStream(sock.getOutputStream, 1 << 16),
+        StandardCharsets.UTF_8), false)
+      Try {
+        val session = root.newSession()
+        SparkSession.setActiveSession(session)
+        sessionInit(session)
+        sc.setLocalProperty("spark.scheduler.pool", connPool)
+        session
+      } match {
+        case Success(session) => serve(session, id, connPool, in, out)
+        case Failure(e) =>
+          // a session that cannot be opened answers the client's first
+          // statement with why, and the connection ends: no client waits
+          // on a reply that will never come
+          if (in.readLine() != null) { out.println(QueryGateway.errorLine(e)); out.flush() }
       }
     } catch {
       case _: IOException => // the client went away, or close() closed its socket
-    } finally { live.remove(sock); sock.close() }
+    } finally {
+      // Spark never drops a pool; the connection's goes with it
+      GraftPoolShim.release(sc, connPool)
+      live.remove(sock); sock.close()
+    }
+  }
+
+  private def serve(session: SparkSession, id: Long, connPool: String,
+                    in: BufferedReader, out: PrintWriter): Unit = {
+    val sc = session.sparkContext
+    var stmtNo = 0L
+    var line = in.readLine()
+    while (line != null && line.trim != "quit") {
+      if (line.trim.nonEmpty) {
+        stmtNo += 1
+        val stmtId = s"gw-$id-$stmtNo"
+        val lease = ByteBudget.collectBudget.lease(QueryGateway.CollectBytes)
+        try {
+          val (meta, sql) = QueryGateway.parseMeta(line)
+          // per-statement scheduling class (the reference's --metadata
+          // flags, carried as a hint comment over the same wire): urgent/
+          // bulk statements run in the weighted FAIR pool classes; any
+          // other statement — including deadline-only hints, since EDF
+          // ordering lives in the BatchWindow path, not here — keeps the
+          // connection's own pool and its FAIR isolation. Hinted
+          // priorities are clamped to the server-side cap so a client
+          // can't claim graft-urgent weight unless the operator allows
+          // it (self-demotion to graft-bulk is always permitted).
+          val effective = meta.copy(priority =
+            math.min(meta.priority, maxHintPriority))
+          val pool = if (effective.priority != 0) effective.pool else connPool
+          sc.setLocalProperty("spark.scheduler.pool", pool)
+          // the group covers every job the statement runs on this thread:
+          // an eager command's, and an unwindowed reply's; with no
+          // description, its SQL executions keep their call site
+          sc.setJobGroup(stmtId, null)
+          // built on the connection's own session in both modes, so its
+          // temp views and conf apply and a command runs here, once
+          val df = session.sql(sql)
+          // Optional work-sharing path: statements queue into the
+          // BatchWindow and execute as a shared window (the reference's
+          // DAGQueue -> WorksharingExecutor deployment shape: wire ->
+          // queue -> window -> shared scans -> results multiplexed back).
+          val it: Iterator[String] = batching match {
+            case Some(win) =>
+              val job = graft.sharing.QueryJob[Seq[String]](stmtId, _ => df,
+                QueryGateway.replyJson(_, rowCap, rowCap, lease).take(rowCap + 1).toList, effective)
+              scala.concurrent.Await.result(
+                win.submit(job), scala.concurrent.duration.Duration(30, "min")).iterator
+            case None =>
+              // by-name: the reply's jobs run at the first hasNext, after `ok`
+              Iterator.empty ++ QueryGateway.replyJson(df, maxRows, rowCap, lease)
+          }
+          out.println("ok")
+          out.flush() // the client's ack must not wait on the audit below
+          // plan audit (VERDICT r9 missing-1): an analyzer-only pass over
+          // the statement's own analyzed plan, with no second parse, so a
+          // command still runs exactly once, in session.sql. The verdict is
+          // surfaced as a `warn` protocol line AFTER `ok` (ADVICE r10:
+          // a flagged shape on a cold corpus triggers the linear mass
+          // census — that job must not sit between the client and its
+          // ack). The census inside inspect() is snapshot-memoized, so a
+          // clean statement pays pure plan analysis only.
+          val auditWarn: Option[String] =
+            try graft.plans.PairJoinAudit.inspect(df.queryExecution.analyzed, session)
+            catch { case _: Throwable => None }
+          auditWarn.foreach(w =>
+            out.println("warn " + w.replaceAll("\\s+", " ").take(500)))
+          val printCap = if (batching.isDefined) rowCap else maxRows
+          var n = 0L
+          while (n < printCap && it.hasNext) { out.println(it.next()); n += 1 }
+          out.println(if (it.hasNext) s"done $n truncated" else s"done $n")
+          // deadline accounting: "finished" = last row streamed (errors
+          // are not counted — a failed statement has no service time)
+          effective.deadlineMs.foreach(
+            DeadlineTelemetry.record(_, System.currentTimeMillis()))
+        } catch {
+          case e: Throwable => out.println(QueryGateway.errorLine(e))
+        } finally { sc.clearJobGroup(); lease.close() }
+        out.flush()
+      }
+      line = in.readLine()
+    }
   }
 
   /** Stop accepting and close every open connection: a handler blocked
@@ -267,6 +293,10 @@ object QueryGateway {
   /** The most compact row bytes one reply collects on the driver in one
     * job; a bigger reply streams. */
   val CollectBytes: Long = 64L << 20
+
+  /** The protocol's `error` line for `e`: its message on one line. */
+  def errorLine(e: Throwable): String =
+    "error " + Option(e.getMessage).getOrElse(e.toString).replaceAll("\\s+", " ").take(500)
 
   /** Every row of `df`, at most `maxRows`, as the JSON lines `df.toJSON`
     * would give. When its rows fit `rowCap` rows and [[CollectBytes]], one
@@ -331,7 +361,9 @@ object QueryGateway {
 
 /** JDBC/ODBC front-end: Spark's own HiveThriftServer2 bound to the shared
   * session — the industry-standard replacement for the reference's custom
-  * wire protocol (SURVEY.md §7 step 5). */
+  * wire protocol (SURVEY.md §7 step 5). On a session [[graft.Engine.session]]
+  * builds, artifact isolation is off, so a JDBC `ADD JAR` is server-wide:
+  * every session, gateway connections included, sees the jar. */
 object ThriftFrontend {
   /** Start on `port`; callers stop it via the returned server's stop(). */
   def start(spark: SparkSession, port: Int): org.apache.hive.service.server.HiveServer2 = {

@@ -12,6 +12,9 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.scheduler.mode", "FAIR")
+      // as Engine.session serves: one executor class loader for every
+      // session, so generated code compiles once per JVM (EngineParitySpec)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)

@@ -427,6 +427,87 @@ class QueryGatewaySpec extends SparkSpec {
     } finally { sock.close(); gw.close() }
   }
 
+  test("connections compile a statement's code once and share one task class loader, in both gateway modes") {
+    import graft.sharing.{BatchWindow, WorkSharingExecutor}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // names the context class loader of the task that evaluates it
+    def init(s: org.apache.spark.sql.SparkSession): Unit =
+      s.udf.register("task_loader", (_: Long) => {
+        val l = Thread.currentThread.getContextClassLoader
+        s"${l.getClass.getName}@${System.identityHashCode(l)}"
+      })
+    val agg = "SELECT k, count(*) AS n, sum(v) AS s FROM (SELECT id % 7 AS k, id * 3 AS v " +
+      "FROM range(0, 20000, 1, 4)) GROUP BY k ORDER BY k"
+    val loader = "SELECT DISTINCT task_loader(id) AS l FROM range(0, 8, 1, 4)"
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val ex = new WorkSharingExecutor(spark)
+    // a window closes on its one statement after 50 ms, so the connections'
+    // statements run one after another, each as it was sent
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 4, maxWaitMs = 50)
+    try {
+      for ((mode, batching) <- Seq("unwindowed" -> None, "windowed" -> Some(win))) {
+        val gw = new QueryGateway(spark, init, batching = batching)
+        val conns = Seq.fill(4)(connect(gw.boundPort))
+        try {
+          def ask(c: (java.net.Socket, PrintWriter, BufferedReader)): (List[String], List[String]) = {
+            def one(sql: String): List[String] = {
+              c._2.println(sql)
+              val (head, rows, trailer) = readResponse(c._3)
+              assert(head == "ok" && trailer == s"done ${rows.size}", (mode, sql, head, trailer))
+              rows
+            }
+            (one(agg), one(loader))
+          }
+          val (rows0, loaders0) = ask(conns.head)
+          val before = compiles
+          val rest = conns.tail.map(ask)
+          assert(compiles - before == 0,
+            s"$mode: ${compiles - before} compiles after the first connection answered")
+          assert(rest.forall(_._1 == rows0) && rows0.size == 7, (mode, rows0))
+          // one loader for every task of every connection's statement
+          assert(loaders0.size == 1 && rest.forall(_._2 == loaders0), (mode, loaders0, rest.map(_._2)))
+        } finally { conns.foreach(_._1.close()); gw.close() }
+      }
+    } finally { win.close(); ex.shutdown() }
+  }
+
+  test("a connection whose sessionInit fails answers its first statement with the error and closes") {
+    val gw = new QueryGateway(spark, _ => throw new IllegalStateException("no corpus at /missing"))
+    val (sock, out, in) = connect(gw.boundPort)
+    try {
+      sock.setSoTimeout(30000) // a connection left hanging fails by timing out here
+      out.println("SELECT 1 AS one")
+      val first = in.readLine()
+      assert(first != null && first.startsWith("error ") && first.contains("no corpus at /missing"), first)
+      assert(in.readLine() == null)
+    } finally { sock.close(); gw.close() }
+  }
+
+  test("a connection's FAIR pool is removed when the connection ends") {
+    val sc = spark.sparkContext
+    def clientPools = sc.getAllPools.map(_.name).filter(_.startsWith("graft-client-"))
+    // an earlier gateway's handlers release their pools as its sockets close
+    val deadline = System.currentTimeMillis() + 10000
+    while (clientPools.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    val baseline = sc.getAllPools.size
+    val gw = new QueryGateway(spark, _ => ())
+    try {
+      for (i <- 1 to 5) { // a gateway numbers its connections from 1
+        val (sock, out, in) = connect(gw.boundPort)
+        try {
+          out.println("SELECT count(*) AS n FROM range(0, 100, 1, 2)")
+          assert(readResponse(in)._3 == "done 1")
+          assert(sc.getPoolForName(s"graft-client-$i").isDefined, clientPools)
+          out.println("quit")
+          sock.setSoTimeout(30000)
+          assert(in.readLine() == null) // the pool goes before the socket closes
+          assert(sc.getPoolForName(s"graft-client-$i").isEmpty, clientPools)
+        } finally sock.close()
+      }
+      assert(sc.getAllPools.size == baseline, sc.getAllPools.map(_.name))
+    } finally gw.close()
+  }
+
   test("large results stream partition-by-partition, row cap truncates") {
     // 200k rows over 8 partitions: far more than a sane header-count
     // materialization; the unwindowed path holds one partition's rows on
