@@ -41,8 +41,9 @@ object Engine {
       // executor's default loader; only per-session artifacts are lost, and
       // nothing here adds one.
       .config("spark.sql.artifact.isolation.enabled", "false")
-      // priority-class pool weights (urgent 8 : default 2 : bulk 1) for the
-      // pre-scheduler's job classes — Spark reads weights only from a file
+      // the class pools every statement runs in, by its JobMeta (urgent 8 :
+      // default 2 : bulk 1, each FAIR inside) — Spark reads weights only
+      // from a file
       .config("spark.scheduler.allocation.file", sharing.FairPools.allocationFile())
     val spark = master.fold(b)(b.master).getOrCreate()
     functions.Registry.ensure(spark) // covers the getOrCreate-reuse path too

@@ -9,7 +9,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.scheduler.GraftPoolShim
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.execution.SQLExecution
@@ -71,6 +70,7 @@ import graft.sharing.{AutoMerge, ByteBudget}
   * Every statement on a connection gets the id `gw-<conn>-<n>` and runs
   * under it as its Spark job group: on the connection's thread, and a
   * windowed statement's action also on the window's thread that runs it.
+  * `conn` counts connections across every gateway in the JVM.
   *
   * A reply goes out in two flushes: `ok` at once, then the audit's `warn`
   * lines, the rows and the trailer. Every accepted socket sets TCP_NODELAY:
@@ -82,10 +82,20 @@ import graft.sharing.{AutoMerge, ByteBudget}
   *
   * Each connection gets `SparkSession.newSession()` — shared SparkContext and
   * cache (so work-sharing still applies across clients) but isolated temp
-  * views and conf, and its own FAIR scheduler pool so one client's scan
-  * cannot starve another (reference intent: .../FIFOStrategy.scala:107-111).
-  * The pool is removed from the root pool when the connection ends. On the
-  * session [[graft.Engine.session]] builds, connections share the
+  * views and conf.
+  *
+  * Scheduling is the statement's [[graft.sharing.JobMeta]] alone, in both
+  * modes: its jobs run in its class pool, `graft-default`, `graft-urgent` or
+  * `graft-bulk`, and a window runs its statements in
+  * [[graft.sharing.JobMeta.ordering]] (earliest deadline first). So the
+  * root pool holds at most the three class pools however many connections
+  * open. On [[graft.Engine.session]] each class pool is FAIR inside, so
+  * concurrent clients' scans share cores (reference intent:
+  * .../FIFOStrategy.scala:107-111). The trade: FAIR shares cores per task
+  * set (one stage of one statement), not per connection, so a client with
+  * more stages in flight gets more cores than one with fewer.
+  *
+  * On the session [[graft.Engine.session]] builds, connections share the
   * executor's one class loader and so its compiled generated code: a
   * statement's classes compile once per server, not once per connection,
   * and artifacts (jars, files) are server-wide, not per-connection. A
@@ -116,7 +126,6 @@ final class QueryGateway(
   private val rowCap: Int = math.min(math.min(maxRows, maxBatchRows), Int.MaxValue - 1L).toInt
 
   private val server = new ServerSocket(port)
-  private val connIds = new AtomicLong()
   private val live = ConcurrentHashMap.newKeySet[Socket]()
   @volatile private var running = true
 
@@ -131,7 +140,7 @@ final class QueryGateway(
         live.add(sock)
         if (!running) sock.close() // close() ran between accept and add
         else {
-          val id = connIds.incrementAndGet()
+          val id = QueryGateway.connIds.incrementAndGet()
           val t = new Thread(() => handle(sock, id), s"graft-gw-conn-$id")
           t.setDaemon(true)
           t.start()
@@ -143,8 +152,6 @@ final class QueryGateway(
   acceptor.start()
 
   private def handle(sock: Socket, id: Long): Unit = {
-    val sc = root.sparkContext
-    val connPool = s"graft-client-$id"
     try {
       val in = new BufferedReader(new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
       // no autoflush, and the 64 KB buffer sits under the encoder: the
@@ -158,10 +165,9 @@ final class QueryGateway(
         val session = root.newSession()
         SparkSession.setActiveSession(session)
         sessionInit(session)
-        sc.setLocalProperty("spark.scheduler.pool", connPool)
         session
       } match {
-        case Success(session) => serve(session, id, connPool, in, out)
+        case Success(session) => serve(session, id, in, out)
         case Failure(e) =>
           // a session that cannot be opened answers the client's first
           // statement with why, and the connection ends: no client waits
@@ -170,14 +176,10 @@ final class QueryGateway(
       }
     } catch {
       case _: IOException => // the client went away, or close() closed its socket
-    } finally {
-      // Spark never drops a pool; the connection's goes with it
-      GraftPoolShim.release(sc, connPool)
-      live.remove(sock); sock.close()
-    }
+    } finally { live.remove(sock); sock.close() }
   }
 
-  private def serve(session: SparkSession, id: Long, connPool: String,
+  private def serve(session: SparkSession, id: Long,
                     in: BufferedReader, out: PrintWriter): Unit = {
     val sc = session.sparkContext
     var stmtNo = 0L
@@ -190,18 +192,14 @@ final class QueryGateway(
         try {
           val (meta, sql) = QueryGateway.parseMeta(line)
           // per-statement scheduling class (the reference's --metadata
-          // flags, carried as a hint comment over the same wire): urgent/
-          // bulk statements run in the weighted FAIR pool classes; any
-          // other statement — including deadline-only hints, since EDF
-          // ordering lives in the BatchWindow path, not here — keeps the
-          // connection's own pool and its FAIR isolation. Hinted
+          // flags, carried as a hint comment over the same wire): its pool
+          // here and in its window, and its place in the window. Hinted
           // priorities are clamped to the server-side cap so a client
           // can't claim graft-urgent weight unless the operator allows
           // it (self-demotion to graft-bulk is always permitted).
           val effective = meta.copy(priority =
             math.min(meta.priority, maxHintPriority))
-          val pool = if (effective.priority != 0) effective.pool else connPool
-          sc.setLocalProperty("spark.scheduler.pool", pool)
+          sc.setLocalProperty("spark.scheduler.pool", effective.pool)
           // the group covers every job the statement runs on this thread:
           // an eager command's, and an unwindowed reply's; with no
           // description, its SQL executions keep their call site
@@ -290,6 +288,11 @@ object DeadlineTelemetry {
 }
 
 object QueryGateway {
+  /** Connection ids, numbered across every gateway in the JVM, so two
+    * gateways on one SparkContext never give two connections one job group
+    * `gw-<conn>-<n>`. */
+  private[server] val connIds = new AtomicLong()
+
   /** The most compact row bytes one reply collects on the driver in one
     * job; a bigger reply streams. */
   val CollectBytes: Long = 64L << 20

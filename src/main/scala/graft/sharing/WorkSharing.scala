@@ -47,43 +47,37 @@ import org.apache.spark.storage.StorageLevel
   */
 /** Scheduling metadata a client attaches to a job — the reference's
   * DAGMetadata descriptor keys (its README's --metadata flags); `priority`
-  * > 0 marks urgent, < 0 bulk; `deadlineMs` is an epoch-millis EDF key. */
+  * > 0 marks urgent, < 0 bulk; `deadlineMs` is an epoch-millis EDF key.
+  * These two fields are a statement's whole scheduling decision: its pool
+  * class, and its place in its window. */
 final case class JobMeta(priority: Int = 0, deadlineMs: Option[Long] = None) {
   /** FAIR pool class: weights come from [[FairPools.allocationFile]]. */
   def pool: String =
     if (priority > 0) "graft-urgent" else if (priority < 0) "graft-bulk" else "graft-default"
 }
 
+object JobMeta {
+  /** Window order — the PreScheduler slot, where the reference shipped only
+    * FIFO and left "deadline, priority..." as a comment (reference:
+    * .../scheduler/prescheduler/PreScheduler.scala:39-46): earliest deadline
+    * first, then no-deadline jobs, each by descending priority. A stable sort
+    * keeps arrival order within a tie, so a window with no hints runs as it
+    * arrived. Order matters because the executor's thread pool starts jobs
+    * in admission order: with more jobs than slots, front of the window =
+    * first on a core. */
+  implicit val ordering: Ordering[JobMeta] =
+    Ordering.by(m => (m.deadlineMs.getOrElse(Long.MaxValue), -m.priority.toLong))
+}
+
 final case class QueryJob[A](name: String, build: SparkSession => DataFrame,
                              action: DataFrame => A, meta: JobMeta = JobMeta())
 
-/** Admission-ordering strategies for a batch window — the PreScheduler slot.
-  * The reference only ever shipped the FIFO DummyStrategy and left
-  * "deadline, priority..." as a comment (reference:
-  * .../scheduler/prescheduler/PreScheduler.scala:39-46,
-  * .../WorksharingExecutor.scala:50); these are those strategies. Ordering
-  * matters because the executor's thread pool starts jobs in admission order:
-  * with more jobs than slots, front of the window = first on a core. */
-sealed trait PreStrategy {
-  def order[A](jobs: Seq[QueryJob[A]]): Seq[QueryJob[A]]
-}
-
-/** Arrival order (the reference's DummyStrategy). */
-case object FifoStrategy extends PreStrategy {
-  def order[A](jobs: Seq[QueryJob[A]]): Seq[QueryJob[A]] = jobs
-}
-
-/** Earliest deadline first; no-deadline jobs follow, by descending priority;
-  * stable (arrival) within a tie. */
-case object DeadlinePriorityStrategy extends PreStrategy {
-  def order[A](jobs: Seq[QueryJob[A]]): Seq[QueryJob[A]] =
-    jobs.sortBy(j => (j.meta.deadlineMs.getOrElse(Long.MaxValue), -j.meta.priority))
-}
-
 /** FAIR pool weights for the job classes. Spark only reads pool weights from
-  * an allocation file, so generate one (urgent outweighs default 8:1; bulk
-  * runs at weight 1 with no minShare) and point
-  * `spark.scheduler.allocation.file` at it when building the session. */
+  * an allocation file, so generate one (urgent outweighs bulk 8:1, default
+  * runs at weight 2; bulk and default have no minShare) and point
+  * `spark.scheduler.allocation.file` at it when building the session. Each
+  * pool is FAIR inside, so the task sets of concurrent statements in one
+  * class share its cores. */
 object FairPools {
   def allocationFile(): String = {
     val xml =
@@ -196,10 +190,7 @@ object ShareDetector {
   * repeated loser) and the heavy winners (graph's 10×-corpus lsh_pairs,
   * media_features, sym_scored, s01_topk, five_grams) pass; the sub-second
   * mid-tier fragments — including dedup_family's own sf0.01 lsh_pairs,
-  * whose family delta sits inside run-to-run noise — fall out. Configs
-  * `spark.graft.share.fragmentReadPenalty` / `.fragmentMinBuildSec` tune
-  * or (at 0 / negative) disable the gate — the mechanism specs do that to
-  * assert substitution with test-scale fragments. */
+  * whose family delta sits inside run-to-run noise — fall out. */
 object FragmentGate {
   /** Measured costs of ONE materialization; the decision is [[share]]. */
   final case class Probe(buildSec: Double, readSec: Double)
@@ -228,8 +219,8 @@ object FragmentGate {
   private val probes = graft.Memo.lru[String, Probe](256)
 
   /** Reuse-aware verdict for a window with `n` consuming jobs. */
-  def share(p: Probe, n: Int, kappa: Double, minSec: Double): Boolean =
-    (n - 1) * p.buildSec > kappa * n * p.readSec + minSec
+  def share(p: Probe, n: Int): Boolean =
+    (n - 1) * p.buildSec > DefaultKappa * n * p.readSec + DefaultMinSec
 
   /** Memo key = label + the fragment PLAN's canonical hash. */
   def keyFor(name: String, df: DataFrame): String =
@@ -294,10 +285,6 @@ final class WorkSharingExecutor(
                   sharedFragments: Seq[(String, SparkSession => DataFrame)] = Nil)
       : Map[String, Try[A]] = synchronized {
     batchNo += 1
-    val kappa = spark.conf.getOption("spark.graft.share.fragmentReadPenalty")
-      .map(_.toDouble).getOrElse(FragmentGate.DefaultKappa)
-    val minSec = spark.conf.getOption("spark.graft.share.fragmentMinBuildSec")
-      .map(_.toDouble).getOrElse(FragmentGate.DefaultMinSec)
     // window fan-out for the reuse-aware gate: a declared fragment serves
     // this window's family, so the job count is its consumer CEILING. This
     // overstates n when only a few jobs actually contain the fragment —
@@ -315,14 +302,14 @@ final class WorkSharingExecutor(
         val gateKey = FragmentGate.keyFor(fragName, frame)
         val prior = FragmentGate.decision(gateKey)
         def gate(p: FragmentGate.Probe, memo: String): Boolean = {
-          val ok = FragmentGate.share(p, fanOut, kappa, minSec)
+          val ok = FragmentGate.share(p, fanOut)
           System.err.println(f"[fragment-gate] $fragName n=$fanOut " +
             f"build=${p.buildSec}%.3f read=${p.readSec}%.3f share=$ok$memo")
           ok
         }
         prior match {
           // measured: at this fan-out the rebuilds are cheaper than the reads
-          case Some(p) if !FragmentGate.share(p, fanOut, kappa, minSec) =>
+          case Some(p) if !FragmentGate.share(p, fanOut) =>
             gate(p, " (memo)"); None
           case _ => Some(frame -> { buildSec =>
             val probe = prior.getOrElse {
@@ -477,12 +464,12 @@ final class WorkSharingExecutor(
 /** Size-or-timeout batching window in front of [[WorkSharingExecutor]] —
   * fixes the reference's size-only trigger (a lone job waited forever;
   * reference: .../WorksharingExecutor.scala:68-70 slept in 5 s polls and only
-  * fired at `queue >= window`). */
+  * fired at `queue >= window`). A window runs its jobs in
+  * [[JobMeta.ordering]]. */
 final class BatchWindow[A](
     executor: WorkSharingExecutor,
     windowSize: Int = 4,
-    maxWaitMs: Long = 500,
-    strategy: PreStrategy = FifoStrategy) {
+    maxWaitMs: Long = 500) {
 
   private case class Pending(job: QueryJob[A], promise: scala.concurrent.Promise[A])
   private val queue = new java.util.concurrent.LinkedBlockingQueue[Pending]()
@@ -508,7 +495,7 @@ final class BatchWindow[A](
         val jobs = batch.toSeq
         try {
           // pre-scheduling: admission order within the window
-          val results = executor.runBatch(strategy.order(jobs.map(_.job)))
+          val results = executor.runBatch(jobs.map(_.job).sortBy(_.meta))
           jobs.foreach(p => p.promise.complete(results(p.job.name)))
         } catch {
           // only a window-wide failure (caching a shared scan, say) reaches

@@ -34,32 +34,51 @@ class QueryGatewaySpec extends SparkSpec {
     (head, rows.result(), line)
   }
 
-  /** Runs `body` with a listener that records, per Spark job group, each
-    * started job's task count; `body` gets a function that returns a group's
-    * jobs so far. Events reach a listener in the order they were posted, so
-    * once a job started after a reply is seen, every job of the reply has
-    * been too. */
-  private def withJobsByGroup[A](body: (String => Vector[Int]) => A): A = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tasksPerJob = new java.util.concurrent.ConcurrentHashMap[String, Vector[Int]]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => tasksPerJob.merge(g, Vector(e.stageInfos.map(_.numTasks).sum), _ ++ _))
+  /** The id the gateways give the next connection they accept. */
+  private def nextConn: Long = QueryGateway.connIds.get + 1
+
+  /** The jobs a listener saw started, per Spark job group, in start order:
+    * each one's task count and `spark.scheduler.pool`. */
+  private final class JobsSeen(sc: org.apache.spark.SparkContext) {
+    private val byGroup = new java.util.concurrent.ConcurrentHashMap[String, Vector[(Int, String)]]()
+    private val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener: org.apache.spark.scheduler.SparkListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+          started.add(g)
+          byGroup.merge(g, Vector(e.stageInfos.map(_.numTasks).sum ->
+            e.properties.getProperty("spark.scheduler.pool")), _ ++ _)
+        }
     }
-    def jobsOf(group: String): Vector[Int] = {
+    /** Events reach a listener in the order they were posted, so once a job
+      * started after a reply is seen, every job of the reply has been too. */
+    private def sync(): Unit = {
       val marker = s"marker-${System.nanoTime()}"
       sc.setJobGroup(marker, null)
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.currentTimeMillis() + 30000
-      while (!tasksPerJob.containsKey(marker) && System.currentTimeMillis() < deadline)
+      while (!byGroup.containsKey(marker) && System.currentTimeMillis() < deadline)
         Thread.sleep(10)
-      assert(tasksPerJob.containsKey(marker), "listener never saw the marker job")
-      tasksPerJob.remove(group) match { case null => Vector.empty; case v => v }
+      assert(byGroup.containsKey(marker), "listener never saw the marker job")
     }
-    sc.addSparkListener(listener)
-    try body(jobsOf) finally sc.removeSparkListener(listener)
+    private def take(group: String): Vector[(Int, String)] = {
+      sync()
+      byGroup.remove(group) match { case null => Vector.empty; case v => v }
+    }
+    /** `group`'s jobs so far, as task counts; they are read once. */
+    def apply(group: String): Vector[Int] = take(group).map(_._1)
+    /** `group`'s jobs so far, as pools; they are read once. */
+    def pools(group: String): Vector[String] = take(group).map(_._2)
+    /** Every group whose jobs started so far, in the order of its first job. */
+    def groups: Vector[String] = { sync(); started.toArray(Array.empty[String]).toVector.distinct }
+  }
+
+  /** Runs `body` with a [[JobsSeen]] listening. */
+  private def withJobsByGroup[A](body: JobsSeen => A): A = {
+    val sc = spark.sparkContext
+    val seen = new JobsSeen(sc)
+    sc.addSparkListener(seen.listener)
+    try body(seen) finally sc.removeSparkListener(seen.listener)
   }
 
   test("metadata hint parses to JobMeta and the hinted statement still runs") {
@@ -73,9 +92,8 @@ class QueryGatewaySpec extends SparkSpec {
     assert(m1.pool == "graft-urgent")
     val (m2, _) = QueryGateway.parseMeta("/*+ graft(priority=-1) */ SELECT 2")
     assert(m2.pool == "graft-bulk")
-    // a deadline-only hint carries metadata but priority 0 — the gateway
-    // must keep such statements in the connection's own pool (EDF ordering
-    // belongs to the BatchWindow path)
+    // a deadline-only hint carries metadata but priority 0: its statement
+    // runs in graft-default, and its deadline orders its window
     val (m4, _) = QueryGateway.parseMeta("/*+ graft(deadlineMs=9) */ SELECT 4")
     assert(m4 == JobMeta(deadlineMs = Some(9L)) && m4.priority == 0)
     // malformed hint degrades to plain SQL (which then fails in the parser,
@@ -106,7 +124,7 @@ class QueryGatewaySpec extends SparkSpec {
     val gw = new QueryGateway(spark, s => Tables.register(s, sfDir), maxHintPriority = 0)
     try {
       val (sock, out, in) = connect(gw.boundPort)
-      // a priority-9 hint still executes — in the connection pool, not urgent
+      // a priority-9 hint still executes — in graft-default, not urgent
       out.println("/*+ graft(priority=9) */ SELECT count(*) AS n FROM region")
       val (head, rows, _) = readResponse(in)
       assert(head == "ok" && rows.head.contains("\"n\":5"))
@@ -236,7 +254,8 @@ class QueryGatewaySpec extends SparkSpec {
                 val hint = (c % 3) match {
                   case 0 => "/*+ graft(priority=5) */ "  // urgent pool
                   case 1 => "/*+ graft(priority=-1) */ " // bulk pool
-                  case _ => // connection pool, deadline-carrying (EDF + telemetry)
+                  case _ => // default pool, fronted in its window by its
+                    // deadline (EDF), and counted by DeadlineTelemetry
                     s"/*+ graft(deadlineMs=${System.currentTimeMillis() + deadlineBudgetMs}) */ "
                 }
                 val t0 = System.nanoTime()
@@ -483,29 +502,82 @@ class QueryGatewaySpec extends SparkSpec {
     } finally { sock.close(); gw.close() }
   }
 
-  test("a connection's FAIR pool is removed when the connection ends") {
+  test("a statement runs in its JobMeta class pool, in both gateway modes") {
+    import graft.sharing.{BatchWindow, WorkSharingExecutor}
     val sc = spark.sparkContext
-    def clientPools = sc.getAllPools.map(_.name).filter(_.startsWith("graft-client-"))
-    // an earlier gateway's handlers release their pools as its sockets close
-    val deadline = System.currentTimeMillis() + 10000
-    while (clientPools.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
-    val baseline = sc.getAllPools.size
-    val gw = new QueryGateway(spark, _ => ())
-    try {
-      for (i <- 1 to 5) { // a gateway numbers its connections from 1
-        val (sock, out, in) = connect(gw.boundPort)
+    val classPools = Set("graft-default", "graft-urgent", "graft-bulk")
+    // FAIR's root pool also holds Spark's own "default"
+    def strayPools = sc.getAllPools.map(_.name).toSet -- classPools - "default"
+    val hinted = Seq("" -> "graft-default", "/*+ graft(priority=5) */ " -> "graft-urgent",
+      "/*+ graft(priority=-1) */ " -> "graft-bulk")
+    val ex = new WorkSharingExecutor(spark)
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 1)
+    try withJobsByGroup { jobsOf =>
+      for ((mode, batching) <- Seq("unwindowed" -> None, "windowed" -> Some(win))) {
+        val gw = new QueryGateway(spark, _ => (), maxHintPriority = 5, batching = batching)
+        val first = nextConn
+        val conns = Seq.fill(4)(connect(gw.boundPort))
         try {
-          out.println("SELECT count(*) AS n FROM range(0, 100, 1, 2)")
-          assert(readResponse(in)._3 == "done 1")
-          assert(sc.getPoolForName(s"graft-client-$i").isDefined, clientPools)
-          out.println("quit")
-          sock.setSoTimeout(30000)
-          assert(in.readLine() == null) // the pool goes before the socket closes
-          assert(sc.getPoolForName(s"graft-client-$i").isEmpty, clientPools)
-        } finally sock.close()
+          // every connection sends the same three statements, in order
+          for ((_, out, in) <- conns; (hint, _) <- hinted) {
+            out.println(hint + "SELECT count(*) AS n FROM range(0, 100, 1, 2)")
+            assert(readResponse(in)._3 == "done 1", mode)
+          }
+          for (conn <- first until first + conns.size; ((_, pool), k) <- hinted.zipWithIndex) {
+            val pools = jobsOf.pools(s"gw-$conn-${k + 1}")
+            assert(pools.nonEmpty && pools.forall(_ == pool), (mode, conn, k, pools))
+          }
+          assert(strayPools.isEmpty, (mode, strayPools))
+        } finally { conns.foreach(_._1.close()); gw.close() }
       }
-      assert(sc.getAllPools.size == baseline, sc.getAllPools.map(_.name))
-    } finally gw.close()
+    } finally { win.close(); ex.shutdown() }
+    assert(strayPools.isEmpty, strayPools)
+  }
+
+  test("two gateways on one SparkContext give distinct job groups") {
+    withJobsByGroup { jobsOf =>
+      // the groups of each gateway's first connection's first statement
+      val firsts = (1 to 2).map { _ =>
+        val gw = new QueryGateway(spark, _ => ())
+        try {
+          val before = jobsOf.groups.toSet
+          val (sock, out, in) = connect(gw.boundPort)
+          try {
+            out.println("SELECT id FROM range(0, 10, 1, 2)")
+            assert(readResponse(in)._3 == "done 10")
+          } finally sock.close()
+          jobsOf.groups.filter(g => g.startsWith("gw-") && !before(g))
+        } finally gw.close()
+      }
+      assert(firsts.forall(_.size == 1) && firsts(0) != firsts(1), firsts)
+    }
+  }
+
+  test("a gateway's window runs the earlier deadline first") {
+    import graft.sharing.{BatchWindow, WorkSharingExecutor}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // one action thread: a window's statements start their jobs in its order
+    val ex = new WorkSharingExecutor(spark, maxConcurrency = 1)
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 2, maxWaitMs = 10000)
+    val gw = new QueryGateway(spark, _ => (), batching = Some(win))
+    try withJobsByGroup { jobsOf =>
+      val (early, late) = (s"gw-$nextConn-1", s"gw-${nextConn + 1}-1")
+      val (sa, oa, ia) = connect(gw.boundPort)
+      val (sb, ob, ib) = connect(gw.boundPort)
+      try {
+        oa.println("SELECT id FROM range(0, 10, 1, 2)")
+        val a = Future(readResponse(ia))
+        Thread.sleep(1000) // the unhinted statement reaches the window first
+        ob.println(s"/*+ graft(deadlineMs=${System.currentTimeMillis() + 60000}) */ " +
+          "SELECT id * 2 AS d FROM range(0, 20, 1, 2)")
+        assert(readResponse(ib)._3 == "done 20")
+        assert(Await.result(a, 1.minute)._3 == "done 10")
+      } finally { sa.close(); sb.close() }
+      val ours = jobsOf.groups.filter(Set(early, late))
+      assert(ours == Vector(late, early), jobsOf.groups)
+    } finally { gw.close(); win.close(); ex.shutdown() }
   }
 
   test("large results stream partition-by-partition, row cap truncates") {
@@ -655,16 +727,18 @@ class QueryGatewaySpec extends SparkSpec {
       // a reply that fits the row bound is collected by one job
       val whole = new QueryGateway(spark, _ => ())
       try {
+        val g = s"gw-$nextConn-1"
         assert(reply(whole) == (("ok", 200000, "done 200000")))
-        assert(jobsOf("gw-1-1") == Vector(8))
+        assert(jobsOf(g) == Vector(8))
       } finally whole.close()
       // capped, the collect is cancelled once any 101 rows arrived; the
       // first 100 rows go out from it when partition 0's had arrived, else
       // the reply streams partition 0 alone
       val capped = new QueryGateway(spark, _ => (), maxRows = 100)
       try {
+        val g = s"gw-$nextConn-1"
         assert(reply(capped) == (("ok", 100, "done 100 truncated")))
-        val jobs = jobsOf("gw-1-1")
+        val jobs = jobsOf(g)
         assert(jobs == Vector(8) || jobs == Vector(8, 1), jobs)
       } finally capped.close()
       // over the row bound: the collect attempt is cancelled, then the reply
@@ -672,8 +746,9 @@ class QueryGatewaySpec extends SparkSpec {
       // into partition 1
       val streamed = new QueryGateway(spark, _ => (), maxRows = 30000, maxBatchRows = 1000)
       try {
+        val g = s"gw-$nextConn-1"
         assert(reply(streamed) == (("ok", 30000, "done 30000 truncated")))
-        assert(jobsOf("gw-1-1") == Vector(8, 1, 1))
+        assert(jobsOf(g) == Vector(8, 1, 1))
       } finally streamed.close()
     }
   }
@@ -715,11 +790,12 @@ class QueryGatewaySpec extends SparkSpec {
     }
     withJobsByGroup { jobsOf =>
       def check(gw: QueryGateway): Unit = {
+        val conn = nextConn
         val (session, answered) = replies(gw)
         assert(answered.head._2.head.contains("+05:30"), answered.head._2.head)
         cases.zip(answered).zipWithIndex.foreach { case (((q, jobs), reply), i) =>
           assert(reply == expected(session, q), q)
-          val ran = jobsOf(s"gw-1-${i + 1}").size
+          val ran = jobsOf(s"gw-$conn-${i + 1}").size
           jobs.foreach(n => assert(ran == n, q))
         }
       }
@@ -734,9 +810,10 @@ class QueryGatewaySpec extends SparkSpec {
       // over the row bound, a sorted reply falls back to streaming
       val streamed = new QueryGateway(spark, init, maxBatchRows = 1000)
       try {
+        val conn = nextConn
         val (session, answered) = replies(streamed)
         sorted.zip(answered).foreach { case (q, reply) => assert(reply == expected(session, q), q) }
-        assert(jobsOf("gw-1-1").size > 1)
+        assert(jobsOf(s"gw-$conn-1").size > 1)
       } finally streamed.close()
     }
   }
@@ -832,12 +909,13 @@ class QueryGatewaySpec extends SparkSpec {
     val win = new BatchWindow[Seq[String]](ex, windowSize = 1)
     val gw = new QueryGateway(spark, _ => (), batching = Some(win))
     try withJobsByGroup { jobsOf =>
+      val conn = nextConn
       val (sock, out, in) = connect(gw.boundPort)
       try {
         out.println("SELECT id FROM range(0, 1000, 1, 4)")
         assert(readResponse(in)._3 == "done 1000")
       } finally sock.close()
-      assert(jobsOf("gw-1-1").nonEmpty)
+      assert(jobsOf(s"gw-$conn-1").nonEmpty)
     } finally { gw.close(); win.close(); ex.shutdown() }
   }
 

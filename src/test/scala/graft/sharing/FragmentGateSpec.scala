@@ -46,16 +46,16 @@ class FragmentGateSpec extends SparkSpec {
       // the verdict is reuse-aware: (n-1)*build > kappa*n*read + minSec at
       // this window's fan-out (n = 2 jobs)
       val pc = FragmentGate.decision(cheapKey).get
-      assert(!FragmentGate.share(pc, 2, FragmentGate.DefaultKappa, FragmentGate.DefaultMinSec),
+      assert(!FragmentGate.share(pc, 2),
         s"cheap probe should fail the gate at n=2: $pc")
       val pe = FragmentGate.decision(costlyKey).get
-      assert(FragmentGate.share(pe, 2, FragmentGate.DefaultKappa, FragmentGate.DefaultMinSec),
+      assert(FragmentGate.share(pe, 2),
         s"costly probe should pass the gate at n=2: $pe")
       // the same cheap measurement CAN flip at a large enough fan-out —
       // measurements memoize, verdicts are per window (unless the build is
       // so tiny that even 1000 consumers lose, which the floor allows)
-      assert(FragmentGate.share(FragmentGate.Probe(1.0, 0.01), 2, FragmentGate.DefaultKappa, FragmentGate.DefaultMinSec))
-      assert(!FragmentGate.share(FragmentGate.Probe(1.0, 0.01), 1, FragmentGate.DefaultKappa, FragmentGate.DefaultMinSec),
+      assert(FragmentGate.share(FragmentGate.Probe(1.0, 0.01), 2))
+      assert(!FragmentGate.share(FragmentGate.Probe(1.0, 0.01), 1),
         "a single-consumer window must never cache (nothing reuses it)")
       // second window: the rejected fragment is not re-probed (same verdict
       // object — putIfAbsent memoization) and still not cached
@@ -72,24 +72,5 @@ class FragmentGateSpec extends SparkSpec {
       assert(FragmentGate.decision(
         FragmentGate.keyFor("gate_cheap", other(spark))).isEmpty)
     } finally { ex.shutdown(); FragmentGate.clear() }
-  }
-
-  test("config at zero disables the gate (mechanism-test escape hatch)") {
-    FragmentGate.clear()
-    spark.conf.set("spark.graft.share.fragmentReadPenalty", "0")
-    spark.conf.set("spark.graft.share.fragmentMinBuildSec", "-1")
-    val ex = new WorkSharingExecutor(spark)
-    try {
-      ex.runBatch(
-        Seq(QueryJob[Long]("a", s => cheap(s).agg(sum("v").as("s")),
-          df => df.head().getLong(0))),
-        Seq("gate_cheap_open" -> cheap))
-      assert(ex.cachedFingerprints.contains("frag:gate_cheap_open"))
-    } finally {
-      ex.shutdown()
-      spark.conf.unset("spark.graft.share.fragmentReadPenalty")
-      spark.conf.unset("spark.graft.share.fragmentMinBuildSec")
-      FragmentGate.clear()
-    }
   }
 }

@@ -7,19 +7,20 @@ import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class WorkSharingSpec extends SparkSpec {
 
-  // These are MECHANISM tests (substitution, metamorphic identity) over
-  // test-scale fragments that the measured economics gate would rightly
-  // reject as too cheap — disable the gate here; FragmentGateSpec specs
-  // the gate's policy itself.
-  override def beforeAll(): Unit = {
-    spark.conf.set("spark.graft.share.fragmentReadPenalty", "0")
-    spark.conf.set("spark.graft.share.fragmentMinBuildSec", "-1")
-  }
-  override def afterAll(): Unit = {
-    spark.conf.unset("spark.graft.share.fragmentReadPenalty")
-    spark.conf.unset("spark.graft.share.fragmentMinBuildSec")
+  // The fragment specs are MECHANISM tests (substitution, metamorphic
+  // identity) over test-scale fragments that the measured economics gate
+  // would rightly reject as too cheap: each opens the gate by recording a
+  // passing probe under every declared fragment's key before its window;
+  // FragmentGateSpec specs the gate's policy itself.
+  private def openGate(frags: Seq[(String, SparkSession => DataFrame)])
+      : Seq[(String, SparkSession => DataFrame)] = {
+    frags.foreach { case (name, mk) =>
+      FragmentGate.record(FragmentGate.keyFor(name, mk(spark)),
+        FragmentGate.Probe(buildSec = 1e6, readSec = 0.0))
+    }
+    frags
   }
 
   private def jobs: Seq[QueryJob[Seq[String]]] = Seq(
@@ -106,7 +107,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val ex = new WorkSharingExecutor(spark)
     try {
       val batched = ex.runBatch(family,
-        sharedFragments = Seq("lsh_pairs" -> (s => Dedup.d04MinhashLshPairs(T(s, sfDir)))))
+        sharedFragments = openGate(Seq("lsh_pairs" -> (s => Dedup.d04MinhashLshPairs(T(s, sfDir))))))
       // metamorphic: shared-fragment batching never changes any answer
       batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:lsh_pairs"), ex.cachedFingerprints)
@@ -131,12 +132,12 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val isolated = family.map(j => j.name -> j.action(j.build(spark))).toMap
     val ex = new WorkSharingExecutor(spark)
     try {
-      val batched = ex.runBatch(family, sharedFragments = Seq[(String,
+      val batched = ex.runBatch(family, sharedFragments = openGate(Seq[(String,
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
         "id_bands"        -> (s => Similarity.idBands(T(s, sfDir))),
         "s01_topk"        -> (s => Similarity.s01CosineTopK(T(s, sfDir))),
         "s02_ann"         -> (s => Similarity.s02HyperplaneLsh(T(s, sfDir))),
-        "sym_scored"      -> (s => Similarity.symScored(T(s, sfDir)))))
+        "sym_scored"      -> (s => Similarity.symScored(T(s, sfDir))))))
       // metamorphic: shared-fragment batching never changes any answer
       batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:sym_scored"), ex.cachedFingerprints)
@@ -161,9 +162,9 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val isolated = family.map(j => j.name -> j.action(j.build(spark))).toMap
     val ex = new WorkSharingExecutor(spark)
     try {
-      val batched = ex.runBatch(family, sharedFragments = Seq[(String,
+      val batched = ex.runBatch(family, sharedFragments = openGate(Seq[(String,
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
-        "lsh_pairs" -> (s => Dedup.d04MinhashLshPairs(T(s, sfDir)))))
+        "lsh_pairs" -> (s => Dedup.d04MinhashLshPairs(T(s, sfDir))))))
       // metamorphic: shared-fragment batching never changes any answer
       batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:lsh_pairs"), ex.cachedFingerprints)
@@ -181,10 +182,10 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val isolated = family.map(j => j.name -> j.action(j.build(spark))).toMap
     val ex = new WorkSharingExecutor(spark)
     try {
-      val batched = ex.runBatch(family, sharedFragments = Seq[(String,
+      val batched = ex.runBatch(family, sharedFragments = openGate(Seq[(String,
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
         "ivf_assigned" -> (s => Sim.ivfAssignedRaw(T(s, sfDir))),
-        "pq_codes"     -> (s => Sim.pqCodesPacked(T(s, sfDir)))))
+        "pq_codes"     -> (s => Sim.pqCodesPacked(T(s, sfDir))))))
       batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:ivf_assigned"), ex.cachedFingerprints)
       // a sibling built AFTER the batch reads the assignment fragment cache
@@ -204,10 +205,10 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val isolated = family.map(j => j.name -> j.action(j.build(spark))).toMap
     val ex = new WorkSharingExecutor(spark)
     try {
-      val batched = ex.runBatch(family, sharedFragments = Seq[(String,
+      val batched = ex.runBatch(family, sharedFragments = openGate(Seq[(String,
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
         "doc_tokens"      -> (s => TextAnalysis.docTokens(T(s, sfDir))),
-        "doc_word_counts" -> (s => TextAnalysis.docWordCounts(T(s, sfDir)))))
+        "doc_word_counts" -> (s => TextAnalysis.docWordCounts(T(s, sfDir))))))
       // metamorphic: shared-fragment batching never changes any answer
       batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:doc_tokens"), ex.cachedFingerprints)
@@ -229,9 +230,9 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val isolated = family.map(j => j.name -> j.action(j.build(spark))).toMap
     val ex = new WorkSharingExecutor(spark)
     try {
-      val batched = ex.runBatch(family, sharedFragments = Seq[(String,
+      val batched = ex.runBatch(family, sharedFragments = openGate(Seq[(String,
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
-        "media_features" -> (s => Multimodal.mediaFeatures(T(s, sfDir)))))
+        "media_features" -> (s => Multimodal.mediaFeatures(T(s, sfDir))))))
       // metamorphic: shared-fragment batching never changes any answer
       batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:media_features"), ex.cachedFingerprints)
@@ -253,10 +254,10 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val isolated = family.map(j => j.name -> j.action(j.build(spark))).toMap
     val ex = new WorkSharingExecutor(spark)
     try {
-      val batched = ex.runBatch(family, sharedFragments = Seq[(String,
+      val batched = ex.runBatch(family, sharedFragments = openGate(Seq[(String,
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
         "quality_flags" -> (s => Pipeline.qualityFlags(T(s, sfDir))),
-        "five_grams"    -> (s => Pipeline.fiveGrams(T(s, sfDir).documents))))
+        "five_grams"    -> (s => Pipeline.fiveGrams(T(s, sfDir).documents)))))
       // metamorphic: shared-fragment batching never changes any answer
       batched.foreach { case (name, rows) => assert(rows.get == isolated(name), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:quality_flags"), ex.cachedFingerprints)
@@ -285,7 +286,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         ended.incrementAndGet()
     }
     val ex = new WorkSharingExecutor(spark)
-    def window(): Unit = ex.runBatch(jobs, frags).foreach { case (name, rows) =>
+    def window(): Unit = ex.runBatch(jobs, openGate(frags)).foreach { case (name, rows) =>
       assert(rows.get == isolated(name), s"job $name")
     }
     try {
@@ -446,11 +447,11 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("pre-scheduler: EDF meets a deadline mix that FIFO misses") {
     // VERDICT r7 next-7's spec half: 4 single-slot jobs of ~0.8 s whose
-    // ARRIVAL order carries the loosest deadline first. FIFO serves in
-    // arrival order and blows the tight tail deadlines; EDF reorders the
-    // same window and meets them. The miss COUNTS come from the same
-    // wall-clock accounting DeadlineTelemetry applies at the gateway.
-    def run(strategy: PreStrategy): Int = {
+    // ARRIVAL order carries the loosest deadline first. Run in arrival
+    // order, the window blows the tight tail deadlines; in JobMeta's order
+    // (the one a BatchWindow runs) it meets them. The miss COUNTS come from
+    // the same wall-clock accounting DeadlineTelemetry applies at the gateway.
+    def run(order: Seq[QueryJob[Long]] => Seq[QueryJob[Long]]): Int = {
       val ex = new WorkSharingExecutor(spark, maxConcurrency = 1)
       try {
         val start = System.currentTimeMillis()
@@ -460,22 +461,21 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
             df => { df.count(); Thread.sleep(800); System.currentTimeMillis() },
             JobMeta(deadlineMs = Some(start + (4 - i) * 1200L)))
         }
-        val done = ex.runBatch(strategy.order(dJobs))
+        val done = ex.runBatch(order(dJobs))
         dJobs.count(j => done(j.name).get > j.meta.deadlineMs.get)
       } finally ex.shutdown()
     }
-    val fifoLate = run(FifoStrategy)
-    val edfLate = run(DeadlinePriorityStrategy)
+    val fifoLate = run(arrival => arrival)
+    val edfLate = run(_.sortBy(_.meta))
     assert(fifoLate >= 1, s"constructed mix should make FIFO miss (late=$fifoLate)")
     assert(edfLate < fifoLate, s"EDF ($edfLate) must beat FIFO ($fifoLate)")
   }
 
   test("pre-scheduler: an urgent job overtakes a window of bulk jobs") {
     // one executor slot makes admission order the start order; the urgent
-    // job arrives LAST but the DeadlinePriority strategy fronts it
+    // job arrives LAST but the window's JobMeta order fronts it
     val ex = new WorkSharingExecutor(spark, maxConcurrency = 1)
-    val win = new BatchWindow[Long](ex, windowSize = 5, maxWaitMs = 2000,
-      strategy = DeadlinePriorityStrategy)
+    val win = new BatchWindow[Long](ex, windowSize = 5, maxWaitMs = 2000)
     val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def job(name: String, meta: JobMeta) = QueryJob[Long](name,
       s => { s.range(0, 500000).toDF("id") },
@@ -495,9 +495,14 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       JobMeta(deadlineMs = Some(50L)))
     val c = QueryJob[Long]("c", _.range(1).toDF, _.count(), JobMeta(priority = 9))
     val d = QueryJob[Long]("d", _.range(1).toDF, _.count())
-    assert(FifoStrategy.order(Seq(a, b, c, d)).map(_.name) == Seq("a", "b", "c", "d"))
-    assert(DeadlinePriorityStrategy.order(Seq(a, b, c, d)).map(_.name) ==
-      Seq("b", "c", "d", "a"))
+    val e = QueryJob[Long]("e", _.range(1).toDF, _.count())
+    // earliest deadline first, then descending priority; arrival order
+    // within a tie, so unhinted jobs keep the order they came in
+    assert(Seq(a, b, c, d, e).sortBy(_.meta).map(_.name) == Seq("b", "c", "d", "e", "a"))
+    assert(Seq(e, d).sortBy(_.meta).map(_.name) == Seq("e", "d"))
+    // the extreme priority orders last, not first
+    assert(Seq(QueryJob[Long]("m", _.range(1).toDF, _.count(), JobMeta(priority = Int.MinValue)), d)
+      .sortBy(_.meta).map(_.name) == Seq("d", "m"))
     assert(a.meta.pool == "graft-bulk" && c.meta.pool == "graft-urgent"
       && d.meta.pool == "graft-default")
     // the generated allocation file parses and carries the three pools
