@@ -2,11 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One-call entry point for library users: a SparkSession with graft's
-  * functions injected and the scale-posture defaults set, plus corpus
-  * registration. A user of the reference system switches by building their
-  * session here and pointing clients at [[graft.server.QueryGateway]] or
-  * [[graft.server.ThriftFrontend]].
+/** The one session factory: the gateway, the harness mains and the tests
+  * all run on [[Engine.session]]. It installs
+  * [[graft.functions.GraftExtensions]] (graft's functions, planner
+  * strategies and optimizer rules) and the scale-posture defaults; corpus
+  * registration is [[openCorpus]]. A user of the reference system switches
+  * by building their session here and pointing clients at
+  * [[graft.server.QueryGateway]] or [[graft.server.ThriftFrontend]].
+  *
+  * The supported entry is a session built here, or one the user builds
+  * with `spark.sql.extensions=graft.functions.GraftExtensions`. The
+  * operators do not install graft into the session they are handed: on a
+  * session without the extensions a graft function fails with Spark's own
+  * unresolved-routine error, and `AsOf.join`/`IntervalJoin.join` find no
+  * physical plan.
   *
   * Defaults are written for a real cluster (drop `master`): AQE re-plans at
   * runtime (skew-join splitting, partition coalescing), shuffle partitions
@@ -45,10 +54,11 @@ object Engine {
       // default 2 : bulk 1, each FAIR inside) — Spark reads weights only
       // from a file
       .config("spark.scheduler.allocation.file", sharing.FairPools.allocationFile())
-    val spark = master.fold(b)(b.master).getOrCreate()
-    functions.Registry.ensure(spark) // covers the getOrCreate-reuse path too
-    operators.UserFns.ensure(spark)
-    spark
+      // older corpora store events.ts as INT64 TIMESTAMP(NANOS), which the
+      // reader rejects unless read as long (Tables.load converts it); set
+      // here, not per load, so every child session has the same conf
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    master.fold(b)(b.master).getOrCreate()
   }
 
   /** Register the test corpus (or any directory of parquet tables). */

@@ -84,8 +84,9 @@ object Tables {
       // the Spark reader rejects unless read as long (then ÷1000 with
       // integer division — nanos exceed 2^53, no double round-trip); newer
       // corpora store TIMESTAMP(MICROS) NTZ, which only needs the NTZ→LTZ
-      // cast (identity wall-clock under the UTC session TZ).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // cast (identity wall-clock under the UTC session TZ). Reading NANOS
+      // as long needs spark.sql.legacy.parquet.nanosAsLong, which
+      // Engine.session sets for every session.
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

@@ -4,13 +4,14 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point: makes every graft expression available
-  * in any session built with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` (or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`), so plain SQL
-  * clients of the gateway/Thrift front-ends get `simhash48`, `minhash_sig`,
-  * `cosine_sim`, ... with no Scala call required. [[Registry.ensure]] remains
-  * the per-session programmatic twin.
+/** The one way graft's functions, planner strategies and optimizer rules
+  * reach a session. [[graft.Engine.session]] installs it; a session built
+  * elsewhere gets it from
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. Every
+  * `newSession()` child inherits it, so plain SQL clients of the
+  * gateway/Thrift front-ends get `simhash48`, `minhash_sig`, `cosine_sim`,
+  * ... with no Scala call required. A session without it gets Spark's own
+  * unresolved-routine error for those names.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -96,7 +96,6 @@ object Dedup {
     * (min doc_id) a dedup pass would retain. */
   def d01ExactDedup(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     t.documents
       .select($"doc_id", md5(substring($"text", 1, 64)).as("key_hash"))
       .groupBy($"key_hash")
@@ -116,7 +115,6 @@ object Dedup {
   def d02NgramJaccardPairs(t: T): DataFrame = {
     import t.spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Registry.ensure(t.spark)
     // The blocking key (lang) has 5 values -> salt it 8 ways so the pair work
     // spreads over 40 shuffle keys instead of 5 hot tasks (skew handling the
     // same plan needs on a real cluster).
@@ -190,7 +188,6 @@ object Dedup {
   /** Array-valued MinHash signature API for library users (LSH banding, d04). */
   def minhashSignatures(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // fanned out like minhashSigTable: one scan task otherwise (r15)
     Par.fanOut(t.documents)
       .withColumn("h", expr(shingleHashes))
@@ -207,7 +204,6 @@ object Dedup {
     * sharing >=1 band bucket (shuffle on band key — scales to any corpus);
     * then exact-Jaccard verify >= 0.8 on candidates only. */
   def d04MinhashLshPairs(t: T): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     lshPairs(t.documents)
   }
 
@@ -313,7 +309,6 @@ object Dedup {
   /** Per-doc SimHash values (frequency-weighted multiset — no distinct). */
   def d05Simhash(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // fanned out like minhashSigTable: one scan task otherwise (r15)
     Par.fanOut(t.documents)
       .withColumn("h", expr("shingle_hashes(text, 4, false)"))
@@ -338,7 +333,6 @@ object Dedup {
     * n/4096 of a lang at uniform spread; widen chunks for bigger corpora).
     * Exact hamming verification then touches candidates only. */
   def d06SimhashPairs(t: T): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     simhashPairsOn(simhashFrame(t.documents))
   }
 
@@ -357,7 +351,6 @@ object Dedup {
     * both; what remains is the hamming-1..3 residual structure between
     * genuinely different documents. */
   private[graft] def d06OverSimhashReps(t: T): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     simhashPairsOn(simhashFrame(t.documents)
       .groupBy(col("lang"), col("simhash")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), col("lang"), col("simhash")))
@@ -512,7 +505,6 @@ object Dedup {
     * decision. */
   def d07DedupClusters(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     connectedComponents(d04MinhashLshPairs(t).select($"doc_a", $"doc_b"))
       .orderBy($"doc_id")
   }
@@ -547,7 +539,6 @@ object Dedup {
     val spark = documents.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Registry.ensure(spark)
     val tBp = thresholdBp
     val d = 10000 + tBp // denominator of the 2t/(1+t) and t/(1+t) bounds
     val hs = Par.fanOut(documents)
@@ -713,7 +704,6 @@ object Dedup {
   private[graft] def naiveNearDupPairs(docs: DataFrame, thresholdBp: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.Registry.ensure(spark)
     val hs = docs.select($"doc_id", expr(shingleHashes).as("h"))
     hs.as("a").join(hs.as("b"),
         col("a.doc_id") < col("b.doc_id") &&
@@ -736,7 +726,6 @@ object Dedup {
   private[graft] def naiveClusterEdges(docs: DataFrame, thresholdBp: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.Registry.ensure(spark)
     val hs = docs.select($"doc_id", expr(shingleHashes).as("h"))
     hs.as("a").join(hs.as("b"),
         col("a.doc_id") =!= col("b.doc_id") &&
@@ -825,7 +814,6 @@ object Dedup {
     * has none.) */
   def substringDupCoverageHashed(t: T, stride: Int = 1): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // stride 1 keeps every gram: plain explode, no position column, no
     // never-false `pos % 1 = 0` filter riding every gram row (r15 s2)
     val grams =
@@ -918,7 +906,6 @@ object Dedup {
     * (b, r) at scale: candidates ~ cost, precision ~ wasted verifies. */
   def d14LshTuning(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val sigs = minhashSigTable(t.documents)
       .localCheckpoint() // both configs and the verify reuse it
     val hint = BroadcastGate.shingleHint(t.documents)
@@ -994,7 +981,6 @@ object Dedup {
 
   def d11ContainmentPairs(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val hs = t.documents.select($"doc_id", array_sort(expr(shingleHashes)).as("h"))
     val cand = d04MinhashLshPairs(t).select($"doc_a", $"doc_b")
     val hint = BroadcastGate.shingleHint(t.documents)
@@ -1042,7 +1028,6 @@ object Dedup {
     * per-cluster window sort. */
   def d12ClusterKeeper(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val clusters = connectedComponents(d04MinhashLshPairs(t).select($"doc_a", $"doc_b"))
     clusters.join(t.documents.select($"doc_id", $"n_chars"), "doc_id")
       .groupBy($"cluster_id")
@@ -1080,7 +1065,6 @@ object Dedup {
     * list arithmetic, so thresholding is cross-engine exact. */
   def d13SemanticClusters(t: T, thresholdMilli: Int = 400): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // per-vector self-dots precomputed once: dot/sqrt(na*nb) is bit-identical
     // to cosine_sim (its three accumulators are independent) at a third of
     // the per-pair flops across the n^2/2 candidate space
@@ -1109,7 +1093,6 @@ object Dedup {
     * the two together. */
   def d13SemanticClustersBucketed(t: T, thresholdMilli: Int = 400): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // candidate pairs carry IDS ONLY through the band join + distinct — the
     // 512-byte embeddings rejoin AFTER dedup, so the wide rows never enter
     // the (quadratic-in-bucket-size) pair shuffle. At 20x corpus scale this
@@ -1295,7 +1278,6 @@ object Dedup {
   private[operators] def topkSimJoinOn(
       spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
     import spark.implicits._
-    graft.functions.Registry.ensure(spark)
     val sigs = minhashSigTable(docs)
     val cand = bandCandidatesOf(docs)
     val hint = BroadcastGate.shingleHint(docs)
@@ -1366,7 +1348,6 @@ object Dedup {
     * not assumed. Costs one extra 3x fan-out over the candidate stream. */
   def d20ThresholdSweep(t: T, thresholdsBp: Seq[Int] = Seq(7000, 8000, 9000)): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val sigs = minhashSigTable(t.documents)
     val cand = bandCandidatesOf(t.documents)
     val hint = BroadcastGate.shingleHint(t.documents)
@@ -1415,7 +1396,6 @@ object Dedup {
     * the best verified Jaccard. */
   def d21IncrementalDedup(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val bands = d21Bands(t)
     d21Probe(t, bands.filter($"m" === 0), bands.filter($"m" =!= 0))
   }
@@ -1447,7 +1427,6 @@ object Dedup {
     * collapse trade d31/d32 carry). */
   private[graft] def d21AgainstKeeperIndex(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val bands = d21Bands(t)
     val ixBands = bands.filter($"m" =!= 0)
     // ownership keepers of the index subset, derived from the SAME
@@ -1564,7 +1543,6 @@ object Dedup {
   private[operators] def bbitMinhashOn(
       spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    graft.functions.Registry.ensure(spark)
     val sigs = minhashSigTable(docs)
     val cand = bandCandidatesOf(docs)
     // b-bit codes packed per DOC (32 pmods once per doc), not per PAIR:
@@ -1603,7 +1581,6 @@ object Dedup {
   private[operators] def bbitScoreOnPairs(
       spark: SparkSession, docs: DataFrame, pairs: DataFrame): DataFrame = {
     import spark.implicits._
-    graft.functions.Registry.ensure(spark)
     // one materialized sig pass shared by both broadcast sides (r14, as in
     // [[bbitMinhashOn]])
     val packed = minhashSigTable(docs).select($"doc_id", packBbCol.as("bb"))
@@ -1680,7 +1657,6 @@ object Dedup {
     * the content-defined locality property directly. */
   def cdcChunkHashes(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    graft.functions.Registry.ensure(docs.sparkSession)
     // chunking is PER-DOC: one codegen'd cdc_chunks call per row (the t25
     // census lesson) — the prior formulation shuffled+sorted the full
     // token stream twice (per-doc boundary window, then the collect_list
@@ -1797,7 +1773,6 @@ object Dedup {
     * the fixed-point check that one collapse round suffices here). */
   def d25CollapseRepair(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val pairsBefore = d04MinhashLshPairs(t).select($"doc_a", $"doc_b")
       .localCheckpoint() // feeds clustering AND the before-count
     val keepers = keeperIds(t, pairsBefore)
@@ -1897,7 +1872,6 @@ object Dedup {
     * on the COLLAPSED corpus — no stage anywhere enumerates raw pairs. */
   def d26CollapsePairs(t: T, thresholdBp: Int = 4200): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val edges = bucketStarEdges(t.documents)
     prefixJaccardPairs(
       t.documents.join(keeperIdsOf(t.documents, edges), "doc_id"), thresholdBp)
@@ -1952,7 +1926,6 @@ object Dedup {
     * replicates it stage for stage and the gate is an exact hash. */
   def d27SemanticCollapse(t: T, thresholdMilli: Int = 400): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val sigs = Similarity.hyperplaneSigs(t)
       .withColumn("nrm", expr("dot_d(embedding, embedding)"))
     val groups = sigs.groupBy($"sig")
@@ -2042,7 +2015,6 @@ object Dedup {
     * a per-doc coverage estimate over the SAMPLED gram positions. */
   def d28StridedGramCensus(t: T, k: Int = 40, stride: Int = 4): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val grams = t.documents
       .select($"doc_id", explode(expr(s"gram_hashes_mod(text, $k, $stride)")).as("gh"))
     // sort-free census, the same shape d09 moved to in r10: a gram's
@@ -2181,7 +2153,6 @@ object Dedup {
     * rewrite ([[graft.plans.PairJoinAudit]]) builds the door branch on the
     * USER's own relation leaf, which arrives as a DataFrame, not a [[T]]. */
   def d29FrontCollapsePairsDocs(docs: DataFrame, thresholdBp: Int = 4200): DataFrame = {
-    graft.functions.Registry.ensure(docs.sparkSession)
     prefixJaccardPairs(docs.join(ownershipKeepers(docs), "doc_id"), thresholdBp)
   }
 

@@ -27,7 +27,6 @@ object Graph {
     * Undirected edges mean every node has outdeg >= 1 and in-edges, so
     * there are no dangling-mass corrections to model. */
   def g01PageRank(t: T): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     pagerankPpm(Dedup.d04MinhashLshPairs(t).select(col("doc_a"), col("doc_b")))
   }
 
@@ -128,7 +127,6 @@ object Graph {
     * graph is the residual between-cluster structure, which is what
     * centrality over a dedup graph means once duplicates are folded. */
   def g14CollapsedRank(t: T): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     pagerankPpm(Dedup.d26CollapsePairs(t).select(col("doc_a"), col("doc_b")))
   }
 
@@ -200,7 +198,6 @@ object Graph {
     * triangle participation counts. */
   def g02Triangles(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val pairs = Dedup.d04MinhashLshPairs(t)
       .select($"doc_a", $"doc_b").localCheckpoint() // 3 self-joins reuse blocks
     val tri = pairs.as("e1")
@@ -235,7 +232,6 @@ object Graph {
     * extra degree aggregation; all shuffles key on node id. */
   def g03ClusteringCoefficient(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val pairs = Dedup.d04MinhashLshPairs(t)
       .select($"doc_a", $"doc_b").localCheckpoint() // reused by deg + 3 joins
     val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
@@ -282,7 +278,6 @@ object Graph {
     * (a power-law tail here means the CC/PageRank plans need skew handling). */
   def g04DegreeHistogram(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val pairs = Dedup.d04MinhashLshPairs(t).select($"doc_a", $"doc_b")
     pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
       .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
@@ -305,7 +300,6 @@ object Graph {
     * star-contraction CC; two narrow aggregations after it. */
   def g05ClusterSizes(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     Dedup.connectedComponents(Dedup.d04MinhashLshPairs(t).select($"doc_a", $"doc_b"))
       .groupBy($"cluster_id").agg(count(lit(1)).as("csize"))
       .groupBy($"csize").agg(count(lit(1)).as("n_clusters"))
@@ -334,7 +328,6 @@ object Graph {
     * id. Output: surviving nodes with their within-core degree. */
   def g06KCore(t: T, k: Int = 2, rounds: Int = 3): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val pairs = Dedup.d04MinhashLshPairs(t).select($"doc_a", $"doc_b")
     val edges0 = pairs.select($"doc_a".as("s"), $"doc_b".as("d"))
       .union(pairs.select($"doc_b".as("s"), $"doc_a".as("d")))
@@ -398,7 +391,6 @@ object Graph {
     * able joins back to the edge list, all shuffled on node id. */
   def g07Assortativity(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val pairs = Dedup.d04MinhashLshPairs(t).select($"doc_a", $"doc_b")
     val edges = pairs.select($"doc_a".as("s"), $"doc_b".as("d"))
       .union(pairs.select($"doc_b".as("s"), $"doc_a".as("d")))
@@ -438,7 +430,6 @@ object Graph {
     * no better than random. One pass over the attributed edge list. */
   def g08Modularity(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val lab = t.documents.select($"doc_id", $"lang")
     // cache, not localCheckpoint: m/deg/intra reuse the blocks but lineage
     // stays intact (an evicted or executor-lost block recomputes instead of
@@ -521,7 +512,6 @@ object Graph {
     * the two uses of edges reuse blocks with lineage intact. */
   def g10TwoHopReach(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val pairs = Dedup.d04MinhashLshPairs(t).select($"doc_a", $"doc_b")
     val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
       .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
@@ -556,7 +546,6 @@ object Graph {
     * label edge endpoints + two tiny aggregates. */
   def g11ClusterDensity(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val pairs = Dedup.d04MinhashLshPairs(t).select($"doc_a", $"doc_b")
     val cl = Dedup.d07DedupClusters(t)
     val la = cl.select($"doc_id".as("doc_a"), $"cluster_id")
@@ -645,7 +634,6 @@ object Graph {
 
   def g12LabelPropagation(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val labels = lpaCommunities(Dedup.d04MinhashLshPairs(t).select($"doc_a", $"doc_b"))
     val sizes = labels.groupBy($"community").agg(count(lit(1)).as("community_size"))
     labels.join(sizes, "community")
@@ -690,7 +678,6 @@ object Graph {
     * edge list both parents already computed. */
   def g13BridgeEdges(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // ONE pair computation feeds the edge audit and both labelings (the
     // LSH subplan is the expensive part; localCheckpoint shares its blocks)
     val pairs = Dedup.d04MinhashLshPairs(t).select($"doc_a", $"doc_b")

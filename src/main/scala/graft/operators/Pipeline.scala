@@ -28,7 +28,6 @@ object Pipeline {
     * pipeline actually needs. */
   def p01TrainTestSplit(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     t.documents
       .withColumn("bucket",
         pmod(expr("weighted_fingerprint(shingle_hashes(text, 4, false))"), lit(100)))
@@ -238,7 +237,6 @@ object Pipeline {
     * to a 50% default via coalesce. */
   def p07StratifiedSample(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val rates = Seq(("en", 30L), ("es", 60L), ("fr", 60L), ("de", 60L))
       .toDF("lang", "rate")
     t.documents
@@ -303,7 +301,6 @@ object Pipeline {
     * shuffles. Rates are integer basis points; target = 50% of tokens. */
   def p09TokenMixture(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val toks = t.documents.select($"lang", $"doc_id", $"text",
       size(split($"text", " ")).cast("long").as("n_tok"))
     // the grand-total window runs over the per-LANG rollup — bounded by
@@ -409,7 +406,6 @@ object Pipeline {
     * p11's report body, and the funnel's (p29) stage-1 predicate. */
   private[graft] def qualityFlags(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // ONE codegen'd quality_census call per doc (the t25 device on the
     // quality plane): the old explode → groupBy(doc, tok) census exchanged
     // corpus-tokens rows and re-joined them — the funnel's last remaining
@@ -491,7 +487,6 @@ object Pipeline {
     * DuckDB twin reproduces the exact bit positions. */
   def p12BloomContamination(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     def posExpr(j: Int) = expr(s"((${bloomA(j)} * gh + ${bloomB(j)}) % $bloomP) % 4096")
     val grams = fiveGrams(t.documents)
       .withColumn("gh", expr("poly_hash(gram)"))
@@ -713,7 +708,6 @@ object Pipeline {
   def p16QualityKeeper(t: T): DataFrame = {
     import t.spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Registry.ensure(t.spark)
     val clusters = Dedup.connectedComponents(
       Dedup.d04MinhashLshPairs(t).select($"doc_a", $"doc_b"))
     val quality = TextAnalysis.t03QualityScore(t).select($"doc_id", $"quality_bp")
@@ -855,7 +849,6 @@ object Pipeline {
     * p04's (one shuffle on gram), the split is map-side hashing. */
   def p19CleanEvalSplit(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val corpus = t.documents.filter($"source" =!= "src0")
     val grams = fiveGrams(corpus).select($"doc_id", $"gram")
     val holdout = fiveGrams(t.documents.filter($"source" === "src0"))
@@ -1192,7 +1185,6 @@ object Pipeline {
     * float is safe cross-engine. */
   def p27SemanticContam(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val bands = Similarity.idBands(t)
     val evalB = bands.filter($"vec_id" % 10 === 0)
       .select($"tbl".as("qt"), $"bucket".as("qb"), $"vec_id".as("eval_id"))
@@ -1325,7 +1317,6 @@ object Pipeline {
     * each frame carries the keep bits computed so far. */
   private[graft] def p29StageFrames(t: T): Seq[(String, DataFrame)] = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // 0) training corpus: src0 is the frozen eval holdout, never trained on
     val train = t.documents.filter($"source" =!= "src0")
       .select($"doc_id", $"text", $"n_chars",
@@ -1765,7 +1756,6 @@ object Pipeline {
 
   def p32DsirResample(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // scoring pass: ONE codegen'd bigram_bucket_score call per doc (t25's
     // census device on the DSIR plane) — no gram explode, no per-doc
     // fold shuffle, no empty-doc totality join; the trained llr rides the

@@ -76,7 +76,6 @@ object Routing {
     * collapse key, reused as the estimator). */
   private[graft] def vecReplicaMassBp(embeddings: DataFrame): Long =
     memo(embeddings, "vec") {
-      graft.functions.Registry.ensure(embeddings.sparkSession)
       val r = embeddings.agg(count(lit(1)),
         countDistinct(expr("hyperplane_sig(embedding, 32)"))).head()
       val n = r.getLong(0)
@@ -128,7 +127,6 @@ object Routing {
     * a user's naive all-pairs plan built on the user's own relation leaf. */
   private[graft] def d30DoorBranch(docs: DataFrame,
       thresholdBp: Int = defaultThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(docs.sparkSession)
     if (docReplicaMassBp(docs) < thresholdBp)
       Dedup.prefixJaccardPairs(docs, 8000)
     else Dedup.d29FrontCollapsePairsDocs(docs, 8000)
@@ -153,7 +151,6 @@ object Routing {
     * it lands as a subtree of the user's plan. */
   private[graft] def s24DoorBranch(emb: DataFrame,
       thresholdBp: Int = vecThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(emb.sparkSession)
     if (vecReplicaMassBp(emb) < thresholdBp) Similarity.s02PairsOn(emb)
     else Similarity.s02PairsOn(Similarity.sigRepresentatives(emb))
   }
@@ -168,7 +165,6 @@ object Routing {
     * collapse-before-graph (the raw edge set IS the m²-growing pair list
     * on a replica corpus — SCALESMOKE_100x's g01 verdict). */
   def g15RoutedRank(t: T, thresholdBp: Int = defaultThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (docReplicaMassBp(t.documents) < thresholdBp) Graph.g01PageRank(t)
     else Graph.g14CollapsedRank(t)
   }
@@ -183,7 +179,6 @@ object Routing {
     * vectors) vs d27's signature collapse (pairing over representatives
     * only) — the s02/d13 shape's gear per the 100× probe. */
   def s23RoutedClusters(t: T, thresholdBp: Int = vecThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (vecReplicaMassBp(t.embeddings) < thresholdBp)
       Dedup.d13SemanticClustersBucketed(t)
     else Dedup.d27SemanticCollapse(t)
@@ -205,7 +200,6 @@ object Routing {
     * collapsed audit is d22's measurement restricted to the pairs a
     * collapse-first pipeline actually verifies. */
   def d31RoutedBbit(t: T, thresholdBp: Int = defaultThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (docReplicaMassBp(t.documents) < thresholdBp) Dedup.d22BbitMinhash(t)
     else {
       // ONE keeper election, materialized (ids only — tiny), shared by the
@@ -237,7 +231,6 @@ object Routing {
     * documented d31/d32 collapse trade, proven in spec. */
   def nearDupKeepers(corpus: DataFrame, docs: DataFrame,
       thresholdBp: Int = defaultThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(docs.sparkSession)
     if (docReplicaMassBp(corpus) < thresholdBp)
       Dedup.keeperIdsOf(docs, Dedup.lshPairs(docs))
     else {
@@ -298,7 +291,6 @@ object Routing {
     * the corpus to one vector per 32-bit sig first, then band and verify
     * exactly as before. */
   def s24RoutedAnn(t: T, thresholdBp: Int = vecThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (vecReplicaMassBp(t.embeddings) < thresholdBp)
       Similarity.s02HyperplaneLsh(t)
     else Similarity.s02OverRepresentatives(t)
@@ -324,7 +316,6 @@ object Routing {
     * hard-dedup trade); both branches label clusters by their minimum
     * member id, so the schemas and label conventions agree. */
   def d32RoutedCc(t: T, thresholdBp: Int = defaultThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (docReplicaMassBp(t.documents) < thresholdBp) Dedup.d07DedupClusters(t)
     else Dedup.connectedComponents(Dedup.bucketStarEdges(t.documents))
       .orderBy(col("doc_id"))
@@ -360,7 +351,6 @@ object Routing {
     * oracle's collapsed branch states stage 2 as naive all-pairs over the
     * kept set, so the hash also proves the prefix filter's recall 1.0. */
   def d33RoutedTopk(t: T, thresholdBp: Int = defaultThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (docReplicaMassBp(t.documents) < thresholdBp) Dedup.d18TopkSimJoin(t)
     else Dedup.d29FrontCollapsePairs(t, 4200)
       .orderBy(col("jaccard_bp").desc, col("doc_a"), col("doc_b"))
@@ -389,7 +379,6 @@ object Routing {
     * ivfTrainCte chain), and the disease lives in the search join, not the
     * linear memoized training pass. */
   def s26RoutedIvf(t: T, thresholdBp: Int = vecThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (vecReplicaMassBp(t.embeddings) < thresholdBp) Similarity.s04IvfAnn(t)
     else Similarity.s04OverRepresentatives(t)
   }
@@ -409,7 +398,6 @@ object Routing {
     * representatives: only reps are encoded, probed and reranked, so every
     * stage after training drops the replica factor from both sides. */
   def s27RoutedIvfPq(t: T, thresholdBp: Int = vecThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (vecReplicaMassBp(t.embeddings) < thresholdBp) Similarity.s21IvfPqAnn(t)
     else Similarity.s21OverRepresentatives(t)
   }
@@ -430,7 +418,6 @@ object Routing {
     * fold to their min-id keeper, leaving the hamming-1..3 residual
     * structure between genuinely different documents. */
   def d34RoutedSimhash(t: T, thresholdBp: Int = defaultThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (docReplicaMassBp(t.documents) < thresholdBp) Dedup.d06SimhashPairs(t)
     else Dedup.d06OverSimhashReps(t)
   }
@@ -451,7 +438,6 @@ object Routing {
     * names the keeper and the match count counts keeper matches — the
     * documented collapse trade d31/d32 carry. */
   def d35RoutedIncremental(t: T, thresholdBp: Int = defaultThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (docReplicaMassBp(t.documents) < thresholdBp) Dedup.d21IncrementalDedup(t)
     else Dedup.d21AgainstKeeperIndex(t)
   }
@@ -471,7 +457,6 @@ object Routing {
     * before any pairing, so the mined pair names each side's keeper, the
     * d31/d32 collapse trade. */
   def s29RoutedBitext(t: T, thresholdBp: Int = vecThresholdBp): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (vecReplicaMassBp(t.embeddings) < thresholdBp) Similarity.s28BitextMargin(t)
     else Similarity.s28OverRepresentatives(t)
   }
@@ -494,7 +479,6 @@ object Routing {
     * Reference analog: the cost-model dispatch discipline in
     * sparksql-server/src/main/scala/optimizer/OptimizationExecutor.scala:36-76. */
   def d36RoutedSubstring(t: T, thresholdChars: Long = charMassThreshold): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     if (docCharMass(t.documents) < thresholdChars) Dedup.d09SubstringDupCoverage(t)
     else Dedup.d28StridedGramCensus(t)
   }

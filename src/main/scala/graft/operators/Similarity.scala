@@ -61,7 +61,6 @@ object Similarity {
     * the full corpus; rank on rounded cosine with id tie-break. */
   def s01CosineTopK(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val q = t.embeddings.filter($"vec_id" % 25 === 0)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"),
         sqNorm("embedding").as("na"))
@@ -105,7 +104,6 @@ object Similarity {
     * [[hyperplaneSigs]] keeps the canonical full-corpus subtree the
     * sharing plane fingerprints. */
   private[graft] def hyperplaneSigsOf(emb: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(emb.sparkSession)
     emb.select(col("vec_id"), col("embedding"),
       expr("hyperplane_sig(embedding, 32)").as("sig"))
   }
@@ -199,7 +197,6 @@ object Similarity {
     * ([[graft.plans.PairJoinAudit.tryRewrite]]) splices this as a SUBTREE
     * of a user plan, where an embedded Sort would be dead weight. */
   private[graft] def s02PairsOn(emb: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(emb.sparkSession)
     // ids-only band join + distinct; embeddings rejoin after dedup so the
     // candidate shuffle stays narrow (see d13 — 20x-scale smoke finding)
     val cand = probeCandIdsOf(emb)
@@ -224,7 +221,6 @@ object Similarity {
     * s24 collapse over signature representatives (the door's oracle-pinned
     * trade). */
   private[graft] def naiveAnnPairs(emb: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(emb.sparkSession)
     val bands = hyperplaneSigsOf(emb)
       .select(col("vec_id"), col("embedding"), expr(bandExpr).as("bk"))
       .select(col("vec_id"), col("embedding"),
@@ -286,7 +282,6 @@ object Similarity {
     * all-pairs baseline the LSH path approximates). */
   def s03EmbeddingNeardup(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // prenormalized cosine (the s04/symScored kernel): norms once per ROW
     // before the n²/2 pair stage, one dot per pair — and the streamed side
     // fans out so the all-pairs scan is not one scan task on a
@@ -390,7 +385,6 @@ object Similarity {
 
   private[graft] def trainIvfUncached(t: T, k: Int, iters: Int): Array[Array[Long]] = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val ebp = quantized(t)
     var cents = ebp.filter($"vec_id" < k).orderBy($"vec_id")
       .select($"qe").as[Array[Float]].collect().map(_.map(_.toLong))
@@ -437,7 +431,6 @@ object Similarity {
     * materialize it once (deterministic training ⇒ identical centroid
     * literals ⇒ canonically equal subtrees across jobs). */
   private[graft] def ivfAssignedRaw(t: T): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     assignCluster(quantizeDf(t.embeddings), trainIvfCentroids(t))
   }
 
@@ -453,7 +446,6 @@ object Similarity {
     * gear encodes only the representatives through it. */
   private def pqCodesPackedOf(t: T, emb: DataFrame,
       books: Array[Array[Array[Long]]]): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     pqAssign(pqSlicesOf(quantizeDf(emb)), books)
       .groupBy(col("vec_id"))
       .agg(expr("transform(array_sort(collect_list(struct(blk, code))), s -> s.code)")
@@ -477,7 +469,6 @@ object Similarity {
   private[graft] def ivfAnnOn(t: T, emb: DataFrame, qmod: Int,
       trained: Option[Array[Array[Long]]] = None): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val cents = trained.getOrElse(trainIvfCentroids(t))
     val assigned = assignCluster(quantizeDf(emb), cents)
       .select($"vec_id", $"embedding", $"cluster", sqNorm("embedding").as("nb"))
@@ -511,7 +502,6 @@ object Similarity {
     * production, a batch window in the parity spec). This is the online
     * half of the index lifecycle: s04 builds/searches offline, w15 serves. */
   def annServeStream(queryVecs: DataFrame, t: T): DataFrame = {
-    graft.functions.Registry.ensure(t.spark)
     val cents = trainIvfCentroids(t)
     val corpus = assignCluster(quantized(t), cents)
       .select(col("vec_id"), col("embedding"), col("cluster"), sqNorm("embedding").as("nb"))
@@ -613,7 +603,6 @@ object Similarity {
     * rounded cosine with id tie-break (deterministic end to end). */
   def s05KnnClassify(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val q = t.embeddings.filter($"vec_id" % 25 === 0)
       .select($"vec_id".as("query_id"), $"label".cast("long").as("true_label"),
         $"embedding".as("q_emb"))
@@ -719,7 +708,6 @@ object Similarity {
     * side reuses s04 verbatim, so this also pins s04's end-to-end output. */
   def s07IvfRecall(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val q = t.embeddings.filter($"vec_id" % 25 === 0)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
     val c = t.embeddings.select($"vec_id".as("neighbor_id"), $"embedding".as("c_emb"))
@@ -787,7 +775,6 @@ object Similarity {
     * model broadcast), so assignment is pure map-side codegen. */
   def s08IvfStats(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val cents = trainIvfCentroids(t)
     val dks = cents.zipWithIndex.map { case (c, k) =>
       struct(
@@ -909,7 +896,6 @@ object Similarity {
   def s11QuantRecall(t: T): DataFrame = {
     import t.spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Registry.ensure(t.spark)
     // codes as float arrays (0..255 — exact in float32) so the per-pair
     // score is ONE codegen'd dot_d call instead of an interpreted
     // zip_with+aggregate lambda pair; the double dot over small exact
@@ -998,7 +984,6 @@ object Similarity {
     * narrow (two longs + one double). */
   private[graft] def symScored(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val hint = BroadcastGate.vectorHint(t.embeddings)
     // prenormalized cosine (the s04 playbook, applied at the r8 sf1-lane
     // audit): norms are computed once per ROW before the candidate join,
@@ -1053,7 +1038,6 @@ object Similarity {
     * to [-10, 9], exact in both engines on the 4-decimal-rounded cosine). */
   def s13CosineBands(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // the family-shared scored candidate graph restricted to one
     // orientation (src < dst is exactly the unordered pair set)
     symScored(t).filter($"src" < $"dst")
@@ -1100,7 +1084,6 @@ object Similarity {
     * the audit (run on a sample); the LSH arm is the product. */
   def s14RadiusSearch(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val q = t.embeddings.filter($"vec_id" % 25 === 0)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
     val c = t.embeddings.select($"vec_id".as("neighbor_id"), $"embedding".as("c_emb"))
@@ -1208,7 +1191,6 @@ object Similarity {
 
   private def trainPqUncached(t: T): Array[Array[Array[Long]]] = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val slices = pqSlices(t)
     var books: Array[Array[Array[Long]]] = {
       val arr = Array.ofDim[Array[Long]](PqM, PqK)
@@ -1235,7 +1217,6 @@ object Similarity {
 
   def s15PqAdcAudit(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val books = trainPqCodebook(t)
     // packed 8-code row per vector (one frame, not 8 rows/vector) and a
     // 128-entry ADC lookup table per query (blk*16+k -> d), so the
@@ -1361,7 +1342,6 @@ object Similarity {
     * engine. */
   def s16TwoStageRerank(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // float codes (integers in [-127,127] — exact in float32) so the coarse
     // score is ONE codegen'd dot_d instead of an interpreted
     // zip_with+aggregate pair; double dot over exact small integers equals
@@ -1452,7 +1432,6 @@ object Similarity {
     * the window shuffles carry ids, labels and the rounded score only. */
   def s17FilteredAnn(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val q = t.embeddings.filter($"vec_id" % 25 === 0)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"), $"label".as("q_label"),
         sqNorm("embedding").as("na"))
@@ -1526,7 +1505,6 @@ object Similarity {
     * shuffled on query_id only. */
   def s18MmrRerank(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val q = t.embeddings.filter($"vec_id" % 50 === 0)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"),
         sqNorm("embedding").as("na"))
@@ -1679,7 +1657,6 @@ object Similarity {
     * a different slice width. */
   def s19NprobeSweep(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val cents = trainIvfCentroids(t)
     val assigned = assignCluster(quantized(t), cents)
       .select($"vec_id", $"embedding", $"cluster", sqNorm("embedding").as("nb"))
@@ -1779,7 +1756,6 @@ object Similarity {
     * row. */
   def s20BinaryRecall(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     def word(off: Int) =
       s"""aggregate(sequence(0, 31), CAST(0 AS BIGINT), (a, i) ->
             a + CASE WHEN element_at(embedding, i + ${off + 1}) > 0
@@ -1879,7 +1855,6 @@ object Similarity {
   private[operators] def s21On(t: T, emb: DataFrame,
       trained: Option[Array[Array[Long]]] = None): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val cents = trained.getOrElse(trainIvfCentroids(t))
     val books = trainPqCodebook(t)
     val qn = quantizeDf(emb)
@@ -2016,7 +1991,6 @@ object Similarity {
     * set, not a production path. */
   def s22MrrEval(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val q = t.embeddings.filter($"vec_id" % 25 === 0)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"),
         sqNorm("embedding").as("na"))
@@ -2089,7 +2063,6 @@ object Similarity {
     * centroid frame, no pairs. */
   def s25IndexDrift(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val cents = trainIvfCentroids(t)
     val centDf = t.spark.createDataFrame(
       cents.zipWithIndex.map { case (c, k) => (k, c.map(_.toFloat)) }.toSeq)
@@ -2198,7 +2171,6 @@ object Similarity {
 
   private def s28On(t: T, emb: DataFrame): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val sb = idBandsOf(emb.filter($"label" % 2 === 0))
       .select($"vec_id".as("src_id"), $"tbl", $"bucket")
     val tb = idBandsOf(emb.filter($"label" % 2 === 1))

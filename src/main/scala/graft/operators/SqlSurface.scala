@@ -705,7 +705,6 @@ object SqlSurface {
     * a lateral generate_series as the ordinality. */
   def q107TopkAgg(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     t.orders
       .select($"o_orderstatus",
         expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)").as("cents"))

@@ -174,7 +174,6 @@ object TextAnalysis {
     * int64 arithmetic (max partial sum ~6e10 ≪ 2^63), identical in DuckDB. */
   def t04Fingerprint(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // native expressions: the aggregate()-lambda equivalent evaluates
     // interpreted (~19 s at sf0.1 vs ~0.3 s for the codegen'd loop)
     t.documents
@@ -203,7 +202,6 @@ object TextAnalysis {
                             (a, b) -> concat(a, ' ', b)))""").as("bigram"))
     // top-5 per lang as a partial top-k aggregate over the census, not a
     // window exchange+sort of the full |langs × bigram-vocab| census
-    graft.functions.Registry.ensure(t.spark)
     bigrams.groupBy($"lang", $"bigram").agg(count(lit(1)).as("n"))
       .groupBy($"lang")
       .agg(expr("topk_scored_str(CAST(n AS DOUBLE), bigram, 5)").as("top"))
@@ -347,7 +345,6 @@ object TextAnalysis {
     import t.spark.implicits._
     // ONE global aggregate over the census computes the top-50 AND the
     // corpus total together — no all-partitions window, no second pass
-    graft.functions.Registry.ensure(t.spark)
     docTokens(t).select($"tok")
       .groupBy($"tok").agg(count(lit(1)).as("n"))
       .agg(expr("topk_scored_str(CAST(n AS DOUBLE), tok, 50)").as("top"),
@@ -380,7 +377,6 @@ object TextAnalysis {
     * (lang, bigram) then lang. */
   def t09BigramEntropy(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     // the census key is the codegen'd 2-gram hash (31*c1 + c2), not the
     // 2-char string: int64 rows shuffle ~3x narrower and skip per-position
     // substring allocation. h is INJECTIVE on this corpus's charset
@@ -493,7 +489,6 @@ object TextAnalysis {
     val n = t.documents.agg(count(lit(1)).as("n_docs"))
     // top-3 per doc as a partial top-k aggregate (scores < 2^53, exact in
     // the double slot), not a window over the full scored census
-    graft.functions.Registry.ensure(t.spark)
     tf.join(broadcast(df), "word").crossJoin(broadcast(n))
       .withColumn("score", expr("tf * (10000 - df * 10000 DIV n_docs)"))
       .groupBy($"doc_id")
@@ -598,7 +593,6 @@ object TextAnalysis {
     * partitioning (the owner table is exactly an inverted index). */
   def t15Novelty(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val grams = t.documents
       .select($"doc_id", explode(expr("shingle_hashes(text, 4, true)")).as("gram"))
     val firstSeen = grams.groupBy($"gram").agg(min($"doc_id").as("first_doc"))
@@ -844,7 +838,6 @@ object TextAnalysis {
     * 20 sources -> 190 pairs out. */
   def t21SourceSimilarity(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     val ss = t.documents
       .select($"source", explode(expr("shingle_hashes(text, 4, true)")).as("h"))
       .distinct()
@@ -1105,7 +1098,6 @@ object TextAnalysis {
     * (TextExprs.scala header) applied to the word-gram census. */
   def t25GopherRepetition(t: T): DataFrame = {
     import t.spark.implicits._
-    graft.functions.Registry.ensure(t.spark)
     t.documents
       .select($"doc_id", length($"text").cast("long").as("dlen"),
         expr("gopher_masses(text)").as("m"))

@@ -33,17 +33,12 @@ object UserFns {
     def outputEncoder: Encoder[Long] = Encoders.scalaLong
   }
 
-  /** Idempotent registration of the user-function surface. */
-  def ensure(spark: SparkSession): Unit = {
-    spark.udf.register("price_band", (p: Double) =>
-      if (p < 1000) "small" else if (p < 10000) "medium"
-      else if (p < 50000) "large" else "jumbo")
-    spark.udf.register("sum_squares", udaf(sumSquares))
-  }
-
   /** Scalar UDF + typed UDAF through the full SQL path. */
   def u01UdfUdaf(t: T): DataFrame = {
-    ensure(t.spark)
+    t.spark.udf.register("price_band", (p: Double) =>
+      if (p < 1000) "small" else if (p < 10000) "medium"
+      else if (p < 50000) "large" else "jumbo")
+    t.spark.udf.register("sum_squares", udaf(sumSquares))
     graft.Tables.register(t.spark, t.dir)
     t.spark.sql(
       """SELECT price_band(o_totalprice) AS band,

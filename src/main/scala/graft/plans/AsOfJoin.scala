@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
@@ -140,14 +140,6 @@ case class AsOfJoinExec(
 /** Dataset-level entry point (the `merge_asof` of this library). */
 object AsOf {
 
-  /** Idempotently make the planner aware of [[AsOfJoinPlan]] in sessions not
-    * built with GraftExtensions. */
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
-
   /** `join(orders, prices, keys, "o_date", "p_date")`: each left row gains
     * the columns of the latest right row with `rightTime <= leftTime` for
     * its keys (nulls if none). Right-side columns should be pre-renamed
@@ -162,7 +154,6 @@ object AsOf {
            leftOn: Seq[String], rightOn: Seq[String],
            leftTime: String, rightTime: String): DataFrame = {
     val spark = leftDf.sparkSession
-    ensure(spark)
     val lp = leftDf.queryExecution.analyzed
     val rp = rightDf.queryExecution.analyzed
     def attr(out: Seq[Attribute], name: String): Attribute =

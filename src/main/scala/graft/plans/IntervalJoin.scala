@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
@@ -144,12 +144,6 @@ case class IntervalJoinExec(
 
 object IntervalJoin {
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(IntervalJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ IntervalJoinStrategy
-  }
-
   /** All pairs with equal keys and `rightTime` in
     * `[leftTime + lower, leftTime + upper]` (native time units). */
   def join(leftDf: DataFrame, rightDf: DataFrame,
@@ -157,7 +151,6 @@ object IntervalJoin {
            leftTime: String, rightTime: String,
            lower: Long, upper: Long): DataFrame = {
     val spark = leftDf.sparkSession
-    ensure(spark)
     val lp = leftDf.queryExecution.analyzed
     val rp = rightDf.queryExecution.analyzed
     def attr(out: Seq[Attribute], name: String): Attribute =

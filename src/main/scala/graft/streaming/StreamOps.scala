@@ -561,7 +561,6 @@ object StreamOps {
     * rollup [[w14NearDupFrontDoor]] states over the same rows. */
   def bandOwnership(docs: DataFrame): Dataset[OwnRow] = {
     import docs.sparkSession.implicits._
-    graft.functions.Registry.ensure(docs.sparkSession)
     val bands = graft.operators.Dedup
       .bandRows(graft.operators.Dedup.minhashSigTable(docs))
     bands.as[BandRow]
@@ -590,7 +589,6 @@ object StreamOps {
     * knob. Built on the ONE ownership census (d29's collapse keeps exactly
     * the novel set). */
   def nearDupVerdict(docs: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(docs.sparkSession)
     graft.operators.Dedup.ownershipCensus(docs)
       .groupBy(col("doc_id"))
       .agg(sum(when(col("owner") === col("doc_id"), 1L).otherwise(0L)).as("n_owned"),

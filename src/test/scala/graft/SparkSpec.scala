@@ -3,23 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all suites (new JVM per `sbt test` fork). */
+/** One shared local session for all suites (new JVM per `sbt test` fork):
+  * [[Engine.session]], the session the gateway serves through, so every
+  * spec runs with graft's extensions, FAIR class pools and one executor
+  * class loader. `spark.ui.enabled=false` comes from build.sbt's
+  * `javaOptions`. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      // as Engine.session serves: one executor class loader for every
-      // session, so generated code compiles once per JVM (EngineParitySpec)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.maxMetadataStringLength", "2000") // full PushedFilters in plan strings
-      .getOrCreate()
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    val s = Engine.session("graft-test", Some("local[4]"), 4)
+    s.conf.set("spark.sql.maxMetadataStringLength", "2000") // full PushedFilters in plan strings
     s.sparkContext.setLogLevel("WARN")
     s
   }

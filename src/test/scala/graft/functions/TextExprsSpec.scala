@@ -68,7 +68,8 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("SQL registration: expressions usable from expr() and spark.sql") {
-    Registry.ensure(spark)
+    // no registration call: the test session is Engine.session, which
+    // installs the functions through GraftExtensions
     import spark.implicits._
     val df = Seq(("abcdefgh", Array(1.0f, 0.0f)), ("abcdefgh", Array(0.5f, 0.5f)))
       .toDF("text", "vec")
@@ -81,29 +82,28 @@ class TextExprsSpec extends SparkSpec {
     assert(out.forall(_.getLong(2) == 10000))
     assert(out.forall(r => math.abs(r.getDouble(3) - 1.0) < 1e-12))
     assert(out(0).getLong(0) == out(1).getLong(0)) // same text -> same simhash
+    df.createOrReplaceTempView("text_exprs_reg")
+    val viaSql = spark.sql(
+      "SELECT jaccard_bp(shingle_hashes(text, 4, true), shingle_hashes(text, 4, true)) AS j FROM text_exprs_reg")
+      .collect()
+    assert(viaSql.length == 2)
+    assert(viaSql.forall(_.getLong(0) == 10000))
   }
 
   test("GraftExtensions injects functions into an extension-built session") {
-    import org.apache.spark.sql.SparkSession
-    val prior = spark // ensure the shared context exists
-    // getOrCreate returns any active session and silently ignores extensions
-    // — clear both handles so a genuinely extension-built session is created
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      assert(s2 ne prior)
-      val out = s2.sql("SELECT simhash48(shingle_hashes('the quick brown fox', 4, false)) AS h")
-        .collect()
-      assert(out.length == 1)
-      assert(out(0).getLong(0) != 0L)
-    } finally {
-      SparkSession.setDefaultSession(prior)
-      SparkSession.setActiveSession(prior)
-    }
+    // no registration call: the functions come from the extensions every
+    // Engine.session child inherits
+    val child = spark.newSession()
+    val viaSql = child.sql(
+      """SELECT simhash48(shingle_hashes('the quick brown fox', 4, false)) AS h,
+                size(minhash_sig(shingle_hashes('the quick brown fox', 4, true), 32)) AS np,
+                cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
+                           array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c""").collect()
+    assert(child ne spark)
+    assert(viaSql.length == 1)
+    assert(viaSql(0).getLong(0) != 0L)
+    assert(viaSql(0).getInt(1) == 32)
+    assert(viaSql(0).getDouble(2) == 1.0)
   }
 
   test("l2_sq: exact squared distance, index order") {
@@ -184,7 +184,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("bigram_bucket_score == the exploded element_at pipeline, codegen on and off") {
-    Registry.ensure(spark)
     import spark.implicits._
     // edge shapes: empty, one word, plain, double space (empty token),
     // leading/trailing space, repeated bigrams, non-ASCII chars
@@ -221,7 +220,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("quality_census == the exploded token census, codegen on and off") {
-    Registry.ensure(spark)
     import spark.implicits._
     val texts = Seq("", "one", "the quick the quick the", "a  b", " lead",
       "trail ", "and and and and of of the", "x", "the the")
@@ -249,7 +247,6 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("codegen path == interpreted path (whole-stage codegen on/off)") {
-    Registry.ensure(spark)
     import spark.implicits._
     val df = Seq.tabulate(50)(i => s"doc $i the quick brown fox jumps over row $i").toDF("text")
     def run() = df.select(

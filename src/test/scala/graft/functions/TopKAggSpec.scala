@@ -10,7 +10,6 @@ class TopKAggSpec extends SparkSpec {
 
   test("topk_longs equals the window top-k on every group") {
     import spark.implicits._
-    Registry.ensure(spark)
     val viaAgg = t.orders
       .select($"o_orderstatus", expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)").as("cents"))
       .groupBy($"o_orderstatus")
@@ -27,7 +26,6 @@ class TopKAggSpec extends SparkSpec {
 
   test("topk_longs buffers merge across repartitionings (partial agg correctness)") {
     import spark.implicits._
-    Registry.ensure(spark)
     val base = t.orders.select($"o_orderkey",
       $"o_orderstatus", expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)").as("cents"))
     val one = base.coalesce(1).groupBy($"o_orderstatus")
@@ -39,7 +37,6 @@ class TopKAggSpec extends SparkSpec {
 
   test("groups smaller than k return all values, sorted descending") {
     import spark.implicits._
-    Registry.ensure(spark)
     val r = Seq((1L, 5L), (1L, 9L), (2L, 7L)).toDF("g", "v")
       .groupBy($"g").agg(expr("topk_longs(v, 4)").as("top"))
       .orderBy($"g").collect()
@@ -60,7 +57,6 @@ class TopKAggSpec extends SparkSpec {
 
   test("topk_scored(largest) equals row_number window (score DESC, id ASC) on every group") {
     import spark.implicits._
-    Registry.ensure(spark)
     val viaAgg = scoredPairs.groupBy($"g")
       .agg(expr("topk_scored(score, id, 4)").as("top"))
       .select($"g", posexplode($"top"))
@@ -75,7 +71,6 @@ class TopKAggSpec extends SparkSpec {
 
   test("topk_scored(smallest) equals row_number window (score ASC, id ASC)") {
     import spark.implicits._
-    Registry.ensure(spark)
     val viaAgg = scoredPairs.groupBy($"g")
       .agg(expr("topk_scored(score, id, 3, false)").as("top"))
       .select($"g", posexplode($"top"))
@@ -100,7 +95,6 @@ class TopKAggSpec extends SparkSpec {
 
   test("topk_scored_str(largest) equals row_number window (score DESC, id ASC)") {
     import spark.implicits._
-    Registry.ensure(spark)
     val viaAgg = scoredStrPairs.groupBy($"g")
       .agg(expr("topk_scored_str(score, id, 4)").as("top"))
       .select($"g", posexplode($"top"))
@@ -115,7 +109,6 @@ class TopKAggSpec extends SparkSpec {
 
   test("topk_scored_str buffers merge across repartitionings") {
     import spark.implicits._
-    Registry.ensure(spark)
     val one = scoredStrPairs.coalesce(1).groupBy($"g")
       .agg(expr("topk_scored_str(score, id, 5)").as("top"))
     val many = scoredStrPairs.repartition(13, length($"id") % 13).groupBy($"g")
@@ -125,7 +118,6 @@ class TopKAggSpec extends SparkSpec {
 
   test("topk_scored buffers merge across repartitionings (partial agg correctness)") {
     import spark.implicits._
-    Registry.ensure(spark)
     val one = scoredPairs.coalesce(1).groupBy($"g")
       .agg(expr("topk_scored(score, id, 5)").as("top"))
     val many = scoredPairs.repartition(13, $"id" % 13).groupBy($"g")

@@ -355,7 +355,6 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
     import org.apache.spark.sql.functions._
     val t = T(spark, sfDir)
-    graft.functions.Registry.ensure(spark)
     val sigGroups = t.embeddings
       .select(col("vec_id"), expr("hyperplane_sig(embedding, 32)").as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).groupBy(_._2)

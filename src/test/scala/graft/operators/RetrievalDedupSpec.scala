@@ -46,7 +46,6 @@ class RetrievalDedupSpec extends SparkSpec {
 
   test("s18: MMR's top-3 is no less diverse than the plain similarity top-3") {
     import spark.implicits._
-    graft.functions.Registry.ensure(spark)
     def intraSim(sel: Map[Long, Seq[Long]]): Double = {
       val pairs = sel.toSeq.flatMap { case (q, ids) =>
         for (a <- ids; b <- ids if a < b) yield (q, a, b)
@@ -135,7 +134,6 @@ class RetrievalDedupSpec extends SparkSpec {
     // This is WHY d29's residual stage needs the prefix-filter index: a
     // band-candidate residual over the kept set is vacuously empty.
     val t = T(spark, sfDir)
-    graft.functions.Registry.ensure(spark)
     val census = Dedup.ownershipCensus(t.documents)
     val keepers = Dedup.ownershipKeepers(t.documents)
     assert(keepers.count() > 0)

@@ -5,15 +5,13 @@ import org.apache.spark.sql.functions._
 
 class BitmapDistinctRewriteSpec extends SparkSpec {
 
-  private def withRule[A](f: => A): A = {
-    val prior = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prior :+ BitmapDistinctRewrite(spark)
-    try f
-    finally {
-      spark.experimental.extraOptimizations = prior
-      spark.conf.unset("spark.graft.bitmapDistinct")
-    }
-  }
+  /** The rule is installed by GraftExtensions on every session; the conf
+    * opts a session in. */
+  private def withBitmapDistinct[A](f: => A): A =
+    try {
+      spark.conf.set("spark.graft.bitmapDistinct", "true")
+      f
+    } finally spark.conf.unset("spark.graft.bitmapDistinct")
 
   private def eventsDistinct = {
     val t = graft.T(spark, sfDir)
@@ -23,9 +21,8 @@ class BitmapDistinctRewriteSpec extends SparkSpec {
   }
 
   test("COUNT(DISTINCT int) rewrites to the bitmap shape — no Expand, same answer") {
-    val expected = snap(eventsDistinct) // stock plan, rule absent
-    withRule {
-      spark.conf.set("spark.graft.bitmapDistinct", "true")
+    val expected = snap(eventsDistinct) // stock plan: conf off
+    withBitmapDistinct {
       val df = eventsDistinct
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("bitmap_construct_agg"), optimized)
@@ -40,8 +37,7 @@ class BitmapDistinctRewriteSpec extends SparkSpec {
     val df = Seq(-3, -1, 0, 1, 2, 2, Int.MinValue, Int.MaxValue)
       .toDF("v").withColumn("g", lit(1))
     val stock = df.groupBy($"g").agg(count_distinct($"v").as("n")).collect()(0).getLong(1)
-    withRule {
-      spark.conf.set("spark.graft.bitmapDistinct", "true")
+    withBitmapDistinct {
       val got = df.groupBy($"g").agg(count_distinct($"v").as("n"))
       val optimized = got.queryExecution.optimizedPlan.toString
       assert(optimized.contains("bitmap_construct_agg"), optimized)
@@ -58,8 +54,7 @@ class BitmapDistinctRewriteSpec extends SparkSpec {
       Long.MinValue, Long.MinValue, Long.MaxValue)
     val df = vals.toDF("v").withColumn("g", lit(1))
     val stock = df.groupBy($"g").agg(count_distinct($"v").as("n")).collect()(0).getLong(1)
-    withRule {
-      spark.conf.set("spark.graft.bitmapDistinct", "true")
+    withBitmapDistinct {
       val got = df.groupBy($"g").agg(count_distinct($"v").as("n"))
       assert(got.queryExecution.optimizedPlan.toString.contains("bitmap_construct_agg"))
       assert(got.collect()(0).getLong(1) == stock)
@@ -72,8 +67,7 @@ class BitmapDistinctRewriteSpec extends SparkSpec {
     val rnd = new scala.util.Random(42)
     val extremes = Seq(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L,
       32767L, 32768L, Long.MaxValue - 1, Long.MaxValue)
-    withRule {
-      spark.conf.set("spark.graft.bitmapDistinct", "true")
+    withBitmapDistinct {
       for (_ <- 1 to 10) {
         val n = 1 + rnd.nextInt(200)
         val vals = Seq.fill(n)(
@@ -93,39 +87,25 @@ class BitmapDistinctRewriteSpec extends SparkSpec {
   }
 
   test("shipped injection path: rule fires in a GraftExtensions-built session") {
-    import org.apache.spark.sql.SparkSession
-    val prior = spark // keep the shared context alive
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.functions.GraftExtensions)
-        .getOrCreate()
-      s2.conf.set("spark.graft.bitmapDistinct", "true")
-      import s2.implicits._
-      val df = Seq(1L, 2L, 2L, 0L, -5L, -5L).toDF("v")
-        .withColumn("g", $"v" % 2)
-        .groupBy($"g").agg(
-          org.apache.spark.sql.functions.count_distinct($"v").as("n"))
-      // extendedOperatorOptimizationRules run inside the fixed-point batch —
-      // the rewritten two-level aggregate must survive the other rules there
-      assert(df.queryExecution.optimizedPlan.toString.contains("bitmap_construct_agg"),
-        df.queryExecution.optimizedPlan.toString)
-      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == Map(0L -> 2L, 1L -> 1L, -1L -> 1L), got) // {2,0}, {1}, {-5}
-    } finally {
-      SparkSession.setDefaultSession(prior)
-      SparkSession.setActiveSession(prior)
-    }
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.bitmapDistinct", "true")
+    import s2.implicits._
+    val df = Seq(1L, 2L, 2L, 0L, -5L, -5L).toDF("v")
+      .withColumn("g", $"v" % 2)
+      .groupBy($"g").agg(count_distinct($"v").as("n"))
+    // extendedOperatorOptimizationRules run inside the fixed-point batch —
+    // the rewritten two-level aggregate must survive the other rules there
+    assert(df.queryExecution.optimizedPlan.toString.contains("bitmap_construct_agg"),
+      df.queryExecution.optimizedPlan.toString)
+    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(0L -> 2L, 1L -> 1L, -1L -> 1L), got) // {2,0}, {1}, {-5}
   }
 
   test("conf off, multi-agg, non-integral, and filtered shapes are untouched") {
-    withRule {
-      // conf defaults to false -> passthrough even with the rule installed
-      val off = eventsDistinct.queryExecution.optimizedPlan.toString
-      assert(!off.contains("bitmap_construct_agg"), off)
-      spark.conf.set("spark.graft.bitmapDistinct", "true")
+    // conf defaults to false -> passthrough with the rule installed
+    val off = eventsDistinct.queryExecution.optimizedPlan.toString
+    assert(!off.contains("bitmap_construct_agg"), off)
+    withBitmapDistinct {
       val t = graft.T(spark, sfDir)
       // a second non-distinct aggregate alongside -> not the narrow shape
       val multi = t.events.groupBy(col("event_type"))

@@ -300,8 +300,7 @@ class QueryGatewaySpec extends SparkSpec {
       val nAdversarial = nClients // each client issues `adversarial` once/rep
       val warnsMain = med.warns
       // opt-in rewrite under load (VERDICT r11 next-6): a second,
-      // non-batched gateway on a REAL extensions session (the rewrite runs
-      // in the optimizer, so the session needs the production injection).
+      // non-batched gateway on a child of the test session.
       // Each client opts in over the wire with plain SET, issues the naive
       // all-pairs kernel, and must get the byte-identical isolated-naive
       // answer while the rewrite counter proves the door actually executed.
@@ -315,41 +314,30 @@ class QueryGatewaySpec extends SparkSpec {
           "JOIN (SELECT doc_id, shingle_hashes(text, 4, true) AS h FROM documents) b " +
           "ON a.doc_id < b.doc_id AND jaccard_bp(a.h, b.h) >= 8000")
       val (nRewriteClients, nRewrites) = {
-        org.apache.spark.sql.SparkSession.clearActiveSession()
-        org.apache.spark.sql.SparkSession.clearDefaultSession()
-        val s2 = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-          .config("spark.sql.shuffle.partitions", "4")
-          .withExtensions(new graft.functions.GraftExtensions)
-          .getOrCreate()
+        val s2 = spark.newSession()
+        Tables.register(s2, sfDir)
+        val expectedNaive = s2.sql(naiveKernel).toJSON.collect().toList.sorted
+        val gw2 = new QueryGateway(s2, s => Tables.register(s, sfDir))
         try {
-          Tables.register(s2, sfDir)
-          val expectedNaive = s2.sql(naiveKernel).toJSON.collect().toList.sorted
-          val gw2 = new QueryGateway(s2, s => Tables.register(s, sfDir))
-          try {
-            val r0 = graft.plans.PairJoinAudit.rewritesApplied
-            val nRw = 4
-            val rwClients = (0 until nRw).map { c =>
-              Future {
-                val (sock, out, in) = connect(gw2.boundPort)
-                try {
-                  out.println("SET spark.graft.audit.rewrite=true")
-                  readResponse(in)
-                  out.println(naiveKernel)
-                  val (head, rows, trailer) = readResponse(in)
-                  assert(head == "ok" && trailer.startsWith("done"), s"rw client $c: $head/$trailer")
-                  assert(rows.sorted == expectedNaive,
-                    s"rw client $c diverged from the naive isolated answer: $rows")
-                } finally sock.close()
-              }
+          val r0 = graft.plans.PairJoinAudit.rewritesApplied
+          val nRw = 4
+          val rwClients = (0 until nRw).map { c =>
+            Future {
+              val (sock, out, in) = connect(gw2.boundPort)
+              try {
+                out.println("SET spark.graft.audit.rewrite=true")
+                readResponse(in)
+                out.println(naiveKernel)
+                val (head, rows, trailer) = readResponse(in)
+                assert(head == "ok" && trailer.startsWith("done"), s"rw client $c: $head/$trailer")
+                assert(rows.sorted == expectedNaive,
+                  s"rw client $c diverged from the naive isolated answer: $rows")
+              } finally sock.close()
             }
-            rwClients.foreach(Await.result(_, 5.minutes))
-            (nRw, graft.plans.PairJoinAudit.rewritesApplied - r0)
-          } finally gw2.close()
-        } finally {
-          s2.conf.unset(graft.plans.PairJoinAudit.RewriteFlag)
-          org.apache.spark.sql.SparkSession.setDefaultSession(spark)
-          org.apache.spark.sql.SparkSession.setActiveSession(spark)
-        }
+          }
+          rwClients.foreach(Await.result(_, 5.minutes))
+          (nRw, graft.plans.PairJoinAudit.rewritesApplied - r0)
+        } finally gw2.close()
       }
       assert(nRewrites == nRewriteClients,
         s"rewrites applied $nRewrites != opted-in statements $nRewriteClients")

@@ -143,7 +143,6 @@ class SynthSourceSpec extends SparkSpec {
 
   test("the synthetic corpus drives real operators end-to-end") {
     // same shape as documents: the engine's text ops run on it unchanged
-    graft.functions.Registry.ensure(spark)
     val agg = synth(20000, parts = 8)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"),
